@@ -21,11 +21,14 @@ backend for Delta/Iceberg when available; the verb surface is the same.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator as op
 import os
 import shutil
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -210,27 +213,35 @@ class ManagedCatalog:
         date/source-partitioned masters: a ticket's creation date never
         changes). A key that migrates partitions would duplicate across the
         old and new partition — the same contract BigQuery partition-scoped
-        MERGE imposes."""
-        vals = [tuple(r) for r in incoming.select(*partition_by).distinct().collect()]
-        if not vals:
-            return
-        import functools
-        import operator as op
+        MERGE imposes.
 
-        from pyspark.sql import functions as F
-
-        cond = functools.reduce(
-            op.or_,
-            [
-                functools.reduce(
-                    op.and_, [F.col(c) == F.lit(v) for c, v in zip(partition_by, t)]
-                )
-                for t in vals
-            ],
-        )
-        current = self.read(name).filter(cond)
-        merged = R.incremental_merge(current, incoming, key, update_cols, order_cols)
-        self.overwrite_partitions(name, merged, partition_by)
+        ``incoming`` is read three times: by the partition-value collect and
+        by both sides of the merge. It is pinned for the call, so its
+        lineage (read → transform → enrich → dedup upstream) runs once; the
+        pinned blocks are released before the call returns. A frame the
+        caller already cached is used as it is and left cached."""
+        pin = incoming.storageLevel == StorageLevel.NONE
+        if pin:
+            incoming = incoming.cache()
+        try:
+            vals = [tuple(r) for r in incoming.select(*partition_by).distinct().collect()]
+            if not vals:
+                return
+            cond = functools.reduce(
+                op.or_,
+                [
+                    functools.reduce(
+                        op.and_, [F.col(c) == F.lit(v) for c, v in zip(partition_by, t)]
+                    )
+                    for t in vals
+                ],
+            )
+            current = self.read(name).filter(cond)
+            merged = R.incremental_merge(current, incoming, key, update_cols, order_cols)
+            self.overwrite_partitions(name, merged, partition_by)
+        finally:
+            if pin:
+                incoming.unpersist(blocking=True)
 
     def compact(
         self, name: str, target_file_bytes: int = 128 * 1024 * 1024

@@ -924,19 +924,23 @@ def verify_pairs_jaccard(
     # intersect it duplicates)
     inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
     union = F.size("__sa") + F.size("__sb") - F.size(F.array_intersect("__sa", "__sb"))
-    # Join widths PINNED (r14): the pair list and the set frame are both
+    # Pair-side width PINNED (r14): the pair list and the set frame are both
     # tiny in BYTES (8-byte ids; arrays of longs) but the per-pair
     # array_intersect is the whole verify cost, and AQE's byte-based
     # coalescing ran the probe side on ONE task (measured 1.9 s of the
-    # q_char_lsh_dedup iteration; 0.77 s pinned). Explicit
-    # repartition(width, key) on each join side replaces the join's own
-    # AQE-sized exchange (same-key pre-partitioning satisfies the join's
+    # q_char_lsh_dedup iteration; 0.77 s pinned). Only one side is pinned:
+    # the pairs frame, by repartition(width, "id_a") before the first
+    # join. That replaces the id_a join's own AQE-sized exchange on the
+    # pairs side (same-key pre-partitioning satisfies the join's
     # distribution requirement), so no exchange is added — only its width
-    # is pinned compute-proportionally. Join STRATEGY stays the planner's:
-    # locally it broadcasts the small side; at corpus scale the row-scaled
-    # estimates flip both joins to SMJ over these same pinned exchanges.
-    # A forced broadcast(pairs) variant measured slower AND caps at the
-    # 8 GB broadcast limit, so the hint is deliberately absent.
+    # is set compute-proportionally. Nothing pins the rest: both sets
+    # sides and the second (id_b) join keep the planner's AQE-sized
+    # exchanges, so the one-task collapse can still recur on the id_b
+    # join (not measured). Join STRATEGY stays the planner's and follows
+    # size: on a 200-doc input it broadcast the pairs side of the id_a
+    # join and the sets side of the id_b join. A forced broadcast(pairs)
+    # variant measured slower AND caps at the 8 GB broadcast limit, so the
+    # hint is deliberately absent.
     spark_dp = pairs.sparkSession.sparkContext.defaultParallelism
     from data_rivers_spark.session import plan_partitions
 

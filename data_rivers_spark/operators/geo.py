@@ -14,7 +14,15 @@ to dominate, so the join auto-switches to a GRID prefilter: zones explode
 into the coarse grid cells their bbox covers (cell edge = max bbox edge, so
 ≤ 4 cells/zone), points map to exactly one cell, and the join becomes a
 Broadcast *Hash* Join on (cell_x, cell_y) with bbox+interval+ray-cast as the
-residual — per-point work drops from O(zones) to O(zones sharing the cell)."""
+residual — per-point work drops from O(zones) to O(zones sharing the cell).
+
+Plan-time cost: the ray cast needs a spread input, so each public join
+calls ``session.fan_out``, whose partition-count probe is free only on a
+plan without an exchange. Under AQE a probe of a plan that holds one
+executes its shuffle and broadcast stages while the query is still being
+built. So the probe goes on the input points, never on a join's output:
+``revgeo_multi_zone`` probes once and chains its joins through the
+probe-free ``_revgeo_join``."""
 
 from __future__ import annotations
 
@@ -84,11 +92,35 @@ def revgeo_timebound_join(
     if the grid is chosen. Pass ``zone_count_hint`` (or a bool ``grid``) to
     skip even that: with a hint and ``grid=False``-sized dims, plan-time
     cost is zero jobs."""
-    out_col = out_col or zone_col
     # ray casting is the expensive per-row map; a single-split parquet scan
-    # would run it on one core — spread first (no-op once well-partitioned,
-    # so the 8-way multi_zone chain repartitions at most once)
-    points = fan_out(points)
+    # would run it on one core — spread first
+    return _revgeo_join(
+        fan_out(points), zones, x_col, y_col, point_date_col, zone_col=zone_col,
+        wkt_col=wkt_col, start_col=start_col, end_col=end_col, out_col=out_col,
+        grid=grid, grid_threshold=grid_threshold, zone_count_hint=zone_count_hint,
+        zone_stats=zone_stats,
+    )
+
+
+def _revgeo_join(
+    points: DataFrame,
+    zones: DataFrame,
+    x_col: str,
+    y_col: str,
+    point_date_col: str,
+    zone_col: str = "zone",
+    wkt_col: str = "geometry",
+    start_col: str = "start_date",
+    end_col: str = "end_date",
+    out_col: str | None = None,
+    grid: bool | str = "auto",
+    grid_threshold: int = 512,
+    zone_count_hint: int | None = None,
+    zone_stats=None,
+) -> DataFrame:
+    """revgeo_timebound_join without the fan_out probe, for callers that
+    have already spread ``points`` (see the module docstring)."""
+    out_col = out_col or zone_col
     z = _prepared_zones(zones, wkt_col).select(
         F.col(zone_col).alias("__zone_val"),
         F.col("__verts"),
@@ -181,8 +213,13 @@ def revgeo_multi_zone(
     collect jobs for an N-way enrichment, pure latency since each job is
     milliseconds of work. One tagged-union aggregation answers all N at
     once; the per-join stats job is skipped via ``zone_stats``. grid=False
-    needs no stats, so nothing is collected there."""
-    out = points
+    needs no stats, so nothing is collected there.
+
+    Probe once: one ``fan_out`` spreads the input and the N joins chain
+    through the probe-free ``_revgeo_join``. A probe of a join's output
+    would execute, at plan time, the round-robin exchange and the zone
+    broadcasts already in it."""
+    out = fan_out(points)
     stats_by_zone: dict[str, object] = {}
     if kwargs.get("grid", "auto") is not False and len(zone_tables) > 1:
         wkt_col = kwargs.get("wkt_col", "geometry")
@@ -205,7 +242,7 @@ def revgeo_multi_zone(
             .collect()
         }
     for out_col, zones in zone_tables.items():
-        out = revgeo_timebound_join(
+        out = _revgeo_join(
             out, zones, x_col, y_col, point_date_col, out_col=out_col,
             zone_stats=stats_by_zone.get(out_col), **kwargs
         )

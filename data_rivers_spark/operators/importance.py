@@ -284,9 +284,9 @@ def dsir_importance_weights(
     that a second scan dominates the checkpoint round-trip (cluster jobs
     reading remote storage, not local warm-cache parquet), or when the
     caller wants the eager pin for its own reuse."""
+    if (target is None) == (target_flag is None):
+        raise ValueError("pass exactly one of target / target_flag")
     if target_flag is not None:
-        if target is not None:
-            raise ValueError("pass exactly one of target / target_flag")
         # predicate-subset target (r14): the target LM counts derive from
         # the POOL's one feature frame — the flag rides the explode as a
         # per-doc boolean and ONE joint aggregate produces both count

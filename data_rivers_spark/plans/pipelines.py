@@ -98,14 +98,21 @@ def qalert_pipeline(
     incoming = R.dedup_latest(incoming, ["ticket_id"], ["last_action_unix"])
 
     # 4b) revgeo enrichment (geo_queries.py:4-108)
+    # the chain leaves latitude/longitude as rounded strings and the creation
+    # time as unix seconds; the join needs numbers and a timestamp, which
+    # live only as long as the join
     if zone_tables:
         incoming = revgeo_multi_zone(
-            incoming,
+            incoming.withColumn("__x", F.col("longitude").cast("double"))
+            .withColumn("__y", F.col("latitude").cast("double"))
+            .withColumn(
+                "create_date_ts", F.timestamp_seconds(F.col("create_date_unix").try_cast("long"))
+            ),
             zone_tables,
-            "anon_longitude",
-            "anon_latitude",
+            "__x",
+            "__y",
             "create_date_ts",
-        )
+        ).drop("__x", "__y", "create_date_ts")
 
     # 4c) parent/child integration (integrate_new_requests.py)
     parents = incoming.filter(~F.col("child_ticket"))

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import os
+from datetime import datetime
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -148,9 +149,24 @@ def test_qalert_pipeline_end_to_end(spark, tmp_path):
         "comments string, streetNum string, streetName string, crossStreetName string, "
         "cityName string, latitude double, longitude double",
     )
-    export = qalert_pipeline(cat, raw)
+    def zone(name, x0, y0):
+        return spark.createDataFrame(
+            [(name, f"POLYGON(({x0} {y0}, {x0 + 0.02} {y0}, {x0 + 0.02} {y0 + 0.02}, "
+                    f"{x0} {y0 + 0.02}, {x0} {y0}))", datetime(2020, 1, 1), None)],
+            "zone string, geometry string, start_date timestamp, end_date timestamp",
+        )
+
+    # one polygon each: around ticket 1's and ticket 2's rounded points
+    zones = {"neighborhood": zone("Bloomfield", -79.93, 40.44),
+             "ward": zone("Ward 17", -79.98, 40.42)}
+    export = qalert_pipeline(cat, raw, zone_tables=zones)
     rows = {r.ticket_id: r for r in export.collect()}
     assert set(rows) == {1, 3}
+    assert (rows[1].neighborhood, rows[1].ward) == ("Bloomfield", None)
+    assert (rows[3].neighborhood, rows[3].ward) == (None, None)  # no coordinates
+    current = {r.ticket_id: r for r in cat.read("all_tickets_current_status").collect()}
+    assert (current[2].neighborhood, current[2].ward) == (None, "Ward 17")
+    assert not {"__x", "__y", "create_date_ts"} & set(export.columns)
     assert rows[1].num_requests == 2  # one child rolled up
     assert rows[1].child_ids == "2"
     assert "[PHONE_NUMBER]" in cat.read("all_tickets_current_status").filter(
@@ -158,8 +174,10 @@ def test_qalert_pipeline_end_to_end(spark, tmp_path):
     ).collect()[0].anon_comments
     assert rows[3].parent_closed is True
     # idempotent re-run (merge path)
-    export2 = qalert_pipeline(cat, raw)
-    assert {r.ticket_id for r in export2.collect()} == {1, 3}
+    export2 = qalert_pipeline(cat, raw, zone_tables=zones)
+    assert {(r.ticket_id, r.neighborhood) for r in export2.collect()} == {
+        (1, "Bloomfield"), (3, None),
+    }
 
 
 def test_export_csv_json(spark, tmp_path):
@@ -517,6 +535,35 @@ def test_merge_upsert_partitioned_prunes_and_merges(spark, tmp_path):
         return {os.stat(os.path.join(d, f)).st_ino for f in os.listdir(d) if f.endswith(".parquet")}
 
     assert inodes(2, "d2") == inodes(1, "d2")
+
+
+def test_merge_upsert_partitioned_evaluates_incoming_once(spark, tmp_path):
+    """The partition-value collect and both sides of the merge read one
+    pinned copy of ``incoming``: its lineage runs once, and nothing stays
+    persisted after the call."""
+    cat = ManagedCatalog(spark, str(tmp_path / "wh"))
+    schema = "id int, day string, status string, seq int"
+    cat.create_or_replace(
+        spark.createDataFrame([(1, "d1", "old", 1), (3, "d2", "old", 1)], schema),
+        "m", partition_by=["day"],
+    )
+    sc = spark.sparkContext
+    evaluated = sc.accumulator(0)
+
+    @F.udf("int")
+    def counted(seq):
+        evaluated.add(1)
+        return seq
+
+    incoming = spark.createDataFrame(
+        [(1, "d1", "new", 2), (9, "d1", "new", 1), (4, "d3", "new", 1)], schema
+    ).withColumn("seq", counted("seq"))
+    persisted = len(sc._jsc.getPersistentRDDs())
+    cat.merge_upsert_partitioned("m", incoming, "id", ["status", "seq"], ["seq"], ["day"])
+    assert evaluated.value == 3
+    assert len(sc._jsc.getPersistentRDDs()) == persisted
+    rows = {(r.id, r.day, r.status) for r in cat.read("m").collect()}
+    assert rows == {(1, "d1", "new"), (9, "d1", "new"), (4, "d3", "new"), (3, "d2", "old")}
 
 
 def test_compact_reduces_file_count(spark, tmp_path):

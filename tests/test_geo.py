@@ -166,3 +166,54 @@ def test_fan_out_spreads_only_underpartitioned(spark):
 
     wide = spark.range(100).repartition(max(cpus, 2))
     assert fan_out(wide) is wide
+
+
+def test_revgeo_multi_zone_probes_its_input_once(spark):
+    """revgeo_multi_zone spreads its input with one fan_out probe and chains
+    its per-zone joins without probing again. A probe of a plan that holds
+    an exchange runs that plan's shuffle and broadcast stages, so probing
+    each join's input ran 5 extra jobs here. The input's own probe is taken
+    (and memoized) first; what construction runs beyond it is nothing with
+    grid=False, and in auto mode the folded zone-stats collect alone (one
+    action, which AQE runs as a map-stage job plus a result job)."""
+    from datetime import datetime
+
+    from data_rivers_spark.operators.geo import revgeo_multi_zone
+    from data_rivers_spark.session import fan_out
+
+    def zone(name, x0):
+        return spark.createDataFrame(
+            [(name, f"POLYGON(({x0} 0, {x0 + 4} 0, {x0 + 4} 4, {x0} 4, {x0} 0))",
+              datetime(2000, 1, 1), None)],
+            "zone string, geometry string, start_date timestamp, end_date timestamp",
+        )
+
+    zones = {"za": zone("a", 0), "zb": zone("b", 2), "zc": zone("c", 4)}
+    pts = spark.range(40).repartition(8).selectExpr(
+        "id", "CAST(id % 10 AS DOUBLE) + 0.5 AS px", "1.0 AS py",
+        "TIMESTAMP '2010-06-01' AS d",
+    )
+    fan_out(pts)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def construct(grid):
+        group = f"revgeo_multi_zone_construction_{grid}"
+        sc.setJobGroup(group, "construction")
+        try:
+            out = revgeo_multi_zone(pts, zones, "px", "py", "d", grid=grid)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sites = {tracker.getStageInfo(s).name
+                 for j in tracker.getJobIdsForGroup(group)
+                 for s in tracker.getJobInfo(j).stageIds}
+        return out, sites
+
+    _, sites = construct(False)
+    assert sites == set()
+    out, sites = construct("auto")
+    assert len(sites) == 1 and next(iter(sites)).startswith("collect at ")
+    got = {r.id: (r.za, r.zb, r.zc) for r in out.collect()}
+    assert got[0] == ("a", None, None)  # px 0.5
+    assert got[3] == ("a", "b", None)  # px 3.5
+    assert got[9] == (None, None, None)  # px 9.5: past every zone

@@ -115,3 +115,5 @@ def test_dsir_target_flag_matches_target_frame(spark):
         IMP.dsir_importance_weights(
             df, "text", "doc_id", df, target_flag=F.col("lang") == "en"
         )
+    with pytest.raises(ValueError, match="exactly one"):
+        IMP.dsir_importance_weights(df, "text", "doc_id", None)

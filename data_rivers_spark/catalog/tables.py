@@ -297,10 +297,6 @@ def write_bucketed_table(
     writer.saveAsTable(name)
 
 
-def read_table(spark: SparkSession, name: str) -> DataFrame:
-    return spark.table(name)
-
-
 def write_range_clustered(
     df: DataFrame,
     path: str,

@@ -122,11 +122,6 @@ def point_in_wkt_geom(px: Column, py: Column, wkt: Column) -> Column:
     return point_in_rings(px, py, wkt_rings(wkt))
 
 
-def make_wkt_point(x: Column, y: Column) -> Column:
-    """POINT(x y) — ST_GEOGPOINT equivalent as text."""
-    return F.concat(F.lit("POINT("), x.cast("string"), F.lit(" "), y.cast("string"), F.lit(")"))
-
-
 def polygon_centroid(vertices: Column) -> Column:
     """Area-weighted centroid of a closed polygon ring (ST_CENTROID over
     parcels, general_queries.py:75-84) via the shoelace formula, returned as

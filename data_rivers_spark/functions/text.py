@@ -1,7 +1,6 @@
 """Driver-side string helpers (column renaming, casing).
 
-Parity: camel_to_snake_case (reference dataflow_utils.py:844-848),
-clean_csv_* (dataflow_utils.py:851-881).
+Parity: camel_to_snake_case (reference dataflow_utils.py:844-848).
 """
 
 from __future__ import annotations
@@ -19,32 +18,3 @@ def camel_to_snake_case(val: str, strip_field: str = "") -> str:
     s1 = _CAMEL_1.sub(r"\1_\2", val)
     return _CAMEL_2.sub(r"\1_\2", s1).lower()
 
-
-def clean_csv_string(value):
-    try:
-        return value.strip('"').strip()
-    except (ValueError, AttributeError):
-        return None
-
-
-def clean_csv_int(value):
-    try:
-        return int(str(value).strip('"').strip())
-    except (ValueError, TypeError):
-        return None
-
-
-def clean_csv_float(value):
-    try:
-        return float(value)
-    except (ValueError, TypeError):
-        return None
-
-
-def clean_csv_boolean(value):
-    s = str(value).lower()
-    if s == "true":
-        return True
-    if s == "false":
-        return False
-    return None

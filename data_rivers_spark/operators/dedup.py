@@ -128,34 +128,18 @@ def word_shingle_rows(
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str, id_col: str, single_pass: bool = False
-) -> DataFrame:
+def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Keep the lowest-id row per exact text value.
 
-    Two formulations with a real IO/CPU tradeoff, both hash-first
-    (grouping on (xxhash64(text), text): 8-byte shuffle compare, full text
-    resolves the astronomically rare collision; both partially aggregate
-    map-side, so a mega-duplicate key collapses inside each map task
-    instead of skewing one reducer):
-
-    - default: min-id aggregation + semi-join back. Reads the input twice
-      but stays entirely in whole-stage codegen — measured ~40% faster on
-      the local bench, and the right choice when the source is cheap to
-      re-scan (cached, or column-pruned parquet).
-    - ``single_pass=True``: one aggregation carries the whole winning row
-      via ``min_by(struct(*), id)`` — a single scan and a single shuffle,
-      but the struct aggregation buffer forces ObjectHashAggregate (no
-      codegen). The right choice when scanning the corpus twice is the
-      bottleneck (cold 100 TB object-store reads)."""
-    if single_pass:
-        payload = F.struct(*[F.col(c) for c in df.columns])
-        return (
-            df.withColumn("__h", F.xxhash64(F.col(text_col)))
-            .groupBy("__h", F.col(text_col))
-            .agg(F.min_by(payload, F.col(id_col)).alias("__row"))
-            .select("__row.*")
-        )
+    Hash-first: grouping on (xxhash64(text), text) makes the shuffle compare
+    8 bytes while the full text resolves the astronomically rare collision,
+    and the aggregation runs partially map-side, so a mega-duplicate key
+    collapses inside each map task instead of skewing one reducer. A min-id
+    aggregation + semi-join back reads the input twice but stays entirely
+    in whole-stage codegen — measured ~40% faster on the local bench than
+    carrying the whole winning row through one ``min_by(struct(*), id)``
+    aggregation, whose struct buffer forces ObjectHashAggregate (no
+    codegen)."""
     h = F.xxhash64(F.col(text_col))
     keep = (
         df.withColumn("__h", h)
@@ -200,12 +184,6 @@ def minhash_signature_from_shingles(sh: Column, num_hashes: int = 32) -> Column:
         init,
         lambda acc, s: F.zip_with(acc, seeds, lambda m, i: F.least(m, F.xxhash64(s, i))),
     )
-
-
-def minhash_signature(text: Column, num_hashes: int = 32, shingle_n: int = 3) -> Column:
-    """Convenience single-expression form (prefer the two-step via
-    minhash_signature_from_shingles inside pipelines)."""
-    return minhash_signature_from_shingles(word_shingles(text, shingle_n), num_hashes)
 
 
 def shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
@@ -569,9 +547,7 @@ def minhash_lsh_dedup(
     num_hashes: int = 32,
     bands: int | None = 8,
     shingle_n: int = 3,
-    verify: str = "shingle",
     bucket_cap: int = 1000,
-    materialize: bool = True,
     shingle_mode: str = "word",
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard verify →
@@ -581,54 +557,43 @@ def minhash_lsh_dedup(
     lsh_plan — the S-curve planner picks the recall-constrained,
     verify-cost-minimal split (r12).
 
-    verify='shingle' (default) checks candidates with the n-gram shingle
-    Jaccard that MinHash approximates — the internally-consistent choice;
-    'word' uses word-set jaccard (a looser, vocabulary-level notion).
+    Candidates are verified with the n-gram shingle Jaccard that MinHash
+    approximates — the internally-consistent choice.
     ``shingle_mode='char'`` switches the whole pipeline (signatures AND
     verification) to character n-grams — the tokenizer-free path for
     CJK/mixed-script corpora (pair with a larger shingle_n, e.g. 5).
 
-    ``materialize=True`` (default) eagerly localCheckpoints the duplicate-id
-    frame (and, on the shingle path, the shared shingle-set frame) BEFORE
-    building the final anti-join. Without it, Catalyst pushes the anti-join
-    through a Union input and re-plans the entire LSH pipeline once per Union
-    branch — DataFrame reuse is lineage reuse, not computation reuse, so the
-    corpus would be re-tokenized per consumer (round-2 plan audit measured
-    the tokenize subtree 6×). Checkpointing swaps the subtree for one cached
-    RDD; the cost is that calling this function triggers the candidate/verify
-    jobs immediately rather than at first action.
+    The duplicate-id frame (and the shared shingle-set frame) is
+    localCheckpointed BEFORE building the final anti-join. Without it,
+    Catalyst pushes the anti-join through a Union input and re-plans the
+    entire LSH pipeline once per Union branch — DataFrame reuse is lineage
+    reuse, not computation reuse, so the corpus would be re-tokenized per
+    consumer (round-2 plan audit measured the tokenize subtree 6×).
+    Checkpointing swaps the subtree for one cached RDD; the cost is that
+    calling this function triggers the candidate/verify jobs immediately
+    rather than at first action.
 
     Note: transitively-linked clusters are collapsed greedily by min-id (a doc
     is dropped if it pairs above threshold with ANY lower id) — the standard
     single-pass approximation of connected components; use
     ``dedup_by_components`` for the exact closure."""
     bands = _resolve_bands(threshold, num_hashes, bands)
-    if verify == "shingle":
-        verified = minhash_lsh_verified_pairs(
-            df,
-            text_col,
-            id_col,
-            threshold,
-            num_hashes,
-            bands,
-            shingle_n,
-            bucket_cap,
-            materialize=materialize,
-            shingle_mode=shingle_mode,
-        )
-    else:
-        cands = minhash_lsh_candidates(
-            df, text_col, id_col, num_hashes, bands, shingle_n, bucket_cap
-        )
-        verified = verify_pairs_jaccard(
-            df, cands, text_col, id_col, threshold, flavor=verify, shingle_n=shingle_n
-        )
+    verified = minhash_lsh_verified_pairs(
+        df,
+        text_col,
+        id_col,
+        threshold,
+        num_hashes,
+        bands,
+        shingle_n,
+        bucket_cap,
+        shingle_mode=shingle_mode,
+    )
+    # the anti-join's other side below may be a many-branch Union; a
+    # checkpointed dupes frame is referenced per branch at zero replay
+    # cost, and AQE re-sizes it at runtime for the broadcast decision
     dupes = verified.select(F.col("id_b").alias(id_col)).distinct()
-    if materialize:
-        # the anti-join's other side below may be a many-branch Union; a
-        # checkpointed dupes frame is referenced per branch at zero replay
-        # cost, and AQE re-sizes it at runtime for the broadcast decision
-        dupes = dupes.localCheckpoint(eager=True)
+    dupes = dupes.localCheckpoint(eager=True)
     return df.join(dupes, id_col, "left_anti")
 
 
@@ -641,7 +606,6 @@ def minhash_lsh_verified_pairs(
     bands: int | None = 8,
     shingle_n: int = 3,
     bucket_cap: int = 1000,
-    materialize: bool = True,
     shingle_mode: str = "word",
 ) -> DataFrame:
     """Exact-Jaccard-verified near-dup pairs (id_a < id_b) with ONE tokenize
@@ -655,15 +619,13 @@ def minhash_lsh_verified_pairs(
     verification then checks char-shingle Jaccard, the measure the char
     MinHash approximates.
 
-    ``materialize=True`` (default) makes the single pass PHYSICAL: the
-    shingle-set frame is eagerly localCheckpointed (executor block store,
-    memory-then-disk), so the signature branch and both verify sides scan one
-    cached RDD. Sharing the frame by lineage alone does NOT do this — the
-    round-2 plan audit showed the scan→explode→window→collect_set subtree
-    replanned 6× with no ReusedExchange, because each consumer re-derives the
-    lineage through different downstream operators. Pass ``materialize=False``
-    to keep the operator fully lazy (e.g. when staging the sets frame through
-    a table yourself, as incremental_lsh_dedup does for signatures).
+    The single pass is PHYSICAL: the shingle-set frame is localCheckpointed
+    (executor block store, memory-then-disk), so the signature branch and
+    both verify sides scan one cached RDD. Sharing the frame by lineage
+    alone does NOT do this — the round-2 plan audit showed the
+    scan→explode→window→collect_set subtree replanned 6× with no
+    ReusedExchange, because each consumer re-derives the lineage through
+    different downstream operators.
 
     Feed the result to the greedy min-id drop (minhash_lsh_dedup) or to
     dedup_by_components for the exact closure."""
@@ -672,21 +634,19 @@ def minhash_lsh_verified_pairs(
         sets = char_shingle_sets(df, text_col, id_col, shingle_n)
     else:
         sets = shingle_sets(df, text_col, id_col, shingle_n)
-    if materialize:
-        # LAZY sets + EAGER banded (r14): the eager sets barrier was one of
-        # two sequential driver-blocking jobs per dedup run. The banded
-        # frame's checkpoint job now materializes sets inside itself —
-        # sets' first consumer is banded's narrow derive, so the cache
-        # populates race-free before the verify branches (which read sets
-        # through the SAME truncated-lineage blocks) ever touch it. An
-        # all-lazy variant was measured SLOWER on the incremental twin
-        # (within one job the verify-side stages raced the banded stage on
-        # the uncached sets partitions and recomputed the tokenize
-        # concurrently); this shape keeps one barrier and zero recompute.
-        sets = sets.localCheckpoint(eager=False)
+    # LAZY sets + EAGER banded (r14): the eager sets barrier was one of
+    # two sequential driver-blocking jobs per dedup run. The banded
+    # frame's checkpoint job now materializes sets inside itself —
+    # sets' first consumer is banded's narrow derive, so the cache
+    # populates race-free before the verify branches (which read sets
+    # through the SAME truncated-lineage blocks) ever touch it. An
+    # all-lazy variant was measured SLOWER on the incremental twin
+    # (within one job the verify-side stages raced the banded stage on
+    # the uncached sets partitions and recomputed the tokenize
+    # concurrently); this shape keeps one barrier and zero recompute.
+    sets = sets.localCheckpoint(eager=False)
     banded = _banded_from_sets(sets, id_col, num_hashes, bands)
-    if materialize:
-        banded = banded.localCheckpoint(eager=True)
+    banded = banded.localCheckpoint(eager=True)
     cands = _expand_buckets(banded, id_col, bucket_cap)
     return verify_pairs_jaccard(
         df, cands, text_col, id_col, threshold, shingle_n=shingle_n, sets=sets
@@ -728,7 +688,6 @@ def incremental_lsh_dedup(
     run_log=None,
     run_log_source: str = "lsh_dedup",
     keep_dropped_signatures: bool = False,
-    materialize: bool = True,
     master_banded_grouped: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Dedup a new batch against BOTH itself and an already-deduped corpus
@@ -781,16 +740,15 @@ def incremental_lsh_dedup(
     computed in an earlier run collide correctly with rows computed today —
     nothing needs re-hashing as the store grows.
 
-    ``materialize=True`` (default) eagerly localCheckpoints the BATCH-scale
-    intermediates (shingle sets, banded rows, dupe ids) — each has multiple
-    downstream consumers, and lineage-only sharing re-plans the whole batch
-    tokenize per consumer (a plan audit of the two-batch query showed the
-    documents scan replicated 62×). All three frames are batch-sized by the
-    operator's own premise, and a production pipeline writes the banded
-    frame to the store table anyway. Pass False when staging every
-    intermediate through tables yourself. ``bands=None`` → lsh_plan-derived
-    banding (see minhash_lsh_dedup); an incremental store's banding must of
-    course stay FIXED across runs — derive once, persist the config."""
+    The BATCH-scale intermediates (shingle sets, banded rows, dupe ids) are
+    localCheckpointed — each has multiple downstream consumers, and
+    lineage-only sharing re-plans the whole batch tokenize per consumer (a
+    plan audit of the two-batch query showed the documents scan replicated
+    62×). All three frames are batch-sized by the operator's own premise,
+    and a production pipeline writes the banded frame to the store table
+    anyway. ``bands=None`` → lsh_plan-derived banding (see
+    minhash_lsh_dedup); an incremental store's banding must of course stay
+    FIXED across runs — derive once, persist the config."""
     bands = _resolve_bands(threshold, num_hashes, bands)
     if batch_min_id is None and run_log is not None:
         stored = run_log.last_successful_run(run_log_source)
@@ -803,24 +761,22 @@ def incremental_lsh_dedup(
         raise ValueError(
             "pass exactly one of master_banded / master_banded_grouped"
         )
+    # LAZY sets + EAGER banded (r14): the eager sets_b barrier was one
+    # of ~7 sequential driver-blocking jobs per composite run
+    # (profile_construct measured the barriers at ~60% of
+    # q_incremental_dedup_grouped's per-iteration wall, with the noop
+    # save at 0.3 s). Lazy marking persists + truncates the same
+    # lineage, and banded_b's eager job materializes sets_b inside
+    # itself — sets_b's first consumer is banded_b's narrow derive, so
+    # the cache populates race-free before the verify branches read
+    # it. An ALL-lazy variant (banded_b lazy too) was measured SLOWER:
+    # inside the dupes job the verify-side stages raced the banding
+    # stage on the uncached sets partitions and recomputed the batch
+    # tokenize concurrently.
     sets_b = shingle_sets(batch, text_col, id_col, shingle_n)
-    if materialize:
-        # LAZY sets + EAGER banded (r14): the eager sets_b barrier was one
-        # of ~7 sequential driver-blocking jobs per composite run
-        # (profile_construct measured the barriers at ~60% of
-        # q_incremental_dedup_grouped's per-iteration wall, with the noop
-        # save at 0.3 s). Lazy marking persists + truncates the same
-        # lineage, and banded_b's eager job materializes sets_b inside
-        # itself — sets_b's first consumer is banded_b's narrow derive, so
-        # the cache populates race-free before the verify branches read
-        # it. An ALL-lazy variant (banded_b lazy too) was measured SLOWER:
-        # inside the dupes job the verify-side stages raced the banding
-        # stage on the uncached sets partitions and recomputed the batch
-        # tokenize concurrently.
-        sets_b = sets_b.localCheckpoint(eager=False)
+    sets_b = sets_b.localCheckpoint(eager=False)
     banded_b = _banded_from_sets(sets_b, id_col, num_hashes, bands)
-    if materialize:
-        banded_b = banded_b.localCheckpoint(eager=True)
+    banded_b = banded_b.localCheckpoint(eager=True)
     if master_banded_grouped is not None:
         gb = banded_b.groupBy("band_idx", "band_hash").agg(
             F.collect_list(F.col(id_col)).alias("__bids")
@@ -872,8 +828,7 @@ def incremental_lsh_dedup(
         sets=sets, width=vw,
     )
     dupes = verified.select(F.col("id_b").alias(id_col)).distinct()
-    if materialize:
-        dupes = dupes.localCheckpoint(eager=True)
+    dupes = dupes.localCheckpoint(eager=True)
     survivors = batch.join(dupes, id_col, "left_anti")
     if keep_dropped_signatures:
         return survivors, banded_b
@@ -887,18 +842,17 @@ def verify_pairs_jaccard(
     text_col: str,
     id_col: str,
     threshold: float,
-    flavor: str = "shingle",
     shingle_n: int = 3,
     sets: DataFrame | None = None,
     width: int | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs, set-join formulation:
-    each doc's DISTINCT token/shingle set is built ONCE (codegen explode
+    each doc's DISTINCT n-gram shingle set is built ONCE (codegen explode
     pipeline, elements stored as xxhash64 longs) and joined to the pair
     list; the per-pair work is one native array_intersect over fixed-width
     longs, with |union| recovered arithmetically as |a|+|b|-|intersect|.
 
-    Same values as computing jaccard_shingles/jaccard_words per pair from
+    Same values as computing jaccard_shingles per pair from
     raw text, but ~5× faster on the candidate stream: the per-pair HOF form
     re-tokenizes both texts with interpreted lambda expressions for every
     pair, while here tokenization cost is per-DOC and the per-pair step
@@ -911,14 +865,7 @@ def verify_pairs_jaccard(
     No empty-set guard is needed on the division: only docs with ≥1 token
     enter LSH buckets, so union ≥ 1 for every candidate pair."""
     if sets is None:
-        if flavor == "shingle":
-            sets = shingle_sets(df, text_col, id_col, shingle_n)
-        else:
-            sets = (
-                df.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("shingle"))
-                .groupBy(id_col)
-                .agg(F.collect_set(F.xxhash64(F.col("shingle"))).alias("__set"))
-            )
+        sets = shingle_sets(df, text_col, id_col, shingle_n)
     # |union| = |a| + |b| - |intersect|: one hash-set probe per pair instead
     # of two (array_union built and measured at ~the same cost as the
     # intersect it duplicates)
@@ -1121,14 +1068,6 @@ def _simhash_udf(num_bits: int = 64):
     return simhash
 
 
-def _fnv1a64(s: str) -> int:
-    h = 0xCBF29CE484222325
-    for byte in s.encode("utf-8"):
-        h ^= byte
-        h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
 def simhash_column(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
     """64-bit SimHash per document (Arrow-batched; one pass).
 
@@ -1171,12 +1110,37 @@ def _auto_clean_blocks(n: int, max_hamming: int) -> int:
     return min(ecb, 6)
 
 
+def _clean_block_widths(max_hamming: int, extra_clean_blocks: int) -> list[int]:
+    """Bit widths of the ``max_hamming + extra_clean_blocks`` signature
+    blocks; raises ValueError for a config whose combo key cannot pack.
+
+    Fixed-width slot packing is injective only while every slot fits in the
+    63 value bits of a signed long: n_pick * slot can exceed that (e.g.
+    max_hamming=1, extra_clean_blocks=11 → slot=6, 11*6=66 — silent long
+    wrap aliasing distinct combos), and extra_clean_blocks >= 22 would even
+    build F.lit(1 << 63) which overflows LongType at plan time. Every
+    useful operating point (defaults, and the measured 4-clean alternative)
+    packs well inside 63 bits."""
+    if extra_clean_blocks < 1:
+        raise ValueError("need at least one guaranteed-clean block")
+    t_blocks = max_hamming + extra_clean_blocks
+    widths = [64 // t_blocks + (1 if i < 64 % t_blocks else 0) for i in range(t_blocks)]
+    n_pick, slot = extra_clean_blocks, max(widths)
+    if n_pick * slot > 63:
+        raise ValueError(
+            f"combo key needs n_pick*slot = {n_pick}*{slot} = {n_pick * slot} bits"
+            " > 63 available in a signed long: lower extra_clean_blocks (or"
+            " raise max_hamming) so extra_clean_blocks *"
+            " ceil(64/(max_hamming+extra_clean_blocks)) <= 63"
+        )
+    return widths
+
+
 def simhash_near_pairs(
     df: DataFrame,
     id_col: str,
     sim_col: str = "simhash",
     max_hamming: int = 3,
-    materialize: bool = True,
     extra_clean_blocks: int | None = 3,
     corpus_count: int | None = None,
 ) -> DataFrame:
@@ -1217,26 +1181,25 @@ def simhash_near_pairs(
     + true bit_count verify make the OUTPUT invariant to this knob — it
     is purely a cost decision, so measure before deepening).
 
-    ``materialize=True`` eagerly localCheckpoints the (id, signature)
-    projection first. The signature column is usually the Arrow pandas UDF
-    from ``simhash_column``, and WITHOUT materialization the self-join
+    The (id, signature) projection is eagerly localCheckpointed first. The
+    signature column is usually the Arrow pandas UDF from
+    ``simhash_column``, and WITHOUT materialization the self-join
     re-evaluates that UDF on both aliases AFTER the 20-way key explode —
     ~40 signature computations per doc instead of 1 (measured 6×
-    end-to-end at 320k docs). Pass False only when the input is already a
-    materialized signature table."""
+    end-to-end at 320k docs). An explicit ``extra_clean_blocks`` is
+    validated before that checkpoint job runs."""
     from itertools import combinations
 
     if max_hamming < 1:
         raise ValueError("max_hamming=0 is exact equality — groupBy the signature")
-    if extra_clean_blocks is not None and extra_clean_blocks < 1:
-        raise ValueError("need at least one guaranteed-clean block")
-    if materialize:
-        df = df.select(id_col, sim_col).localCheckpoint(eager=True)
+    if extra_clean_blocks is not None:
+        _clean_block_widths(max_hamming, extra_clean_blocks)
+    df = df.select(id_col, sim_col).localCheckpoint(eager=True)
     if extra_clean_blocks is None:
         n = df.count() if corpus_count is None else int(corpus_count)
         extra_clean_blocks = _auto_clean_blocks(n, max_hamming)
-    t_blocks = max_hamming + extra_clean_blocks
-    widths = [64 // t_blocks + (1 if i < 64 % t_blocks else 0) for i in range(t_blocks)]
+    widths = _clean_block_widths(max_hamming, extra_clean_blocks)
+    t_blocks = len(widths)
     offsets = [sum(widths[:i]) for i in range(t_blocks)]
 
     def block(i):
@@ -1247,25 +1210,10 @@ def simhash_near_pairs(
         )
 
     # pack each clean-block combo into one long via fixed-width bit slots
-    # (validated below to fit 63 bits, so the packing is injective per
-    # combo_idx; chunk_idx disambiguates across combos)
+    # (_clean_block_widths validated the 63-bit fit, so the packing is
+    # injective per combo_idx; chunk_idx disambiguates across combos)
     n_pick = extra_clean_blocks
-    # fixed-width slot packing is injective only while every slot fits in
-    # the 63 value bits of a signed long: n_pick * slot can exceed that
-    # (e.g. max_hamming=1, extra_clean_blocks=11 → slot=6, 11*6=66 — silent
-    # long wrap aliasing distinct combos), and extra_clean_blocks >= 22
-    # would even build F.lit(1 << 63) which overflows LongType at plan
-    # time. Reject such configs up front — every useful operating point
-    # (defaults, and the measured 4-clean alternative) packs well inside
-    # 63 bits.
     slot = max(widths)
-    if n_pick * slot > 63:
-        raise ValueError(
-            f"combo key needs n_pick*slot = {n_pick}*{slot} = {n_pick * slot} bits"
-            " > 63 available in a signed long: lower extra_clean_blocks (or"
-            " raise max_hamming) so extra_clean_blocks *"
-            " ceil(64/(max_hamming+extra_clean_blocks)) <= 63"
-        )
     keys = F.array(
         *[
             sum(

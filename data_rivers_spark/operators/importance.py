@@ -258,7 +258,6 @@ def dsir_importance_weights(
     seed: int | str = 0,
     out_col: str = "log_weight",
     ndigits: int = 6,
-    materialize: bool = False,
     target_flag: Column | None = None,
 ) -> DataFrame:
     """``df`` plus a ``log_weight`` column: the DSIR log importance weight of
@@ -271,19 +270,16 @@ def dsir_importance_weights(
     pool and target, a B-row broadcast join, one doc-keyed sum — the
     corpus is never shuffled on anything wider than (id, bucket).
 
-    ``materialize`` (default False) keeps plan construction side-effect-free:
-    the pool's feature frame has TWO consumers (the source LM aggregate and
-    the per-doc scoring join) and Catalyst does not common-subexpression the
-    n-gram explode across joins, so the featurize pass runs twice — but the
-    MEASURED default is recompute: an interleaved cold-JVM A/B at sf0.1
+    Plan construction is side-effect-free (no checkpoint): the pool's
+    feature frame has TWO consumers (the source LM aggregate and the
+    per-doc scoring join) and Catalyst does not common-subexpression the
+    n-gram explode across joins, so the featurize pass runs twice — but
+    recompute is MEASURED faster: an interleaved cold-JVM A/B at sf0.1
     (bench_out/rebench_dsir_materialize_r11.json; 3 rounds × 3 samples per
     arm) put the eager localCheckpoint round-trip at 13.8 s envelope min vs
     10.6 s for recompute (~23% slower) — writing + re-reading the
     (id, bucket, cnt) frame costs more than re-running the codegen'd
-    explode+agg. Pass True only for corpora whose text column is wide enough
-    that a second scan dominates the checkpoint round-trip (cluster jobs
-    reading remote storage, not local warm-cache parquet), or when the
-    caller wants the eager pin for its own reuse."""
+    explode+agg."""
     if (target is None) == (target_flag is None):
         raise ValueError("pass exactly one of target / target_flag")
     if target_flag is not None:
@@ -298,8 +294,6 @@ def dsir_importance_weights(
         src_feats = hashed_ngram_features(
             df, text_col, id_col, num_buckets, n_max, seed, flag=target_flag
         )
-        if materialize:
-            src_feats = src_feats.localCheckpoint(eager=True)
         joint = src_feats.groupBy("bucket").agg(
             F.sum("cnt").alias("__cs"),
             F.sum(F.when(F.col("__tgt"), F.col("cnt")).otherwise(F.lit(0))).alias(
@@ -312,8 +306,6 @@ def dsir_importance_weights(
         src_feats = hashed_ngram_features(
             df, text_col, id_col, num_buckets, n_max, seed
         )
-        if materialize:
-            src_feats = src_feats.localCheckpoint(eager=True)
         tgt_feats = hashed_ngram_features(
             target, text_col, id_col, num_buckets, n_max, seed
         )

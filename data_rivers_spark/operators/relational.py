@@ -189,7 +189,6 @@ def global_row_number_scalable(
     order_cols: list[str],
     out_col: str = "seq",
     num_partitions: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Scale-safe global ROW_NUMBER(): identical output to
     ``global_row_number`` without the single-partition sort.
@@ -206,27 +205,24 @@ def global_row_number_scalable(
     within a partition (same contract as ROW_NUMBER); equal keys never split
     across range partitions, so tie groups stay contiguous.
 
-    ``materialize=True`` (default) eagerly localCheckpoints the numbered
-    frame so the counts branch and the output branch read ONE computed RDD —
-    the correctness of the offsets REQUIRES both branches to see the same
-    partition assignment. Catalyst does NOT guarantee that by itself: the
-    plan audit showed the two branches compile to two separate range
-    exchanges (no ReusedExchange), each re-sampling range boundaries; that
-    works only while the sampler sees bit-identical input, and a future
-    filter/pruning difference between branches would silently corrupt the
-    sequence. The checkpoint makes consistency structural and also avoids
-    recomputing the input twice. ``materialize=False`` keeps the operator
-    lazy for callers who stage the ranged frame through a table themselves.
-    Returns bigint (a global sequence past 2^31 rows cannot be int; the
-    exact variant inherits int from ROW_NUMBER)."""
+    The numbered frame is eagerly localCheckpointed so the counts branch and
+    the output branch read ONE computed RDD — the correctness of the
+    offsets REQUIRES both branches to see the same partition assignment.
+    Catalyst does NOT guarantee that by itself: the plan audit showed the
+    two branches compile to two separate range exchanges (no
+    ReusedExchange), each re-sampling range boundaries; that works only
+    while the sampler sees bit-identical input, and a future filter/pruning
+    difference between branches would silently corrupt the sequence. The
+    checkpoint makes consistency structural and also avoids recomputing the
+    input twice. Returns bigint (a global sequence past 2^31 rows cannot be
+    int; the exact variant inherits int from ROW_NUMBER)."""
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(parts, *[F.col(c) for c in order_cols]).withColumn(
         "__pid", F.spark_partition_id()
     )
     local_w = Window.partitionBy("__pid").orderBy(*order_cols)
     numbered = ranged.withColumn("__local", F.row_number().over(local_w))
-    if materialize:
-        numbered = numbered.localCheckpoint(eager=True)
+    numbered = numbered.localCheckpoint(eager=True)
     counts = numbered.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
     off_w = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.withColumn(

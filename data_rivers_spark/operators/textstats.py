@@ -80,15 +80,6 @@ def quality_features(df: DataFrame, text_col: str, prefix: str = "q_") -> DataFr
     )
 
 
-def language_scores(text: Column) -> Column:
-    """map<lang, stopword-hit-ratio> over the configured languages."""
-    entries = []
-    for lang, sw in STOPWORDS.items():
-        entries.append(F.lit(lang))
-        entries.append(stopword_ratio(text, sw))
-    return F.create_map(*entries)
-
-
 def detect_language(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> DataFrame:
     """Heuristic language-ID: argmax stopword-hit ratio; 'und' when nothing
     hits. Ties resolve by language-code order for determinism.
@@ -314,7 +305,6 @@ def sequential_pack_scalable(
     budget: int,
     group_col: str | None = None,
     num_partitions: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Scale-safe twin of ``sequential_pack``: identical chunk_idx output
     without the one-sort-task-per-group window (a per-group cumsum window
@@ -332,17 +322,11 @@ def sequential_pack_scalable(
     chunk_idx = floor(start / budget). Two full-width shuffles (range +
     pid·group hash) and one broadcast replace the per-group serialization.
 
-    ``materialize=True`` (default) eagerly localCheckpoints the locally
-    cumsum'd frame so the totals branch and the output branch read ONE
-    computed RDD — offset correctness REQUIRES both branches to see the
-    same partition assignment, and Catalyst compiles them as two separate
-    range exchanges otherwise (the global_row_number_scalable plan-audit
-    finding; same reasoning, same default). ``materialize=False`` persists
-    (MEMORY_AND_DISK) instead of checkpointing: both branches still read
-    one computed partition assignment without the eager round-trip, at the
-    (documented) risk that a cache eviction forces a recompute mid-job —
-    never a silent full-recompute of two independent range exchanges
-    (r12 advice).
+    The locally cumsum'd frame is eagerly localCheckpointed so the totals
+    branch and the output branch read ONE computed RDD — offset correctness
+    REQUIRES both branches to see the same partition assignment, and
+    Catalyst compiles them as two separate range exchanges otherwise (the
+    global_row_number_scalable plan-audit finding; same reasoning).
 
     NULL groups pack like any other group (the window form's partitionBy
     semantics): the offsets join is built with eqNullSafe on the group key,
@@ -361,10 +345,7 @@ def sequential_pack_scalable(
         "__lstart",
         F.sum(F.col(token_count_col)).over(local_w) - F.col(token_count_col),
     )
-    if materialize:
-        numbered = numbered.localCheckpoint(eager=True)
-    else:
-        numbered = numbered.persist()
+    numbered = numbered.localCheckpoint(eager=True)
     tot_keys = ([group_col] if group_col else []) + ["__pid"]
     totals = numbered.groupBy(*tot_keys).agg(
         F.sum(F.col(token_count_col)).alias("__tot")
@@ -946,7 +927,6 @@ def unigram_logprob_score(
     text_col: str,
     id_col: str,
     ndigits: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-document mean unigram log-probability under the corpus's own
     unigram LM — the CCNet-style fluency signal (CCNet scores with a
@@ -962,16 +942,15 @@ def unigram_logprob_score(
     mean. The total-token scalar folds in as a window-free cross join of a
     1-row aggregate, not a driver round-trip.
 
-    ``materialize=True`` (default) eagerly localCheckpoints the LM frame —
-    it is vocab-sized (small at any corpus size), and without it Catalyst
-    re-plans the full tokenize+aggregate subtree for BOTH consumers (the
-    scoring join and the total), tokenizing the corpus three times instead
-    of twice (plan-audited; DataFrame reuse is lineage reuse, not
-    computation reuse — same lesson as the LSH shingle frame)."""
+    The LM frame is eagerly localCheckpointed — it is vocab-sized (small at
+    any corpus size), and without it Catalyst re-plans the full
+    tokenize+aggregate subtree for BOTH consumers (the scoring join and the
+    total), tokenizing the corpus three times instead of twice
+    (plan-audited; DataFrame reuse is lineage reuse, not computation reuse
+    — same lesson as the LSH shingle frame)."""
     ex = df.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("token"))
     lm = ex.groupBy("token").agg(F.count(F.lit(1)).alias("__cnt"))
-    if materialize:
-        lm = lm.localCheckpoint(eager=True)
+    lm = lm.localCheckpoint(eager=True)
     total = lm.agg(F.sum("__cnt").alias("__total"))
     scored = (
         ex.join(lm, "token")

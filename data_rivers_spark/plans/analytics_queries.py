@@ -333,37 +333,22 @@ def conversion_funnel(
     ev: DataFrame,
     stage_types: list[str],
     window: str = "24 HOURS",
-    materialize: str | bool = "local",
 ) -> DataFrame:
     """N-stage ordered conversion funnel over (user_id, event_type, ts).
     Each stage is one keyed aggregate joined to the previous stage's anchor
     timestamps — the event stream shuffles on user_id once per stage, never
     self-joins row-to-row.
 
-    Anchor materialization (``materialize``): each stage's anchor frame is
-    user-count-sized and consumed twice (next stage's broadcast + its own
-    stage-count row); without materialization stage N+1's plan REPLAYS
-    stage N's whole subtree (plan audit: events scanned 6× lineage-only vs
-    once per stage with it).
-    - ``"local"`` (default): ``localCheckpoint`` — blocks live in executor
-      memory, spilling to executor LOCAL disk under pressure
-      (MEMORY_AND_DISK). Fine at any events-table scale because the
-      anchors are |distinct converting users| rows, NOT events rows — at
-      100× events the anchor grows only with the user population — but
-      the blocks are lost with an executor (recompute restarts the stage).
-    - ``"checkpoint"``: reliable ``checkpoint()`` to the directory set via
-      ``spark.sparkContext.setCheckpointDir`` — survives executor loss;
-      the right call inside a many-hour job.
-    - ``False``: lineage only (no materialization) — accept the replay.
-    """
-
-    def _mat(df: DataFrame) -> DataFrame:
-        if materialize == "local":
-            return df.localCheckpoint(eager=True)
-        if materialize == "checkpoint":
-            return df.checkpoint(eager=True)
-        return df
-
+    Each non-final stage's anchor frame is user-count-sized and consumed
+    twice (next stage's broadcast + its own stage-count row); without
+    materialization stage N+1's plan REPLAYS stage N's whole subtree (plan
+    audit: events scanned 6× lineage-only vs once per stage with it). The
+    anchors are ``localCheckpoint``-ed — blocks live in executor memory,
+    spilling to executor LOCAL disk under pressure (MEMORY_AND_DISK). Fine
+    at any events-table scale because the anchors are |distinct converting
+    users| rows, NOT events rows — at 100× events the anchor grows only
+    with the user population — but the blocks are lost with an executor
+    (recompute restarts the stage)."""
     anchors = []
     prev = None
     for i, etype in enumerate(stage_types):
@@ -376,7 +361,7 @@ def conversion_funnel(
         cur = cur.groupBy("user_id").agg(F.min("ts").alias(f"t{i + 1}"))
         # the last stage feeds only its count row — no second consumer
         if i < len(stage_types) - 1:
-            cur = _mat(cur)
+            cur = cur.localCheckpoint(eager=True)
         anchors.append(cur)
         prev = cur
 

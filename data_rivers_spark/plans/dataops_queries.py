@@ -2320,7 +2320,7 @@ def q_curation_select_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.coalesce(F.col("lang"), F.lit("und")).alias("lang"), "text"
     )
     # stage-boundary materialization: three downstream consumers (pool
-    # featurize x2 under materialize=False, final weight join) — same
+    # featurize x2, recomputed by measured choice; final weight join) — same
     # posture as the prefix's `kept` checkpoint
     corpus = corpus.localCheckpoint(eager=True)
     weighted = IMP.dsir_importance_weights(

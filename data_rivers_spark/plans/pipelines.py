@@ -310,8 +310,8 @@ def corpus_curation_pipeline(
             )
 
         # stage boundary: the DSIR featurize has three consumers of the
-        # cleaned corpus (pool featurize x2 under the measured
-        # materialize=False default, final weight join)
+        # cleaned corpus (pool featurize x2 — dsir_importance_weights
+        # recomputes it by measured choice — final weight join)
         deduped = deduped.localCheckpoint(eager=True)
         target = dsir_target(deduped) if callable(dsir_target) else dsir_target
         weighted = IMP.dsir_importance_weights(

@@ -75,13 +75,3 @@ def split_quarantine(
     clean = df.filter(F.col(quarantine_col).isNull()).drop(quarantine_col)
     bad = df.filter(F.col(quarantine_col).isNotNull()).select(quarantine_col)
     return clean, bad
-
-
-def write_ndjson(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> None:
-    """ndjson writer (json_to_gcs equivalent, gcs_utils.py:570-594); use
-    yyyy/mm/dd-style partition columns for the reference's time-bucketed
-    layout (qalert_airflow.py:74-77) → path-glob pruning on re-reads."""
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.json(path)

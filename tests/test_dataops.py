@@ -89,20 +89,22 @@ def test_simhash_blocking_rejects_overflowing_combo_keys(spark):
     import pytest
 
     sigs = spark.createDataFrame([(1, 7), (2, 5)], "doc_id long, simhash long")
-    # max_hamming=1, extra_clean_blocks=11 -> slot=6, 11*6=66 bits > 63
-    with pytest.raises(ValueError, match="63"):
-        D.simhash_near_pairs(
-            sigs, "doc_id", max_hamming=1, extra_clean_blocks=11, materialize=False
-        )
-    # extra_clean_blocks=22 would overflow LongType at plan build; same guard
-    with pytest.raises(ValueError, match="63"):
-        D.simhash_near_pairs(
-            sigs, "doc_id", max_hamming=1, extra_clean_blocks=22, materialize=False
-        )
+    sc = spark.sparkContext
+    group = "simhash_rejects_bad_config"
+    sc.setJobGroup(group, "bad combo-key configs")
+    try:
+        # max_hamming=1, extra_clean_blocks=11 -> slot=6, 11*6=66 bits > 63
+        with pytest.raises(ValueError, match="63"):
+            D.simhash_near_pairs(sigs, "doc_id", max_hamming=1, extra_clean_blocks=11)
+        # extra_clean_blocks=22 would overflow LongType at plan build; same guard
+        with pytest.raises(ValueError, match="63"):
+            D.simhash_near_pairs(sigs, "doc_id", max_hamming=1, extra_clean_blocks=22)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # an explicit bad config is rejected before the signature checkpoint job
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     # the measured 4-clean operating point stays legal (t=7, slot=10, 40 bits)
-    D.simhash_near_pairs(
-        sigs, "doc_id", max_hamming=3, extra_clean_blocks=4, materialize=False
-    ).collect()
+    D.simhash_near_pairs(sigs, "doc_id", max_hamming=3, extra_clean_blocks=4).collect()
 
 
 def test_shingle_rows_partitioning_floor_and_override(spark):
@@ -792,17 +794,15 @@ def test_inverted_index_cap_and_df(spark):
     assert TX.inverted_index(df, "text", "doc_id", min_df=2).count() == 2
 
 
-def test_exact_dedup_single_pass_equivalence(spark):
-    """Both exact_dedup formulations produce identical surviving rows."""
+def test_exact_dedup_keeps_lowest_id_row(spark):
+    """exact_dedup keeps the whole lowest-id row of each exact text."""
     df = spark.createDataFrame(
         [(3, "dup", "c"), (1, "dup", "a"), (2, "uniq", "b"), (4, "dup", "d")],
         "doc_id long, text string, extra string",
     )
-    a = sorted((r.doc_id, r.text, r.extra) for r in
-               D.exact_dedup(df, "text", "doc_id").collect())
-    b = sorted((r.doc_id, r.text, r.extra) for r in
-               D.exact_dedup(df, "text", "doc_id", single_pass=True).collect())
-    assert a == b == [(1, "dup", "a"), (2, "uniq", "b")]
+    got = sorted((r.doc_id, r.text, r.extra) for r in
+                 D.exact_dedup(df, "text", "doc_id").collect())
+    assert got == [(1, "dup", "a"), (2, "uniq", "b")]
 
 
 def test_simhash_dedup_greedy_and_closure(spark):

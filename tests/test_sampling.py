@@ -165,10 +165,10 @@ def test_sequential_pack_scalable_equals_window_form(spark):
 
 
 def test_sequential_pack_scalable_materialize_false(spark):
-    # r13 (closing the r12 low advice): materialize=False now persists the
-    # locally-cumsum'd frame instead of recomputing two independent range
-    # exchanges, so it is safe (one partition assignment) — output must
-    # equal the exact window form, NULL groups included.
+    # the locally-cumsum'd frame is reused by both range exchanges, so one
+    # partition assignment feeds the pack: a third of the rows NULL-grouped,
+    # packed across fewer range partitions than input partitions, must equal
+    # the exact window form.
     rows = [
         (i, ["a", "b", None][i % 3], 1 + i % 7) for i in range(300)
     ]
@@ -176,10 +176,12 @@ def test_sequential_pack_scalable_materialize_false(spark):
     want = {
         r.k: r.chunk_idx for r in TX.sequential_pack(df, "tok", "k", 16, "g").collect()
     }
-    got_df = TX.sequential_pack_scalable(
-        df, "tok", "k", 16, "g", num_partitions=5, materialize=False
-    )
-    got = {r.k: r.chunk_idx for r in got_df.collect()}
+    got = {
+        r.k: r.chunk_idx
+        for r in TX.sequential_pack_scalable(
+            df, "tok", "k", 16, "g", num_partitions=5
+        ).collect()
+    }
     assert got == want
 
 

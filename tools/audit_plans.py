@@ -31,8 +31,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # Reviewed multi-scan reasons. Every entry here was inspected: the extra
 # scans are the query's SEMANTICS (self-joins, two dimension roles, scalar
 # subquery + main pass, planted-copy union fixtures that union the same
-# parquet twice), or the documented two-scan formulation of an operator
-# whose single-scan variant exists (exact_dedup single_pass). A query that
+# parquet twice), or an operator's documented two-scan formulation
+# (exact_dedup's min-id + semi-join, measured faster than one min_by(struct)
+# scan that loses codegen). A query that
 # starts multi-scanning WITHOUT an entry lands in the UNEXPLAINED section —
 # that's the lineage-replay regression signal this tool exists to catch
 # (it found the LSH 6x tokenize in round 2 and the unigram 3x in round 3).
@@ -105,7 +106,7 @@ EXPLAINED = {
     "q_nfc_normalize": "planted-NFD union fixture",
     "q_perplexity_buckets": "LM build + scoring pass + language join-back (documented 2-tokenize, same as q_unigram_logprob)",
     # round-11 review of the round-10 additions (the r10 verdict's seven):
-    "q_dsir_weights": "pool featurize x2 (measured materialize=False default: recompute beat the eager-checkpoint round-trip, envelope mins 10.458 vs 13.822 s — bench_out/rebench_dsir_materialize_r11.json) + target featurize + final weight join-back; the r10 x3-target tt/ts re-aggregation defect is fixed (window totals, dsir_log_ratios)",
+    "q_dsir_weights": "pool featurize x2 (measured no-checkpoint choice: recompute beat the eager-checkpoint round-trip, envelope mins 10.458 vs 13.822 s — bench_out/rebench_dsir_materialize_r11.json) + target featurize + final weight join-back; the r10 x3-target tt/ts re-aggregation defect is fixed (window totals, dsir_log_ratios)",
     "q_dsir_resample": "same 4-scan shape as q_dsir_weights (resample is TakeOrderedAndProject on top, adds no scan)",
     "q_spec_curation": "perplexity_buckets dispatched through run_spec: identical 3-scan shape to q_perplexity_buckets (documented 2-tokenize + language join-back)",
     "q_cluster_safe_split": "planted-copy union fixture (docs + prefix-clipped twins from one table)",

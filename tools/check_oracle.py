@@ -110,18 +110,14 @@ def main() -> int:
     if unknown:
         print(f"unknown queries: {unknown}; available: {sorted(registry.QUERIES)}")
         return 2
-    def _release_new_rdds(keep: set) -> None:
-        """bench.py's block-release discipline (bench.py:144): operators that
-        localCheckpoint/persist internally (LSH bucketing, Lloyd loops, GD
-        epochs) leave RDD blocks behind; across a 196-query gate session the
-        accumulation inflates LATE queries' recorded spark_sec with GC
-        pressure (r13 measured q_ivf_topk 14.5 s → 58.5 s across two
-        back-to-back iterations in one JVM). Released after every query so
-        gate timings stay comparable front-to-back."""
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keys()):
-            if rid not in keep:
-                jmap[rid].unpersist()
+    # bench.py's block-release discipline: operators that localCheckpoint/
+    # persist internally (LSH bucketing, Lloyd loops, GD epochs) leave RDD
+    # blocks behind; across a 196-query gate session the accumulation
+    # inflates LATE queries' recorded spark_sec with GC pressure (r13
+    # measured q_ivf_topk 14.5 s → 58.5 s across two back-to-back
+    # iterations in one JVM). Released after every query so gate timings
+    # stay comparable front-to-back.
+    from bench import _release_new_rdds
 
     failures = []
     results: dict[str, dict] = {}
@@ -138,7 +134,7 @@ def main() -> int:
             failures.append(name)
             continue
         finally:
-            _release_new_rdds(set())
+            _release_new_rdds(spark, set())
         spark_t = time.time() - t0
         if name not in registry.ORACLES:
             print(f"weak  {name}: rows={len(srows)} (no oracle) [{spark_t:.1f}s]")

@@ -9,8 +9,9 @@ eager materialization so the next prefix reuses nothing un-checkpointed:
 
   t_phash — perceptual_hash (mapInPandas decode + batched DCT) -> checkpoint
   t_pairs — simhash_near_pairs over the materialized signatures -> checkpoint
-            (materialize=False: the signature frame is already checkpointed,
-            so this prefix times ONLY the Manku blocking join + verify)
+            (its own (id, signature) checkpoint re-reads the already
+            checkpointed frame, so this prefix times the Manku blocking
+            join + verify plus one narrow copy)
   t_anti  — dupes distinct + left_anti back onto the media frame -> noop
 
 Also records n_sigs / n_pairs / n_dupes: a pair count growing faster than
@@ -69,7 +70,7 @@ def main() -> None:
     pairs = timed(
         "t_pairs",
         lambda: D.simhash_near_pairs(
-            sigs, "media_id", sim_col="phash", max_hamming=3, materialize=False
+            sigs, "media_id", sim_col="phash", max_hamming=3
         ).localCheckpoint(eager=True),
     )
     counts["n_pairs"] = pairs.count()

@@ -77,7 +77,7 @@ Notes on specific plans:
   (localCheckpoint): without them the plan audit showed events scanned 6×
   (stage N+1 replaying stage N's subtree through the broadcast) vs once
   per stage filter with them. Anchors are user-count-sized, never
-  events-sized — see conversion_funnel's materialize docstring for the
+  events-sized — see conversion_funnel's docstring for the
   100× spill posture.
 - **q_retention_cohorts** — ONE events scan: the first-seen cohort week
   rides a window over the same shuffle as the activity dedup (the r3

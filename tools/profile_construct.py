@@ -27,12 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _release_new_rdds(spark, keep: set) -> None:
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(jmap.keys()):
-        if rid not in keep:
-            jmap[rid].unpersist()
+from bench import _release_new_rdds  # noqa: E402
 
 
 def main() -> None:

@@ -25,23 +25,12 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _release_new_rdds  # noqa: E402
+
 
 def _api(base: str, path: str):
     with urllib.request.urlopen(base + path, timeout=10) as r:
         return json.loads(r.read().decode())
-
-
-def _release_new_rdds(spark, keep: set) -> None:
-    """bench.py's block-release discipline: unpersist RDD blocks queries
-    localCheckpoint/persist internally, so accumulated blocks don't inflate
-    later samples with GC pressure (bench measured up to +85% without it —
-    and this profiler's first version reproduced exactly that: the 4th
-    query in a session showed 3.8x executor-time inflation on stages whose
-    code had not changed)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(jmap.keys()):
-        if rid not in keep:
-            jmap[rid].unpersist()
 
 
 def profile(names: list[str], sf_dir: str, iters: int) -> dict:

@@ -25,14 +25,16 @@ def wkt_polygon_vertices(wkt: Column) -> Column:
     """POLYGON((x1 y1, x2 y2, ...)) → array<struct<x:double, y:double>>.
 
     The outer ring only; the closing vertex is kept (harmless for ray
-    casting, as the closing edge has zero extent when repeated)."""
+    casting, as the closing edge has zero extent when repeated). A pair
+    that does not parse gives NULL coordinates, which contain no point,
+    instead of failing the query on an out-of-range index."""
     inner = F.regexp_extract(wkt, r"\(\(([^)]*)\)\)", 1)
     pairs = F.split(inner, r",\s*")
     return F.transform(
         pairs,
         lambda p: F.struct(
-            F.split(F.trim(p), r"\s+").getItem(0).try_cast("double").alias("x"),
-            F.split(F.trim(p), r"\s+").getItem(1).try_cast("double").alias("y"),
+            F.get(F.split(F.trim(p), r"\s+"), 0).try_cast("double").alias("x"),
+            F.get(F.split(F.trim(p), r"\s+"), 1).try_cast("double").alias("y"),
         ),
     )
 
@@ -82,8 +84,8 @@ def wkt_rings(wkt: Column) -> Column:
         return F.transform(
             pairs,
             lambda p: F.struct(
-                F.split(F.trim(p), r"\s+").getItem(0).try_cast("double").alias("x"),
-                F.split(F.trim(p), r"\s+").getItem(1).try_cast("double").alias("y"),
+                F.get(F.split(F.trim(p), r"\s+"), 0).try_cast("double").alias("x"),
+                F.get(F.split(F.trim(p), r"\s+"), 1).try_cast("double").alias("y"),
             ),
         )
 

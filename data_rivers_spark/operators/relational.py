@@ -612,8 +612,9 @@ def range_join_bucketed(
     predicate filters after.
 
     Without bucketing, an inequality-only join is a cartesian
-    BroadcastNestedLoopJoin — fine for broadcast-sized interval dims (see
-    geo.revgeo_timebound_join) but O(n·m) otherwise. Bucketing makes it a
+    BroadcastNestedLoopJoin — O(n·m); a dim of a few hundred intervals is
+    better folded into the plan as an array literal (see
+    geo.revgeo_timebound_join). Bucketing makes it a
     hash join whose fan-out is interval_span/bucket_width. Pick bucket_width
     near the median interval length."""
     p = points.withColumn(

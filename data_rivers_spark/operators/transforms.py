@@ -636,7 +636,7 @@ def get_vals_from_crosswalk(
     (constant-folded) — for big crosswalks use a broadcast join instead."""
     pairs = [x for kv in crosswalk.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
     mapping = F.create_map(*pairs) if pairs else F.create_map()
-    looked = mapping.getItem(F.col(source_field))
+    looked = mapping[F.col(source_field)]
     return df.withColumn(update_field, F.coalesce(looked, F.col(source_field)))
 
 
@@ -751,7 +751,7 @@ def decode_status(df: DataFrame, code_field: str = "status_code", name_field: st
     mapping = F.create_map(
         *[x for kv in QALERT_STATUS_MAP.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
     )
-    return df.withColumn(name_field, mapping.getItem(F.col(code_field).try_cast("int")))
+    return df.withColumn(name_field, mapping[F.col(code_field).try_cast("int")])
 
 
 def get_closed_date(df: DataFrame, status_field: str = "status_name") -> DataFrame:

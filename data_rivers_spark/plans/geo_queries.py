@@ -60,8 +60,9 @@ def _order_points(orders: DataFrame) -> DataFrame:
     """,
 )
 def q_revgeo_timebound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Timebound reverse-geocode spatial join (geo_queries.py:4-108): broadcast
-    polygon zones, ray-casting containment + validity-interval condition."""
+    """Timebound reverse-geocode spatial join (geo_queries.py:4-108): the 25
+    nation zones are attached as one prepared array literal, with no join —
+    ray-casting containment + validity-interval condition per point."""
     t = load_tables(spark, sf_dir, ["orders", "nation"])
     zones = t["nation"].select(
         F.col("n_name").alias("zone"),
@@ -162,8 +163,8 @@ def q_spec_geojoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-spec over nation. No extra_ops injection: ``revgeo_timebound`` and
     ``city_limits_classify`` are first-class spec verbs (round-5; closes
     the VERDICT r4 spec-layer gap). The interpreter only assembles the lazy
-    plan, so Catalyst sees the same broadcast BNLJ/grid choice as the
-    hand-written q_revgeo_timebound."""
+    plan, so Catalyst sees the same join-free projection (or, past the grid
+    threshold, grid join) as the hand-written q_revgeo_timebound."""
     from data_rivers_spark.plans.spec import run_spec
 
     rect = (
@@ -369,7 +370,9 @@ def q_revgeo_multizone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-zone-type revgeo enrichment — the reference's 8-way LEFT OUTER
     spatial join shape (geo_queries.py:4-108: neighborhoods, wards,
     council_districts, …), here with three independently-gridded zone dims
-    chained through revgeo_multi_zone, each broadcast."""
+    attached through revgeo_multi_zone: each is at most 512 zones, so each
+    becomes one explode_outer over a prepared array literal — no join and
+    no broadcast exchange in the plan."""
     from data_rivers_spark.operators.geo import revgeo_multi_zone
 
     t = load_tables(spark, sf_dir, ["orders", "nation", "supplier", "region"])
@@ -435,12 +438,12 @@ def q_revgeo_multizone_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     zones explode into the coarse cells their bbox covers, the probe side
     keys on its point's cell, and the join becomes a BroadcastHashJoin on
     (cx, cy) with the exact bbox/polygon predicate as a residual — the plan
-    shape that wins once the BroadcastNestedLoopJoin's per-zone bbox
-    prefilter evaluations dominate (measured crossover ≈ 512-1024 zones,
-    SCALING.md — the BNLJ short-circuits before the ray cast, so it holds
-    longer than naive cost models predict). Identical results to the BNLJ
-    path by construction (the grid only prefilters candidate pairs), same
-    oracle; benched side by side so both strategies stay timed."""
+    shape that wins once the projection's per-zone bbox prefilter
+    evaluations dominate (SCALING.md crossover table — the prefilter
+    short-circuits before the ray cast, so the projection holds longer than
+    naive cost models predict). Identical results to the projection by
+    construction (the grid only prefilters candidate pairs), same oracle;
+    benched side by side so both strategies stay timed."""
     from data_rivers_spark.operators.geo import revgeo_multi_zone
 
     t = load_tables(spark, sf_dir, ["orders", "nation", "supplier", "region"])

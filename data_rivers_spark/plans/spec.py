@@ -323,8 +323,8 @@ def _revgeo_timebound(df: DataFrame, params: dict, subframe) -> DataFrame:
     """Spec verb for the QAlert DAG's centerpiece (qalert_airflow.py:134-146):
     ``zones`` is a nested input — a bare source ({'table': ...}/{'path': ...})
     or a full sub-spec with its own steps — and the remaining params pass
-    through to operators.geo.revgeo_timebound_join (grid/BNLJ auto-choice
-    included)."""
+    through to operators.geo.revgeo_timebound_join (its projection/grid
+    auto-choice included)."""
     zones = subframe(params["zones"])
     return G.revgeo_timebound_join(
         df, zones, **{k: v for k, v in params.items() if k != "zones"}

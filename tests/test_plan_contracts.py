@@ -132,11 +132,21 @@ def test_q01_agg_shape(spark):
 def test_broadcast_joins_forced(spark):
     # operators that broadcast() a small side must plan a broadcast join on
     # it — the fact side never hash-repartitions on the join key
-    for name in ("q_cosine_topk", "q_revgeo_timebound"):
-        plan = _plan(spark, name)
-        assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, (
-            f"{name} lost its broadcast:\n{plan}"
-        )
+    plan = _plan(spark, "q_cosine_topk")
+    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, (
+        f"q_cosine_topk lost its broadcast:\n{plan}"
+    )
+    # revgeo attaches its small zone table with a projection, the stronger
+    # form of the same contract: the executed plan holds no join at all, so
+    # nothing is broadcast and the fact side is never hash-repartitioned
+    from data_rivers_spark.plans import registry
+
+    df = registry.QUERIES["q_revgeo_timebound"](spark, SF_DIR)
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in executed
+    assert not re.search(r"Join|CartesianProduct|BroadcastExchange|hashpartitioning",
+                         executed), executed
 
 
 def test_chunk_documents_single_codegen_stage(spark):

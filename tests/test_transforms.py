@@ -334,6 +334,18 @@ def test_decode_status_and_closed_date(spark):
     assert out[1]["status_name"] == "closed" and out[1]["closed_date_utc"] == "u2"
 
 
+def test_map_lookups_raise_no_future_warning(spark):
+    """``Column.getItem(<Column>)`` is deprecated and warns before forwarding
+    to ``column[key]``; both map lookups index the map directly."""
+    import warnings
+
+    df = spark.createDataFrame([(0, "A"), (1, "Z")], ["status_code", "code"])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = X.decode_status(X.get_vals_from_crosswalk(df, {"A": "Alpha"}, "code", "name"))
+    assert [(r["name"], r["status_name"]) for r in rows(out)] == [("Alpha", "open"), ("Z", "closed")]
+
+
 def test_detect_child_ticket(spark):
     df = spark.createDataFrame([(0,), (12345,)], ["parent_ticket_id"])
     assert [r["child_ticket"] for r in rows(X.detect_child_ticket(df))] == [False, True]

@@ -31,11 +31,15 @@ first-appearance order, so regenerating unchanged plans is a no-op diff.
 Notes on specific plans:
 
 - **q_revgeo_multizone** — the points side is spread by `fan_out` (single
-  Exchange RoundRobin near the scan), then flows through 8 chained broadcast
-  joins in ONE stage: the fact stream is scanned once, never shuffled on a
-  key, and every zone table builds a broadcast. Past the measured crossover
-  (grid_threshold=512 zones — SCALING.md) the join keys on grid cells
-  (BroadcastHashJoin) instead of pure bbox conditions.
+  Exchange RoundRobin near the scan), then flows through one `Generate`
+  per zone type in ONE stage: a zone table of at most grid_threshold=512
+  zones (SCALING.md) is an array literal folded into the plan
+  (`explode_outer(filter(<zones>, z -> bbox AND interval AND ray cast))`),
+  so it adds no join, no BroadcastExchange and no zone-side scan. At sf0.1
+  the `ward` type has 1,000 supplier zones, past the threshold, so it alone
+  is attached with the grid-cell BroadcastHashJoin — the one
+  BroadcastExchange in this plan (at sf0.01 there are 100 and the plan
+  holds no join).
 - **q_minhash_lsh_dedup** — the shared shingle-set frame and the
   duplicate-id frame are eagerly localCheckpointed inside the operator
   (dedup.py minhash_lsh_verified_pairs/minhash_lsh_dedup), so the final plan
@@ -93,9 +97,9 @@ Notes on specific plans:
   a substring sequence, and the rest of the pipeline is shared code.
 - **q_revgeo_multizone_grid** — the forced grid variant: each zone join is
   a BroadcastHashJoin keyed on (cell_x, cell_y) with the exact predicate
-  residual, vs the BNLJ of q_revgeo_multizone. Compare the two sections —
-  same result, different join strategy; SCALING.md locates the zone-count
-  crossover.
+  residual, vs the join-free projection of q_revgeo_multizone. Compare the
+  two sections — same result, different strategy; SCALING.md locates the
+  zone-count crossover.
 - **q_media_phash_dedup** — ArrowEvalPython/MapInPandas feeds the pHash;
   the hamming join is the same combination-blocked equi-join as text
   SimHash (Generate over 20 packed keys → SortMergeJoin/BHJ on the key).

@@ -1,5 +1,5 @@
 """Measure operator scaling: wall time at 1x / 4x / 16x / 64x corpus size,
-plus the revgeo BNLJ-vs-grid join-strategy crossover by zone count.
+plus the revgeo projection-vs-grid strategy crossover by zone count.
 
 Usage: python tools/scaling.py [sf_dir]   (writes SCALING.md)
 
@@ -13,14 +13,15 @@ shuffle-bounded operator should show locally), ~16 would mean quadratic
 blowup — the smell this repo's bucket caps / blocking / banding exist to
 prevent.
 
-The second table times the SAME timebound revgeo join under both physical
-strategies — BroadcastNestedLoopJoin (grid=False: every point evaluates
-every zone's predicate) vs the grid-cell BroadcastHashJoin (grid=True:
-zones explode into coarse cells, points key on their cell, the exact
-predicate is a residual) — across growing zone counts on a fixed point
-table. BNLJ cost grows linearly with zones; grid cost tracks
-zones-per-cell (≈ constant for tiling zones), so the table locates the
-zone count where the default `grid_threshold=64` auto-switch should flip.
+The second table times the SAME timebound revgeo under both physical
+strategies — the join-free projection (grid=False: the zones sit in the
+plan as one array literal and every point filters all of them) vs the
+grid-cell BroadcastHashJoin (grid=True: zones explode into coarse cells,
+points key on their cell, the exact predicate is a residual) — across
+growing zone counts on a fixed point table. The projection's cost grows
+linearly with zones; grid cost tracks zones-per-cell (≈ constant for
+tiling zones), so the table locates the zone count where the default
+`grid_threshold=512` auto-switch should flip.
 
 Local caveat: local[32] with a warm page cache under-weights scan IO, so
 constant factors here flatter scan-heavy ops; the EXPONENT is the signal.
@@ -735,8 +736,11 @@ def operator_scaling_octave(sf_dir: str, k: int) -> dict[str, dict[int, float]]:
 
 
 def revgeo_crossover(spark, sf_dir: str) -> list[tuple[int, float, float]]:
-    """Time one timebound revgeo join, BNLJ vs grid, at growing zone counts
-    over a fixed point table (orders at the given sf)."""
+    """Time one timebound revgeo, projection vs grid, at growing zone counts
+    over a fixed point table (orders at the given sf). Each zone frame is
+    prepared (one small job) on its first run, which the warmup or the
+    first of the three timed runs absorbs; the min is the steady state a
+    session with static zone tables sees."""
     from data_rivers_spark.operators.geo import revgeo_timebound_join
     from data_rivers_spark.session import load_tables
 
@@ -747,7 +751,7 @@ def revgeo_crossover(spark, sf_dir: str) -> list[tuple[int, float, float]]:
         ((F.col("o_custkey") % 9) + 0.25).alias("py"),
         F.col("o_orderdate").cast("timestamp").alias("create_date"),
     ).cache()
-    # cache(), NOT localCheckpoint: Spark 4.1.2's BNLJ flakily fails binding
+    # cache(), NOT localCheckpoint: Spark 4.1.2's joins flakily fail binding
     # with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND when a join side is a
     # checkpointed-RDD scan created early in a fresh session (exprId reuse in
     # DeduplicateRelations); caching keeps the logical plan so the optimizer
@@ -786,7 +790,7 @@ def revgeo_crossover(spark, sf_dir: str) -> list[tuple[int, float, float]]:
                 F.lit(None).cast("timestamp").alias("end_date"),
             )
             # NOT localCheckpointed: Spark 4.1.2 hits
-            # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND binding the BNLJ when BOTH
+            # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND binding a join when BOTH
             # join sides are checkpointed-RDD scans (reproduced minimally:
             # pts ckpt + zones ckpt fails, either alone is fine). Zones are
             # ≤1024 synthetic rows — re-deriving them per run costs nothing,
@@ -804,9 +808,9 @@ def revgeo_crossover(spark, sf_dir: str) -> list[tuple[int, float, float]]:
             )
 
         if not warmed:
-            # JIT/codegen warmup for BOTH join strategies before any timed
-            # run — the first harness version skipped this and warmup drift
-            # swamped the zone-count signal (BNLJ "cost" fell 16→256 zones)
+            # JIT/codegen warmup for BOTH strategies before any timed run —
+            # the first harness version skipped this and warmup drift
+            # swamped the zone-count signal (its cost fell 16→256 zones)
             run_once(False)
             run_once(True)
             warmed = True
@@ -1391,15 +1395,17 @@ def write_report(
     results = _merge_min(
         results,
         {
-            "revgeo_bnlj": {n: b for n, b, _ in fresh_x},
+            # not "revgeo_bnlj": that key holds the retired nested-loop
+            # join's history, which must not min-merge into these cells
+            "revgeo_projection": {n: p for n, p, _ in fresh_x},
             "revgeo_grid": {n: g for n, _, g in fresh_x},
         },
     )
     with open(RESULTS_JSON, "w") as f:
         json.dump({**results, "_config": OP_CONFIG}, f, indent=1, sort_keys=True)
     xrows = [
-        (n, results["revgeo_bnlj"][n], results["revgeo_grid"][n])
-        for n in sorted(results.get("revgeo_bnlj", {}))
+        (n, results["revgeo_projection"][n], results["revgeo_grid"][n])
+        for n in sorted(results.get("revgeo_projection", {}))
     ]
 
     n0 = (
@@ -1503,22 +1509,21 @@ def write_report(
             vals = " | ".join(str(r.get(k, "—")) for k in render_ks)
             lines.append(f"| {name} | {vals} |\n")
     lines += [
-        "\n## Revgeo join strategy: BroadcastNestedLoopJoin vs grid-cell "
+        "\n## Revgeo strategy: join-free projection vs grid-cell "
         "BroadcastHashJoin by zone count\n",
-        "\nSame timebound revgeo join (orders points at this sf, tiling "
-        "rectangle zones), warmup pass then min of 3 runs. BNLJ evaluates "
-        "every zone's bbox prefilter per point (4 comparisons, short-"
-        "circuiting before the ray cast), so its cost grows gently with "
-        "zones; the grid pays a fixed explode+hash overhead but per-point "
-        "work tracks zones-per-cell. This table is the measurement behind "
-        "the `grid_threshold=512` auto default: BNLJ holds until the high "
-        "hundreds of zones at this polygon complexity.\n",
-        "\n| zones | BNLJ (s) | grid (s) | grid speedup |\n",
+        "\nSame timebound revgeo (orders points at this sf, tiling "
+        "rectangle zones), warmup pass then min of 3 runs. The projection "
+        "evaluates every zone's bbox prefilter per point (4 comparisons, "
+        "short-circuiting before the ray cast), so its cost grows gently "
+        "with zones; the grid pays a fixed explode+hash overhead but "
+        "per-point work tracks zones-per-cell. This table is the "
+        "measurement behind the `grid_threshold=512` auto default.\n",
+        "\n| zones | projection (s) | grid (s) | grid speedup |\n",
         "|---|---|---|---|\n",
     ]
-    for n_zones, t_bnlj, t_grid in xrows:
+    for n_zones, t_proj, t_grid in xrows:
         lines.append(
-            f"| {n_zones} | {t_bnlj} | {t_grid} | {round(t_bnlj / t_grid, 2)}x |\n"
+            f"| {n_zones} | {t_proj} | {t_grid} | {round(t_proj / t_grid, 2)}x |\n"
         )
     with open(
         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALING.md"),

@@ -41,18 +41,42 @@ Round-7 additions, closing the r6 verdict's two measurement gaps:
    entirely); round close commits it as bench_out/rN.json. The stdout
    JSON also orders the headline aggregates (queries/min/value/calib)
    LAST so the tail the driver retains contains the numbers that matter.
+
+Options (without any, the headline run above):
+
+  python bench.py --only Q [Q ...]          # named registered queries
+  python bench.py --only Q [Q ...] --trace  # + one traced iteration each
+
+``--only`` keeps the cold-JVM protocol (same children, warmup, timed
+samples, telemetry) over the named queries instead of ``HEADLINE``. Its
+stdout line carries ``"only"`` and a distinct metric name, it writes only
+the gitignored bench_out/latest.json and never regenerates PLANS.md, so a
+subset run cannot stand in for the headline record. ``--trace`` adds, after
+each query's timed samples, one traced iteration that is never a timed
+sample: perfbench/spans.Tracer (job-group tags + the Spark status store, so
+it works with the UI off) records a ``plans`` span around the query's
+construction, a ``sink`` span around the noop save, and one span per call
+into any ``data_rivers_spark.operators.*`` function (layer = module name).
+Per query the artifact keeps the per-layer totals, the span list and the
+traced vs untraced wall. For a driver-side Python profile, run one child
+under cProfile: ``python -m cProfile -s cumulative bench.py --child --only Q``.
 """
 
 from __future__ import annotations
 
+import argparse
+import importlib
 import json
 import os
+import pkgutil
 import re
 import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+OUT_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out")
 
 HEADLINE = [
     # TPC-H-shaped scan/join/agg core
@@ -196,8 +220,11 @@ class _JvmTelemetry:
         )
 
 
-def run_child(sf_dir: str, gen_plans_after: bool) -> None:
-    """One cold-JVM measurement cell: warmup + iters x every headline query.
+def run_child(
+    sf_dir: str, gen_plans_after: bool, names: list[str], trace: bool
+) -> None:
+    """One cold-JVM measurement cell: warmup + iters x every query in
+    ``names`` (+ one traced iteration per query with ``trace``).
 
     Prints a child JSON line (parent aggregates): {"queries": medians,
     "iters": raw}. When ``gen_plans_after`` is set, also regenerates
@@ -219,7 +246,7 @@ def run_child(sf_dir: str, gen_plans_after: bool) -> None:
     # query, independent of suite order), keeping cross-round comparability
     # without giving up cold-JVM run isolation.
     keep = set()
-    for name in HEADLINE:
+    for name in names:
         registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
@@ -248,12 +275,13 @@ def run_child(sf_dir: str, gen_plans_after: bool) -> None:
     times: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
     telem: dict[str, list[dict]] = {}
+    traces: dict[str, dict] = {}
     jvm = _JvmTelemetry(spark)
     # NOTE: an explicit System.gc() per sample was tried and REJECTED — it
     # produced an 18.8s first-iteration outlier on the curation pipeline
     # (full GC landing mid-query) and no measurable stabilization; the
     # across-run min already absorbs heap-state and host noise.
-    for name in HEADLINE:
+    for name in names:
         fn = registry.QUERIES[name]
         samples: list[float] = []
         tsamples: list[dict] = []
@@ -275,6 +303,10 @@ def run_child(sf_dir: str, gen_plans_after: bool) -> None:
         raw[name] = samples
         telem[name] = tsamples
         times[name] = sorted(samples)[len(samples) // 2]
+        if trace:
+            traces[name] = {"untraced_s": times[name],
+                            **_trace_query(spark, fn, sf_dir)}
+            _release_new_rdds(spark, keep)
 
     if gen_plans_after and not os.environ.get("SPARK_GRAFT_SKIP_PLANS"):
         sys.path.insert(
@@ -285,28 +317,102 @@ def run_child(sf_dir: str, gen_plans_after: bool) -> None:
         gen_plans.generate(spark, sf_dir, HEADLINE)
         print("PLANS.md regenerated", file=sys.stderr)
 
-    print(
-        json.dumps(
-            {"queries": times, "iters": raw, "telemetry": telem, "calib_sec": calib}
-        )
-    )
+    out = {"queries": times, "iters": raw, "telemetry": telem, "calib_sec": calib}
+    if trace:
+        out["trace"] = traces
+    print(json.dumps(out))
 
 
-def main() -> None:
+def _trace_query(spark, fn, sf_dir: str) -> dict:
+    """One traced iteration of a registered query ``fn``: its construction
+    in a ``plans`` span, the noop save in a ``sink`` span, and every public
+    function of every ``data_rivers_spark.operators.*`` module wrapped in a
+    span whose layer is the module name (unwrapped in ``finally``, also when
+    the query raises). Operator spans localCheckpoint their DataFrame
+    results, so each operator's lazy work runs inside its own span; the
+    traced wall therefore reads above an untraced sample's.
+
+    Returns the traced wall, the per-layer totals of the layers that ran
+    and the span list (start/end in seconds from the plans span's start)."""
+    from data_rivers_spark import operators
+    from perfbench.spans import Tracer
+
+    tracer = Tracer(spark, "bench")
+    tracer.harvest()  # jobs run before this trace belong to no span
+    saved = []
+    try:
+        for info in pkgutil.iter_modules(operators.__path__):
+            mod = importlib.import_module(f"{operators.__name__}.{info.name}")
+            saved += tracer.wrap_module(mod, info.name)
+        t0 = time.time()
+        with tracer.span("plans", fn.__name__):
+            df = fn(spark, sf_dir)
+        with tracer.span("sink", "noop"):
+            df.write.format("noop").mode("overwrite").save()
+        wall = time.time() - t0
+    finally:
+        Tracer.unwrap(saved)
+    tracer.harvest()
+    ran = {sp.layer for sp in tracer.spans}
+    return {
+        "traced_s": round(wall, 3),
+        "layers": {
+            layer: {k: round(v, 3) for k, v in row.items()}
+            for layer, row in tracer.layer_totals().items()
+            if layer in ran
+        },
+        "spans": [
+            {"id": sp.sid, "parent": sp.parent, "name": f"{sp.layer}.{sp.fn}",
+             "start": round(sp.start - t0, 3), "end": round(sp.end - t0, 3),
+             "jobs": sp.jobs, "tasks": sp.tasks,
+             "executor_run_s": round(sp.run_s, 3),
+             "executor_cpu_s": round(sp.cpu_s, 3),
+             "shuffle_write_mb": round(sp.shuffle_write_b / 1e6, 3),
+             "spill_mb": round(sp.spill_b / 1e6, 3)}
+            for sp in tracer.spans
+        ],
+    }
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(
+        description="Cold-JVM query bench (see the module docstring).")
+    ap.add_argument("--only", nargs="+", metavar="Q",
+                    help="time these registered queries instead of HEADLINE; "
+                         "writes no round record and leaves PLANS.md alone")
+    ap.add_argument("--trace", action="store_true",
+                    help="after each query's timed samples, one traced "
+                         "iteration (per-layer spans) into the artifact")
+    ap.add_argument("--child", action="store_true", help=argparse.SUPPRESS)
+    ap.add_argument("--plans", action="store_true", help=argparse.SUPPRESS)
+    args = ap.parse_args(argv)
+    names = list(dict.fromkeys(args.only)) if args.only else HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if "--child" in sys.argv:
-        run_child(sf_dir, gen_plans_after="--plans" in sys.argv)
+    if args.child:
+        run_child(sf_dir, args.plans, names, args.trace)
         return
+    if args.only:
+        from data_rivers_spark.plans import registry
+
+        registry.load_all()
+        unknown = [q for q in names if q not in registry.QUERIES]
+        if unknown:
+            raise SystemExit(f"bench: unknown query: {' '.join(unknown)}")
 
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     per_run: list[dict[str, float]] = []
     calibs: list[float] = []
-    all_iters: dict[str, list[float]] = {q: [] for q in HEADLINE}
-    all_telem: dict[str, list[dict]] = {q: [] for q in HEADLINE}
+    all_iters: dict[str, list[float]] = {q: [] for q in names}
+    all_telem: dict[str, list[dict]] = {q: [] for q in names}
+    all_trace: dict[str, list[dict]] = {q: [] for q in names}
     for i in range(runs):
         argv = [sys.executable, os.path.abspath(__file__), "--child"]
-        if i == runs - 1:
+        if args.only:
+            argv += ["--only", *names]
+        elif i == runs - 1:
             argv.append("--plans")  # last (already-measured) session pays it
+        if args.trace:
+            argv.append("--trace")
         proc = subprocess.run(argv, capture_output=True, text=True)
         if proc.returncode != 0:
             sys.stderr.write(proc.stderr[-4000:])
@@ -318,12 +424,21 @@ def main() -> None:
             all_iters[q].extend(samples)
         for q, tsamples in child.get("telemetry", {}).items():
             all_telem[q].extend({**t, "run": i} for t in tsamples)
+        for q, rec in child.get("trace", {}).items():
+            all_trace[q].append({**rec, "run": i})
+            layers = " ".join(
+                f"{layer} {row['wall_s']:.2f}" for layer, row in rec["layers"].items()
+            )
+            sys.stderr.write(
+                f"trace {q}: traced {rec['traced_s']:.2f}s untraced "
+                f"{rec['untraced_s']:.2f}s | layer wall_s: {layers}\n"
+            )
         sys.stderr.write(
             f"run {i + 1}/{runs}: total {round(sum(child['queries'].values()), 3)}s\n"
         )
 
-    merged = {q: min(r[q] for r in per_run) for q in HEADLINE}
-    mins = {q: min(all_iters[q]) for q in HEADLINE}
+    merged = {q: min(r[q] for r in per_run) for q in names}
+    mins = {q: min(all_iters[q]) for q in names}
     # name the cause of every >3x-of-min sample: "gc" when the sample's GC
     # delta covers >=50% of its excess over the query min, else "host"
     # (shared-machine contention — nothing inside the JVM accounts for it)
@@ -339,7 +454,7 @@ def main() -> None:
             outliers[q] = flagged
 
     result = {
-        "metric": "headline_queries_total",
+        "metric": "only_queries_total" if args.only else "headline_queries_total",
         "unit": "sec",
         "bench_runs": runs,
         "sf": _sf_of(sf_dir),
@@ -358,6 +473,10 @@ def main() -> None:
         "calib_sec": min([c for c in calibs if c is not None], default=None),
         "value": round(sum(merged.values()), 3),
     }
+    if args.only:
+        result["only"] = names
+    if args.trace:
+        result["trace"] = all_trace
     # persist the COMPLETE artifact (the driver's 2,000-char stdout tail
     # lost r6's per-run medians; bench_out/rN.json is committed per round).
     # latest.json is per-run scratch and GITIGNORED — every bench run
@@ -366,13 +485,13 @@ def main() -> None:
     # record is the round-stamped copy written when $SPARK_GRAFT_BENCH_TAG
     # is set (e.g. r08 — r7's round-close artifact survived only because
     # the driver's snapshot commit happened to land before the next run).
-    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out")
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "latest.json"), "w") as f:
+    # An --only run is never a round record: latest.json only.
+    os.makedirs(OUT_DIR, exist_ok=True)
+    with open(os.path.join(OUT_DIR, "latest.json"), "w") as f:
         json.dump(result, f, indent=1)
-    tag = os.environ.get("SPARK_GRAFT_BENCH_TAG") or _round_tag()
+    tag = None if args.only else os.environ.get("SPARK_GRAFT_BENCH_TAG") or _round_tag()
     if tag and re.fullmatch(r"[A-Za-z0-9._-]+", tag):
-        path = _tag_artifact_path(out_dir, tag)
+        path = _tag_artifact_path(OUT_DIR, tag)
         with open(path, "w") as f:
             json.dump(result, f, indent=1)
     # The stdout contract line must be TAIL-PROOF: the driver keeps only a
@@ -397,7 +516,7 @@ def _stdout_line(result: dict) -> dict:
     return {
         k: result[k]
         for k in (
-            "metric", "unit", "bench_runs", "sf", "queries",
+            "metric", "unit", "bench_runs", "sf", "only", "queries",
             "calib_sec", "value",
         )
         if k in result

@@ -105,11 +105,7 @@ class ManagedCatalog:
             writer = writer.partitionBy(*partition_by)
         path = self._data_dir(name, new)
         writer.parquet(path)
-        tmp = self._pointer(name) + f".tmp.{time.time_ns()}"
-        with open(tmp, "w") as f:
-            json.dump({"version": new, "updated_ns": time.time_ns()}, f)
-        os.replace(tmp, self._pointer(name))  # atomic pointer swap
-        self._gc(name, new)
+        self._swap_pointer(name, new)
 
     def _gc(self, name: str, current: int) -> None:
         tdir = self._tdir(name)

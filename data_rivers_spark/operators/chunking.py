@@ -234,8 +234,8 @@ def chunk_by_sentences(
     hash aggregate, both partitioned by the doc id — a single shuffle, no
     UDF, no all-pairs anything. NOT fanned out: r13 added a conditional
     fan_out here on an "≈ neutral" single-run A/B, but the r13 bench read
-    it −12% and the r14 bench-protocol A/B (cold-JVM envelope,
-    tools/rebench_one.py, 3 attempts × 3 samples per arm) confirmed the
+    it −12% and the r14 bench-protocol A/B (cold-JVM envelope of the
+    one query, 3 attempts × 3 samples per arm) confirmed the
     regression — 1.79 s envelope / ~2.14 s mean without vs 1.93 / ~2.51
     with: the sentence regex is too cheap per row to pay for the exchange,
     the same verdict chunk_documents got in r13. Single-split inputs run

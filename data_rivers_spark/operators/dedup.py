@@ -155,37 +155,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_LONG_MAX = 9223372036854775807
-
-
-def let_bound(value: Column, body) -> Column:
-    """Let-binding idiom for Catalyst expressions: evaluate ``value`` once and
-    reference it many times inside ``body`` without re-evaluation.
-
-    Catalyst has no let; CollapseProject inlines single-use projections into
-    consumers, so an expensive subexpression referenced inside a lambda gets
-    re-evaluated per lambda invocation. Binding it as the sole element of an
-    array and transforming makes it a lambda variable — computed once."""
-    return F.element_at(F.transform(F.array(value), body), 1)
-
-
-def minhash_signature_from_shingles(sh: Column, num_hashes: int = 32) -> Column:
-    """k-minhash signature as array<long>, computed as ONE fold over the
-    shingle array: acc[i] = min(acc[i], xxhash64(shingle, i)).
-
-    Why a fold: the naive per-seed formulation (k separate
-    array_min(transform(sh, …)) expressions) re-evaluates the shingle
-    subtree k times after projection collapsing — measured 3-4× slower at
-    k=32 on the documents corpus. The fold touches each shingle exactly once."""
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    init = F.array_repeat(F.lit(_LONG_MAX), num_hashes)
-    return F.aggregate(
-        sh,
-        init,
-        lambda acc, s: F.zip_with(acc, seeds, lambda m, i: F.least(m, F.xxhash64(s, i))),
-    )
-
-
 def shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
     """(id, __set) — each doc's DISTINCT n-gram shingle set as
     ``array<long>`` of xxhash64(shingle), built with the codegen explode
@@ -763,7 +732,7 @@ def incremental_lsh_dedup(
         )
     # LAZY sets + EAGER banded (r14): the eager sets_b barrier was one
     # of ~7 sequential driver-blocking jobs per composite run
-    # (profile_construct measured the barriers at ~60% of
+    # (a construct-vs-save split measured the barriers at ~60% of
     # q_incremental_dedup_grouped's per-iteration wall, with the noop
     # save at 0.3 s). Lazy marking persists + truncates the same
     # lineage, and banded_b's eager job materializes sets_b inside

@@ -134,11 +134,11 @@ def hashed_ngram_features(
                 )
         return F.flatten(F.array(*gram_arrays))
 
-    # NOTE on let_bound: wrapping ws in dedup.let_bound (evaluate-once) was
-    # tried and REJECTED — measured 3.9 s vs 1.6 s for the bare form at
-    # sf0.1; the extra array wrap/copy per row costs more than the repeated
-    # split saves here (the repeated subexpression is the cheap tokenize,
-    # not an expensive fold)
+    # NOTE on evaluate-once binding: binding ws once (as the sole element
+    # of an array, transformed and unwrapped) was tried and REJECTED —
+    # measured 3.9 s vs 1.6 s for the bare form at sf0.1; the extra array
+    # wrap/copy per row costs more than the repeated split saves here (the
+    # repeated subexpression is the cheap tokenize, not an expensive fold)
     grams = _grams(words(F.col(text_col)))
     tgt_sel = [F.col("__tgt")] if flag is not None else []
     exploded = df.select(

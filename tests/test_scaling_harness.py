@@ -1,11 +1,20 @@
-"""Pure-python contract tests for the scaling harness's history handling.
+"""Contract tests for the measurement harnesses.
 
 The SCALING.md table is only meaningful if every cell in a row measured
 the same algorithm (tools/scaling.py OP_CONFIG) and each cell is the
-min over cold-JVM attempts (_merge_min). These tests pin both without
-touching Spark.
+min over cold-JVM attempts (_merge_min). Those tests, and bench.py's
+artifact/stdout contracts, run without touching Spark; the bench trace
+test runs one small query in the session.
 """
 from __future__ import annotations
+
+import importlib
+import json
+import os
+import pkgutil
+import subprocess
+
+import pytest
 
 import tools.scaling as sc
 
@@ -136,3 +145,110 @@ def test_bytes_norm_top_normalizes_char_growth():
     assert sc._bytes_norm_top("kmeans_semantic_dedup", r2, render, byt2) == "3.9"
     # missing bytes for the top pair -> em dash, never a misleading number
     assert sc._bytes_norm_top("exact_dedup", {4: 1.0, 16: 4.0}, (4, 16), {}) == "—"
+
+
+def _operator_functions() -> dict[tuple[str, str], object]:
+    from data_rivers_spark import operators
+
+    out = {}
+    for info in pkgutil.iter_modules(operators.__path__):
+        mod = importlib.import_module(f"{operators.__name__}.{info.name}")
+        for name, fn in vars(mod).items():
+            if callable(fn) and getattr(fn, "__module__", None) == mod.__name__:
+                out[(mod.__name__, name)] = fn
+    return out
+
+
+def _unchanged(before: dict, after: dict) -> bool:
+    return before.keys() == after.keys() and all(
+        after[k] is fn for k, fn in before.items()
+    )
+
+
+def test_bench_trace_attributes_the_traced_wall_to_layers(spark, sf_dir):
+    """One traced iteration: construction in a ``plans`` span, the save in
+    a ``sink`` span, operator calls in spans named after their module; the
+    layer self-times add up to the traced wall, and every wrapped operator
+    function is the original object again afterwards, also when the query
+    raises."""
+    import bench
+    from data_rivers_spark.plans import registry
+
+    registry.load_all()
+    before = _operator_functions()
+    rec = bench._trace_query(spark, registry.QUERIES["q_minhash_lsh_dedup"], sf_dir)
+    assert _unchanged(before, _operator_functions())
+
+    assert {"plans", "sink"} <= {s["name"].split(".")[0] for s in rec["spans"]}
+    assert rec["layers"]["dedup"]["jobs"] > 0
+    wall = sum(row["wall_s"] for row in rec["layers"].values())
+    assert abs(wall - rec["traced_s"]) <= 0.05 * rec["traced_s"], (wall, rec)
+
+    def failing_query(spark_, sf_dir_):
+        from data_rivers_spark.operators import dedup
+
+        assert dedup.shingle_sets is not before[(dedup.__name__, "shingle_sets")]
+        raise RuntimeError("query failed mid-construction")
+
+    with pytest.raises(RuntimeError, match="mid-construction"):
+        bench._trace_query(spark, failing_query, sf_dir)
+    assert _unchanged(before, _operator_functions())
+
+
+def test_bench_only_rejects_unknown_query_before_any_child(monkeypatch):
+    import bench
+
+    def no_child(*args, **kwargs):
+        raise AssertionError("a bench child was started")
+
+    monkeypatch.setattr(subprocess, "run", no_child)
+    with pytest.raises(SystemExit) as exc:
+        bench.main(["--only", "q01_pricing_summary", "no_such_query"])
+    assert exc.value.code not in (0, None)
+    assert "no_such_query" in str(exc.value.code)
+    assert "q01_pricing_summary" not in str(exc.value.code)
+
+
+def test_bench_only_run_is_never_a_round_record(tmp_path, monkeypatch, capsys):
+    """A subset run writes only the scratch latest.json, never the
+    round-tagged record, never asks a child to regenerate PLANS.md, and its
+    stdout line names the queries it ran. A run without options still
+    launches the headline children, the last one with ``--plans``, and
+    writes the round record."""
+    import bench
+
+    def fake_children(names, calls):
+        def run(argv, **kwargs):
+            calls.append(argv[2:])
+            line = {"queries": {q: 1.0 for q in names},
+                    "iters": {q: [1.0, 1.2, 1.1] for q in names},
+                    "telemetry": {q: [{"sec": 1.0, "gc_sec": 0.0}] for q in names},
+                    "calib_sec": 0.3}
+            return subprocess.CompletedProcess(
+                argv, 0, stdout="PLANS.md noise\n" + json.dumps(line) + "\n", stderr="")
+        return run
+
+    monkeypatch.setattr(bench, "OUT_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_TAG", "r99")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "2")
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_OVERWRITE", raising=False)
+
+    calls: list[list[str]] = []
+    monkeypatch.setattr(subprocess, "run", fake_children(["q_exact_dedup"], calls))
+    bench.main(["--only", "q_exact_dedup"])
+    assert calls == [["--child", "--only", "q_exact_dedup"]] * 2
+    assert os.listdir(tmp_path) == ["latest.json"]
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert line["only"] == ["q_exact_dedup"]
+    assert set(line["queries"]) == {"q_exact_dedup"}
+    assert line["metric"] != "headline_queries_total"
+
+    calls.clear()
+    monkeypatch.setattr(subprocess, "run", fake_children(bench.HEADLINE, calls))
+    bench.main([])
+    assert calls == [["--child"], ["--child", "--plans"]]
+    assert sorted(os.listdir(tmp_path)) == ["latest.json", "r99.json"]
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert "only" not in line and line["metric"] == "headline_queries_total"
+    assert list(line) == ["metric", "unit", "bench_runs", "sf", "queries",
+                          "calib_sec", "value"]

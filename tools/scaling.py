@@ -38,6 +38,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
+
 KS = (1, 4, 16, 64, 256)
 # the report renders one extra octave: 1024x cells exist only for the rows
 # whose 64x->256x ratio sat >= 3.3 (one more doubling-pair decides
@@ -75,7 +77,7 @@ OP_CONFIG: dict[str, str] = {
     "signlsh_topk": "auto-depth-r9",
     # r10: pre-grouped (inverted-index) signature store — the row-form
     # store path's union+re-aggregation of the corpus-sized store was 46%
-    # of the 1024x cell (tools/decompose_incremental.py); row-form cells
+    # of the 1024x cell (a per-stage prefix decomposition); row-form cells
     # dropped, the whole row remeasures under the grouped store
     "incremental_lsh_dedup": "grouped-store-r10",
 }
@@ -182,17 +184,15 @@ def _time(fn) -> float:
 
 
 def _release_new_rdds(spark, keep: set) -> None:
-    """Unpersist every cached/checkpointed RDD not in `keep`.
+    """Unpersist every cached/checkpointed RDD not in `keep`
+    (``bench._release_new_rdds``), then run a driver ``System.gc()``.
 
     Operators localCheckpoint their internal frames (shingle sets, dupe
     ids, signatures) and those blocks accumulate across harness runs —
     measured 2× inflation on the 64x round once earlier rounds' blocks
     filled executor memory. A real pipeline run exits the JVM between
     jobs; the harness must emulate that between timed ops."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(jmap.keys()):
-        if rid not in keep:
-            jmap[rid].unpersist()
+    bench._release_new_rdds(spark, keep)
     spark.sparkContext._jvm.System.gc()
 
 
@@ -604,37 +604,6 @@ class _PeakStorageSampler:
         return round(self.peak_bytes / (1024 * 1024), 1)
 
 
-class _JvmTelemetry:
-    """Per-sample driver-JVM counters (same protocol as bench.py's): total
-    GC time across collectors and peak heap across heap pools, peaks reset
-    per sample. Valid under LOCAL-mode execution only (driver == executor).
-    getCollectionTime() is spec'd to return -1 when undefined — clamped so
-    one bean can't corrupt the delta. This is the diagnosis a spiked
-    scaling cell carries: a big gc_sec names heap pressure, a clean
-    gc/heap profile with a 3x sec names host contention."""
-
-    def __init__(self, spark) -> None:
-        mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-        self._gc_beans = list(mf.getGarbageCollectorMXBeans())
-        self._heap_pools = [
-            p
-            for p in mf.getMemoryPoolMXBeans()
-            if p.getType().toString() == "Heap memory"
-        ]
-
-    def gc_ms(self) -> int:
-        return sum(max(0, b.getCollectionTime()) for b in self._gc_beans)
-
-    def reset_peaks(self) -> None:
-        for p in self._heap_pools:
-            p.resetPeakUsage()
-
-    def peak_heap_mb(self) -> int:
-        return sum(p.getPeakUsage().getUsed() for p in self._heap_pools) // (
-            1024 * 1024
-        )
-
-
 def run_one_op(spark, fixture: str, name: str) -> tuple[float, float, list[dict]]:
     """Measure ONE operator on a materialized fixture in THIS JVM: warm the
     op on a 5k-row sample (JIT/codegen), then min-of-2 timed full runs.
@@ -670,7 +639,7 @@ def run_one_op(spark, fixture: str, name: str) -> tuple[float, float, list[dict]
         fn = lambda: spec(frame)  # noqa: E731
     keep = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     best = None
-    jvm = _JvmTelemetry(spark)
+    jvm = bench._JvmTelemetry(spark)
     tsamples: list[dict] = []
     with _PeakStorageSampler(spark) as sampler:
         for _ in range(2):

@@ -313,6 +313,9 @@ def _expand_buckets(
     # keys reuses the pinned partitioning, so this replaces the AQE-sized
     # exchange rather than adding one; the width never drops below the
     # input's own partition count, so a wide production banding stays wide.
+    # defaultParallelism is read at PLAN time: under dynamic allocation it
+    # counts the executors up at that moment, so the pin can undershoot
+    # the cores the job later gets (the input's width stays the floor).
     spark_dp = banded.sparkSession.sparkContext.defaultParallelism
     from data_rivers_spark.session import plan_partitions
 
@@ -856,7 +859,8 @@ def verify_pairs_jaccard(
     # size: on a 200-doc input it broadcast the pairs side of the id_a
     # join and the sets side of the id_b join. A forced broadcast(pairs)
     # variant measured slower AND caps at the 8 GB broadcast limit, so the
-    # hint is deliberately absent.
+    # hint is deliberately absent. As in _expand_buckets, defaultParallelism
+    # is read at plan time and can undershoot under dynamic allocation.
     spark_dp = pairs.sparkSession.sparkContext.defaultParallelism
     from data_rivers_spark.session import plan_partitions
 

@@ -179,47 +179,20 @@ def dsir_log_ratios(
     re-aggregations of the corpus-scale featurize lineage. Counts are
     longs, so the window totals are exact integers — identical to the
     re-aggregated form on every engine."""
-    from pyspark.sql import Window
-
-    spark = target_feats.sparkSession
     tc = target_feats.groupBy("bucket").agg(F.sum("cnt").alias("__ct"))
     sc = source_feats.groupBy("bucket").agg(F.sum("cnt").alias("__cs"))
-    dense = spark.range(num_buckets).select(F.col("id").alias("bucket"))
-    ab = float(alpha) * num_buckets
-    w = Window.partitionBy()
-    joined = (
-        dense.join(tc, "bucket", "left")
-        .join(sc, "bucket", "left")
-        .select(
-            "bucket",
-            F.coalesce(F.col("__ct"), F.lit(0)).alias("__ct"),
-            F.coalesce(F.col("__cs"), F.lit(0)).alias("__cs"),
-        )
-    )
-    return joined.select(
-        "bucket",
-        F.round(
-            F.log(
-                (F.col("__ct") + F.lit(float(alpha)))
-                / (F.sum("__ct").over(w) + F.lit(ab))
-            )
-            - F.log(
-                (F.col("__cs") + F.lit(float(alpha)))
-                / (F.sum("__cs").over(w) + F.lit(ab))
-            ),
-            ndigits,
-        ).alias("log_ratio"),
-    )
+    joint = tc.join(sc, "bucket", "full")
+    return _dsir_log_ratios_from_joint(joint, num_buckets, alpha, ndigits)
 
 
 def _dsir_log_ratios_from_joint(
     joint: DataFrame, num_buckets: int, alpha: float, ndigits: int = 6
 ) -> DataFrame:
-    """dsir_log_ratios' tail over a JOINT (bucket, __cs, __ct) count frame
-    (one aggregate produced both sides — the target_flag path). Identical
-    arithmetic: dense 0..B-1 rows, coalesce-0 counts, single-partition
-    window totals, 6-dp-rounded log ratio — the smoothed ratios are the
-    same doubles the two-frame form computes from the same integers."""
+    """dsir_log_ratios' arithmetic over a JOINT (bucket, __cs, __ct) count
+    frame — built from two count aggregates by dsir_log_ratios, or by one
+    aggregate on the target_flag path: dense 0..B-1 rows, coalesce-0
+    counts (a bucket missing from one side counts 0 there),
+    single-partition window totals, rounded log ratio."""
     from pyspark.sql import Window
 
     spark = joint.sparkSession

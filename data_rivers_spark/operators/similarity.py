@@ -265,19 +265,17 @@ def embedding_near_dup_pairs(
     id_col: str,
     threshold: float,
     block_col: str | None = None,
-    exact_all_pairs: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold.
 
     Scale-safe dispatch (round-5): with a ``block_col`` the join is exact
     all-pairs WITHIN blocks (caller asserts bounded block sizes — category /
-    shard / date keys). WITHOUT one, the default is now the bucket-first
-    sign-LSH candidate join + exact cosine verify
-    (``embedding_near_dup_pairs_lsh``) — an unblocked all-pairs self-join is
-    O(n²) and was previously one call away on a 1B-row corpus. The exact
-    unblocked form remains available as ``exact_all_pairs=True`` (it is the
-    oracle-checkable verifier at test scale)."""
-    if block_col is None and not exact_all_pairs:
+    shard / date keys). WITHOUT one, the call is the bucket-first sign-LSH
+    candidate join + exact cosine verify (``embedding_near_dup_pairs_lsh``)
+    — an unblocked all-pairs self-join is O(n²) and would be one call away
+    on a 1B-row corpus. For an exact all-pairs reference at test scale,
+    pass a constant block column."""
+    if block_col is None:
         return embedding_near_dup_pairs_lsh(df, vec_col, id_col, threshold)
     from data_rivers_spark.session import fan_out
 
@@ -293,11 +291,7 @@ def embedding_near_dup_pairs(
     # scale-adaptive with a bounded replication factor.
     spark = df.sparkSession
     n_salts = max(1, min(spark.sparkContext.defaultParallelism, 64))
-    base = fan_out(
-        df.select(
-            F.col(id_col), F.col(vec_col), *([F.col(block_col)] if block_col else [])
-        )
-    )
+    base = fan_out(df.select(F.col(id_col), F.col(vec_col), F.col(block_col)))
     # per-doc norms hoisted out of the per-pair cosine (r14): the
     # interpreted norm fold ran twice per compared pair; carrying it as a
     # side column evaluates the bit-identical doubles (same subexpression,
@@ -306,21 +300,21 @@ def embedding_near_dup_pairs(
     a = base.select(
         F.col(id_col).alias("id_a"),
         _as_double(F.col(vec_col)).alias("__va"),
-        *([F.col(block_col).alias("__blk")] if block_col else []),
+        F.col(block_col).alias("__blk"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)).alias("__salt_a"),
     ).withColumn("__na", norm(F.col("__va")))
     b = base.select(
         F.col(id_col).alias("id_b"),
         _as_double(F.col(vec_col)).alias("__vb"),
-        *([F.col(block_col).alias("__blk2")] if block_col else []),
+        F.col(block_col).alias("__blk2"),
     ).withColumn("__nb", norm(F.col("__vb"))).withColumn(
         "__salt_b", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
-    cond = (F.col("id_a") < F.col("id_b")) & (
-        F.col("__salt_a") == F.col("__salt_b").cast("long")
+    cond = (
+        (F.col("id_a") < F.col("id_b"))
+        & (F.col("__salt_a") == F.col("__salt_b").cast("long"))
+        & (F.col("__blk") == F.col("__blk2"))
     )
-    if block_col:
-        cond = cond & (F.col("__blk") == F.col("__blk2"))
     return (
         a.join(b, cond)
         .withColumn(
@@ -339,9 +333,9 @@ def embedding_near_dup_pairs(
 def _lsh_table_planes(
     num_tables: int, planes_per_table: int, dim: int, seed: int
 ):
-    """The (num_tables * planes_per_table, dim) hyperplane list shared by
-    the expression and vectorized bucket builders — same rng stream, so
-    both produce identical buckets."""
+    """The (num_tables * planes_per_table, dim) seeded hyperplane list of
+    the LSH bucket builder — same rng stream, so buckets reproduce across
+    runs."""
     rng = random.Random(seed)
     return [
         [rng.gauss(0.0, 1.0) for _ in range(dim)]
@@ -360,9 +354,9 @@ def _bucket_arrays_vectorized(
 ) -> DataFrame:
     """(id, __v, __bkts[, extras]) via ONE BLAS matmul per Arrow batch:
     signs = (batch x dim) @ (dim x L*b) > 0, then bit-packed per table.
-    The expression form evaluates L*b interpreted aggregate/zip_with HOFs
-    per row (CodegenFallback, per-element allocations) — measured 8-9x
-    slower than this matmul at the default 16x6 configuration."""
+    An expression form (L*b interpreted aggregate/zip_with HOFs per row,
+    CodegenFallback) measured 8-9x slower than this matmul at the default
+    16x6 configuration."""
     import numpy as np
 
     extra_cols = extra_cols or []
@@ -418,7 +412,6 @@ def embedding_near_dup_pairs_lsh(
     dim: int = 64,
     seed: int = 7,
     block_col: str | None = None,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Bucket-first near-dup pairs: candidates are generated by an equi
     self-join on (table_idx, sign-LSH bucket) over ``num_tables``
@@ -435,9 +428,9 @@ def embedding_near_dup_pairs_lsh(
     (SemDeDup-style thresholds ≥ 0.8); below ~0.7 the sign-LSH gap between
     near-dups and random pairs collapses (rho = ln p1/ln p2 → 1) and no
     (b, L) both prunes and recalls — callers there should block on a
-    category column or opt into the exact verifier. Raising L buys recall
-    linearly in cost; raising b sharpens pruning quadratically against
-    random collisions (buckets per table = 2^b).
+    category column (embedding_near_dup_pairs' exact within-block join).
+    Raising L buys recall linearly in cost; raising b sharpens pruning
+    quadratically against random collisions (buckets per table = 2^b).
 
     Scale: the corpus shuffles once on the ~(1+4)-byte (table, bucket) key
     with xL fan-out; buckets are data-independent so skew is bounded by
@@ -446,46 +439,20 @@ def embedding_near_dup_pairs_lsh(
     the materialized buckets instead of recomputing the plane fold through
     the explode).
 
-    ``vectorized=True`` (default) computes all L·b plane dots as ONE BLAS
-    matmul per Arrow batch (mapInPandas) — the expression form is L·b
-    interpreted aggregate/zip_with HOFs per row (CodegenFallback).
-    MEASURED on the 4k-row sf0.1 twin corpus: 23.4 s → 12.7 s end-to-end
-    (1.84x; the bucket stage itself drops from ~11 s to sub-second — the
-    remainder is the shared explode/join/verify). Both derive from the
-    same seeded plane list; a knife-edge dot within float ulp of 0 could
-    bucket differently between the two forms (accumulation order), which
-    only perturbs CANDIDATES — the exact-cosine verify keeps the output's
-    precision identical, and each form is individually deterministic
-    (pair sets verified equal on the twin corpus at sf0.1)."""
+    All L·b plane dots are ONE BLAS matmul per Arrow batch (mapInPandas,
+    _bucket_arrays_vectorized). An expression bucket builder (L·b
+    interpreted aggregate/zip_with HOFs per row) measured 23.4 s against
+    12.7 s end-to-end on the 4k-row sf0.1 twin corpus and was removed. A
+    knife-edge dot within float ulp of 0 only perturbs CANDIDATES: the
+    exact-cosine verify keeps the output's precision."""
     planes = _lsh_table_planes(num_tables, planes_per_table, dim, seed)
-    v = _as_double(F.col(vec_col))
-    blk_sel = [F.col(block_col).alias("__blk")] if block_col else []
-    if vectorized:
-        bucketed = _bucket_arrays_vectorized(
-            df, vec_col, id_col, planes, num_tables, planes_per_table,
-            extra_cols=[block_col] if block_col else [],
-        )
-        if block_col:
-            bucketed = bucketed.withColumnRenamed(block_col, "__blk")
-        bucketed = bucketed.localCheckpoint(eager=True)
-    else:
-        table_buckets = []
-        for t in range(num_tables):
-            bucket = F.lit(0)
-            for i in range(planes_per_table):
-                plane = F.array(
-                    *[F.lit(x) for x in planes[t * planes_per_table + i]]
-                )
-                bucket = bucket + F.when(
-                    dot(v, plane) > 0, F.lit(1 << i)
-                ).otherwise(F.lit(0))
-            table_buckets.append(bucket)
-        bucketed = df.select(
-            F.col(id_col).alias("__id"),
-            v.alias("__v"),
-            F.array(*table_buckets).alias("__bkts"),
-            *blk_sel,
-        ).localCheckpoint(eager=True)
+    bucketed = _bucket_arrays_vectorized(
+        df, vec_col, id_col, planes, num_tables, planes_per_table,
+        extra_cols=[block_col] if block_col else [],
+    )
+    if block_col:
+        bucketed = bucketed.withColumnRenamed(block_col, "__blk")
+    bucketed = bucketed.localCheckpoint(eager=True)
     keys = ["__tbl", "__bkt"] + (["__blk"] if block_col else [])
     # r13 (guide §8: decide with small rows, move big rows once): the
     # candidate join and the (id_a, id_b) dropDuplicates used to carry BOTH
@@ -619,7 +586,6 @@ def train_ivf_centroids(
     n_centroids: int = 16,
     iterations: int = 5,
     assign_vectorized: bool | None = None,
-    assign_hierarchical: bool | str | None = None,
 ) -> list[tuple[int, list[float]]]:
     """Deterministic mini k-means (Lloyd) for IVF coarse quantization.
 
@@ -653,15 +619,13 @@ def train_ivf_centroids(
     if iterations > 1:
         vecs = vecs.localCheckpoint()
     n_hint = None
-    if assign_hierarchical is None and n_centroids >= _DEEP_CROSSOVER:
-        # count once here so the auto-deep coupling check (n >= 100·k,
+    if n_centroids >= _DEEP_CROSSOVER:
+        # count once here so the tree's coupling check (n >= 100·k,
         # see _assign_to_centroids) doesn't re-count per Lloyd iteration
         n_hint = vecs.count()
     for _ in range(iterations):
         assigned = _assign_to_centroids(
-            vecs, "__v", cents,
-            vectorized=assign_vectorized, hierarchical=assign_hierarchical,
-            n_hint=n_hint,
+            vecs, "__v", cents, vectorized=assign_vectorized, n_hint=n_hint
         )
         # one parsed expression instead of dim x (avg + getItem) Column
         # builds (r13 plan-time audit); SQL `__v[i]` is 0-based like getItem
@@ -704,12 +668,16 @@ def _dlit(x) -> str:
     return repr(x) + "D"
 
 
-# auto-dispatch boundary for the three-level tree router: under SemDeDup's
+# assignment dispatch boundaries (evidence in the _assign_to_centroids
+# docstring); module constants so tests can move them. Past
+# _HIER_CROSSOVER centroids the two-level router replaces the flat kernel.
+_HIER_CROSSOVER = 256
+# boundary for the three-level tree router: under SemDeDup's
 # k = n/300 coupling this is n ≈ 7.4M, just under the r10 head-to-head's
 # measured 9% deep win at k=27k/n=8.2M (see _assign_to_centroids docstring
 # for the full evidence chain and the small-n caveat)
 _DEEP_CROSSOVER = 24576
-# auto-deep additionally requires the coupled regime n >= _DEEP_COUPLING·k:
+# the tree additionally requires the coupled regime n >= _DEEP_COUPLING·k:
 # the tree's driver-side Lloyd build is ~k^(5/3) and n-INDEPENDENT, so a
 # huge codebook over a small corpus inverts the win (measured: k=65536 on
 # n=2.05M ran 46.05 s deep vs 19.96 s two-level —
@@ -723,7 +691,6 @@ def _assign_to_centroids(
     vec_col: str,
     cents,
     vectorized: bool | None = None,
-    hierarchical: bool | str | None = None,
     n_hint: int | None = None,
 ) -> DataFrame:
     """argmin centroid by squared L2. Up to 64 centroids: array_min over
@@ -742,15 +709,14 @@ def _assign_to_centroids(
     throughput callers force True and eat the FP-rounding caveat; the
     expression form exists for oracle-exact replay.
 
-    ``hierarchical`` follows the same None-means-auto protocol, now covering
-    all THREE rungs with measured boundaries: past 256 centroids the flat
-    BLAS matrix is n·k work — QUADRATIC when k grows ∝ n (SemDeDup's
+    Codebook size alone picks the router, across THREE rungs with measured
+    boundaries: past _HIER_CROSSOVER (256) centroids the flat BLAS matrix
+    is n·k work — QUADRATIC when k grows ∝ n (SemDeDup's
     bounded-cluster-size regime; SCALING.md measured the flat path at
-    octave ratio 5.9 vs 3.36 hierarchical) — so auto takes the two-level
-    IVF router there; past _DEEP_CROSSOVER centroids auto takes the
-    three-level IVF-in-IVF tree (n·k^(1/3) assignment). Explicit False
-    keeps the flat/exact kernel (oracle replay), True forces the two-level
-    router everywhere, "deep" forces the tree everywhere.
+    octave ratio 5.9 vs 3.36 hierarchical) — so the two-level IVF router
+    takes over; from _DEEP_CROSSOVER centroids the three-level IVF-in-IVF
+    tree (n·k^(1/3) assignment) does, once the coupling check below
+    passes. ``vectorized`` only chooses between the two flat kernels.
 
     The deep boundary's evidence: the r10 full-cell head-to-head at
     k=27k/n=8.2M (SemDeDup coupling k=n/300) measured deep 9% faster
@@ -760,36 +726,27 @@ def _assign_to_centroids(
     the tree's driver-side BUILD is ~k^(5/3) (Lloyd over all k fine
     centroids) and n-independent, so at k=65536 on only n=2.05M the build
     inverted the win (46.05 vs 19.96 s) — a regime that violates the
-    k ∝ n/300 coupling by 10x. Auto therefore VERIFIES the coupling before
-    taking the tree (r12, closing the r11 advice): it requires
+    k ∝ n/300 coupling by 10x. The dispatch therefore VERIFIES the coupling
+    before taking the tree (r12, closing the r11 advice): it requires
     n ≥ _DEEP_COUPLING·k, with n taken from ``n_hint`` when the caller
     already knows it, else one df.count() — at k ≥ 24576 a count is noise
     next to the n·k^(1/3) assignment it prices. A decoupled call falls back
-    to the two-level router; ``hierarchical="deep"`` still forces the tree
-    unconditionally. Named next rung if the build ever dominates at coupled
-    scale: subsample the tree's Lloyd to ~16k centroids (build drops
+    to the two-level router. Named next rung if the build ever dominates at
+    coupled scale: subsample the tree's Lloyd to ~16k centroids (build drops
     ~k^(5/3) → k·k^(1/3), the final full scatter pass is unavoidable
     either way)."""
-    if len(cents) > 1 and hierarchical == "deep":
-        return _assign_to_centroids_tree(df, vec_col, cents)
-    if (
-        len(cents) > 1
-        and hierarchical is None
-        and len(cents) >= _DEEP_CROSSOVER
-    ):
+    k = len(cents)
+    if k > 1 and k >= _DEEP_CROSSOVER:
         n = n_hint if n_hint is not None else df.count()
-        if n >= _DEEP_COUPLING * len(cents):
+        if n >= _DEEP_COUPLING * k:
             return _assign_to_centroids_tree(df, vec_col, cents)
         # decoupled regime: fall through to the two-level router (the
-        # len(cents) > 256 rule below is satisfied here by construction)
-    use_hier = hierarchical if hierarchical is not None else len(cents) > 256
-    if use_hier and len(cents) > 1:
-        # two-level IVF routing: the flat BLAS matrix is n·k — quadratic
-        # when k grows ∝ n (SemDeDup's regime); below ~256 centroids the
-        # flat kernel is cheaper than the two-stage overhead, so auto
-        # (hierarchical=None) only lands here past the measured crossover
+        # k > _HIER_CROSSOVER rule below holds here at the shipped values)
+    if k > 1 and k > _HIER_CROSSOVER:
+        # two-level IVF routing: below the crossover the flat kernel is
+        # cheaper than the two-stage overhead
         return _assign_to_centroids_hierarchical(df, vec_col, cents)
-    use_vec = vectorized if vectorized is not None else len(cents) > 64
+    use_vec = vectorized if vectorized is not None else k > 64
     if use_vec:
         return _assign_to_centroids_vectorized(df, vec_col, cents)
     # One SQL string instead of per-centroid Column building (r13): the
@@ -925,7 +882,6 @@ def assign_kmeans_clusters(
     n_clusters: int = 8,
     iterations: int = 0,
     assign_vectorized: bool | None = None,
-    assign_hierarchical: bool | str | None = None,
 ) -> DataFrame:
     """Corpus with a ``cluster_id`` column: nearest centroid by squared L2
     after ``iterations`` Lloyd rounds of the deterministic mini k-means
@@ -941,26 +897,27 @@ def assign_kmeans_clusters(
     starts being a liability (64 structs × dim literals each), so the
     dispatch flips to the Arrow-vectorized BLAS argmin
     (_assign_to_centroids_vectorized), whose centroid matrix ships once
-    per task. Production SemDeDup wants n_clusters ∝ corpus size (bounded
-    cluster SIZE, see kmeans_semantic_dedup) — i.e. the vectorized branch."""
+    per task; past 256 the two-level router and, at coupled scale, the
+    three-level tree take over (_assign_to_centroids). Production SemDeDup
+    wants n_clusters ∝ corpus size (bounded cluster SIZE, see
+    kmeans_semantic_dedup) — i.e. the BLAS and router branches.
+    ``assign_vectorized`` forces the flat kernel choice at or below 256
+    centroids (None = the >64 rule)."""
     import numpy as np
 
     cents = train_ivf_centroids(
         corpus, vec_col, id_col, n_clusters, iterations,
         assign_vectorized=assign_vectorized,
-        assign_hierarchical=assign_hierarchical,
     )
     cmat = np.array([c for _, c in cents], dtype=np.float64)
     prepped = corpus.withColumn("__v", _as_double(F.col(vec_col)))
     n_hint = None
-    if assign_hierarchical is None and n_clusters >= _DEEP_CROSSOVER:
+    if n_clusters >= _DEEP_CROSSOVER:
         # pay the coupling-check count here, once, on the bare corpus scan
         # rather than inside _assign_to_centroids on the widened frame
         n_hint = corpus.count()
     assigned = _assign_to_centroids(
-        prepped, "__v", cmat,
-        vectorized=assign_vectorized, hierarchical=assign_hierarchical,
-        n_hint=n_hint,
+        prepped, "__v", cmat, vectorized=assign_vectorized, n_hint=n_hint
     )
     return assigned.drop("__v").withColumnRenamed("centroid_id", "cluster_id")
 
@@ -973,9 +930,7 @@ def kmeans_semantic_dedup(
     n_clusters: int = 8,
     iterations: int = 0,
     max_cluster_size: int | None = None,
-    vectorized: bool | None = None,
     assign_vectorized: bool | None = None,
-    assign_hierarchical: bool | str | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means-cluster the embedding space, find
@@ -996,31 +951,24 @@ def kmeans_semantic_dedup(
     s ≈ n/k): pair work is Σ s²/2 per cluster = n·s/2 — linear in n only
     while s is bounded. The first harness run used k ~ sqrt(n) and paid
     n^1.5 pair growth (measured 6.3× time at 4× data); k = n/300 restored
-    the linear profile. Past 64 clusters both the assignment and the pair
-    stage auto-switch to Arrow-vectorized BLAS kernels
-    (_assign_to_centroids_vectorized /
-    embedding_near_dup_pairs_blocked_vectorized — one gram matrix per
-    cluster instead of s²/2 interpreted HOF cosines); below that the
-    expression forms keep the whole plan JVM-side and oracle-replayable.
-    ``vectorized`` forces the PAIR stage's dispatch; ``assign_vectorized``
-    independently forces the ASSIGNMENT stage's (the oracle query needs
-    expression-exact assignment at k=8 while still vectorizing pair sims,
-    and the scaling harness needs BLAS assignment at k=26 where the
-    interpreted argmin is the measured bottleneck — see SCALING.md's
-    kmeans 4x note). Even the flat BLAS assignment is n·k work — QUADRATIC
-    when k ∝ n (SCALING.md measured ratio 5.9 on 64x->256x) — so past
-    256 centroids assignment auto-dispatches (``assign_hierarchical=None``
-    default, same protocol as the >64 vectorized rule) to the IVF-style
-    two-level router (_assign_to_centroids_hierarchical): ~sqrt(k) coarse
-    cells, nprobe=4, per-point cost ~5·sqrt(k)·dim. Approximate in the
-    same class as the operator's cluster-boundary misses; this is the
-    100 TB path (FAISS-based SemDeDup clusters the same way). Explicit
-    ``assign_hierarchical=False`` keeps the flat/exact kernel for oracle
-    replay; explicit True forces the router below the crossover;
-    ``assign_hierarchical="deep"`` opts into the three-level IVF-in-IVF
-    tree (n·k^(1/3) assignment — measured 9% faster end-to-end than the
-    two-level router at k=27k/8.2M vectors, with the gap widening every
-    octave; see _assign_to_centroids_tree).
+    the linear profile. The PAIR stage is always the Arrow-vectorized
+    gram kernel (embedding_near_dup_pairs_blocked_vectorized — one BLAS
+    gram matrix per cluster instead of s²/2 interpreted HOF cosines;
+    measured ~10x at 300-row clusters and 3.3x on q_semantic_dedup_kmeans
+    at sf0.1, with sims rounded to 4 bit-equal to the expression join).
+    The ASSIGNMENT stage dispatches on codebook size (_assign_to_centroids):
+    the expression argmin up to 64 centroids (JVM-side, oracle-replayable),
+    flat BLAS up to 256, the IVF-style two-level router past 256 (flat n·k
+    work is QUADRATIC when k ∝ n — SCALING.md measured ratio 5.9 on
+    64x->256x; the router is ~sqrt(k) coarse cells, nprobe=4, per-point
+    cost ~5·sqrt(k)·dim), and the three-level IVF-in-IVF tree from
+    24576 centroids at coupled scale (n·k^(1/3) assignment). The routers
+    are approximate in the same class as the operator's cluster-boundary
+    misses; this is the 100 TB path (FAISS-based SemDeDup clusters the same
+    way). ``assign_vectorized`` forces the flat kernel choice at or below
+    256 centroids: the oracle query keeps the expression argmin at k=8,
+    and the scaling harness forces BLAS at k=26, where the interpreted
+    argmin is the measured bottleneck (SCALING.md's kmeans 4x note).
     Component collapse is pointer-doubling on the pair set only.
 
     ``max_cluster_size`` is the skew guard: k-means gives no size bound
@@ -1040,7 +988,6 @@ def kmeans_semantic_dedup(
     assigned = assign_kmeans_clusters(
         corpus, vec_col, id_col, n_clusters, iterations,
         assign_vectorized=assign_vectorized,
-        assign_hierarchical=assign_hierarchical,
     )
     pair_block = "cluster_id"
     if max_cluster_size is not None:
@@ -1061,21 +1008,9 @@ def kmeans_semantic_dedup(
             .drop("__csz", "__sub")
         )
         pair_block = "__blk_key"
-    # pair-stage dispatch: the BLAS kernel wins whenever pair volume is
-    # non-trivial (measured ~10x at 300-row clusters: 1.2M interpreted HOF
-    # cosines took ~30s that the gram matrices do in ~3); the expression
-    # join exists for oracle-exact replay. Default: vectorized past 64
-    # clusters (where the assignment is vectorized anyway); callers chasing
-    # throughput pass vectorized=True explicitly.
-    use_vec = vectorized if vectorized is not None else n_clusters > 64
-    if use_vec:
-        pairs = embedding_near_dup_pairs_blocked_vectorized(
-            assigned, vec_col, id_col, threshold, pair_block
-        )
-    else:
-        pairs = embedding_near_dup_pairs(
-            assigned, vec_col, id_col, threshold, pair_block
-        )
+    pairs = embedding_near_dup_pairs_blocked_vectorized(
+        assigned, vec_col, id_col, threshold, pair_block
+    )
     out = dedup_by_components(assigned, pairs.select("id_a", "id_b"), id_col)
     return out.drop("__blk_key") if max_cluster_size is not None else out
 
@@ -1243,8 +1178,8 @@ def _assign_to_centroids_tree(
     (asymptote 4·4^(1/3) ≈ 6.3x/octave; a depth-log tree would reach
     n·log n, but the constant in front — one Python-masked gemm pass per
     level — already eats the k^(1/6) gain below ~100k centroids, which is
-    why this depth is an EXPLICIT opt-in rather than a size auto-dispatch:
-    measure before switching; the crossover lives where the fine-scan
+    why _assign_to_centroids takes this depth only from _DEEP_CROSSOVER
+    centroids at coupled scale: the crossover lives where the fine-scan
     gemm flops dominate the per-cell mask overhead).
 
     Same approximation class as the two-level router (a point whose true

@@ -3164,13 +3164,12 @@ def q_semantic_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines has no exactness story. Within-cluster pairs at cosine
     >= 0.3 collapse by connected components to the min-id survivor."""
     t = load_tables(spark, sf_dir, ["embeddings"])
-    # vectorized=True: pair sims (rounded to 4) verified BIT-EQUAL to the
-    # expression join at sf0.001/0.01/0.1 (3.3x faster at sf0.1); the
+    # the pair stage is the operator's gram kernel (sims rounded to 4,
+    # verified BIT-EQUAL to the expression join at sf0.001/0.01/0.1); the
     # oracle-exactness-critical stage is the ASSIGNMENT, which stays on the
     # plan-embedded expression argmin at 8 centroids
     out = S.kmeans_semantic_dedup(
-        t["embeddings"], "embedding", "vec_id", 0.3, n_clusters=8, iterations=0,
-        vectorized=True,
+        t["embeddings"], "embedding", "vec_id", 0.3, n_clusters=8, iterations=0
     )
     return out.select("vec_id", "cluster_id")
 

@@ -143,10 +143,10 @@ def test_signlsh_recall_vs_exact(spark, sf_dir):
 
 def test_embedding_neardup_default_is_bucketed(spark, sf_dir):
     """Unblocked embedding_near_dup_pairs must dispatch to the LSH bucket
-    path (equi join on the (table, bucket) key — no cartesian in the plan);
-    exact_all_pairs=True opts back into the all-pairs verifier. Both must
-    agree on the planted-twin corpus (wide sim margins — see
-    q_embedding_lsh_neardup)."""
+    path (equi join on the (table, bucket) key — no cartesian in the plan)
+    and agree with the exact all-pairs verifier — the blocked join over a
+    constant block column — on the planted-twin corpus (wide sim margins —
+    see q_embedding_lsh_neardup)."""
     from data_rivers_spark.session import load_tables
 
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"].filter(
@@ -163,7 +163,8 @@ def test_embedding_neardup_default_is_bucketed(spark, sf_dir):
     plan = default._jdf.queryExecution().executedPlan().toString()
     assert "NestedLoop" not in plan and "Cartesian" not in plan, plan[:2000]
     exact = S.embedding_near_dup_pairs(
-        corpus, "embedding", "vec_id", 0.75, exact_all_pairs=True
+        corpus.withColumn("blk", F.lit(0)), "embedding", "vec_id", 0.75,
+        block_col="blk",
     )
     d = {(r.id_a, r.id_b, r.sim) for r in default.collect()}
     e = {(r.id_a, r.id_b, r.sim) for r in exact.collect()}
@@ -1163,8 +1164,10 @@ def test_gopher_full_features_match_building_blocks(spark, sf_dir):
 
 
 def test_embedding_lsh_vectorized_matches_expression(spark, sf_dir):
-    """The BLAS bucket builder and the Catalyst expression form share the
-    seeded plane list and must produce the same verified pair set."""
+    """The BLAS bucket builder's verified LSH pair set must equal the exact
+    verifier's — the all-pairs cosine join over a constant block column —
+    on the planted-twin corpus: every candidate verifies with the exact
+    cosine, and the twins' wide sim margin leaves no recall miss."""
     from data_rivers_spark.session import load_tables
 
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"].filter(
@@ -1177,12 +1180,12 @@ def test_embedding_lsh_vectorized_matches_expression(spark, sf_dir):
         ).alias("embedding"),
     )
     corpus = emb.select("vec_id", "embedding").unionByName(twins)
-    kw = dict(threshold=0.75)
-    vec = {(r.id_a, r.id_b, r.sim) for r in S.embedding_near_dup_pairs_lsh(
-        corpus, "embedding", "vec_id", vectorized=True, **kw).collect()}
-    expr = {(r.id_a, r.id_b, r.sim) for r in S.embedding_near_dup_pairs_lsh(
-        corpus, "embedding", "vec_id", vectorized=False, **kw).collect()}
-    assert vec == expr and len(vec) == 80
+    lsh = {(r.id_a, r.id_b, r.sim) for r in S.embedding_near_dup_pairs_lsh(
+        corpus, "embedding", "vec_id", 0.75).collect()}
+    exact = {(r.id_a, r.id_b, r.sim) for r in S.embedding_near_dup_pairs(
+        corpus.withColumn("blk", F.lit(0)), "embedding", "vec_id", 0.75,
+        block_col="blk").collect()}
+    assert lsh == exact and len(lsh) == 80
 
 
 def test_kmeans_semantic_dedup_lloyd_iterations(spark, sf_dir):
@@ -1493,22 +1496,51 @@ def test_kmeans_vectorized_kernels_match_expression(spark, sf_dir):
     # where the kernel parity above makes the assignments identical
     forced = S.kmeans_semantic_dedup(emb, "embedding", "vec_id", 0.3,
                                      n_clusters=8, iterations=0,
-                                     vectorized=True, assign_vectorized=True)
+                                     assign_vectorized=True)
     default = S.kmeans_semantic_dedup(emb, "embedding", "vec_id", 0.3,
-                                      n_clusters=8, iterations=0,
-                                      vectorized=True)
+                                      n_clusters=8, iterations=0)
     assert sorted(r.vec_id for r in forced.select("vec_id").collect()) == sorted(
         r.vec_id for r in default.select("vec_id").collect()
     )
 
 
-def test_hierarchical_assignment_routes_exact_points_home(spark):
+def test_kmeans_semantic_dedup_pair_stage_is_gram_kernel(spark, sf_dir, monkeypatch):
+    """At 8 clusters the default pair stage is the Arrow gram kernel (one
+    FlatMapGroupsInPandas per cluster, no per-pair cosine join), and the
+    survivors equal the exact within-cluster cosine join followed by the
+    same component collapse."""
+    from data_rivers_spark.session import load_tables
+
+    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
+    seen = []
+    real = D.dedup_by_components
+    monkeypatch.setattr(
+        D, "dedup_by_components",
+        lambda df, pairs, id_col: seen.append(pairs) or real(df, pairs, id_col),
+    )
+    out = S.kmeans_semantic_dedup(
+        emb, "embedding", "vec_id", 0.3, n_clusters=8, iterations=0
+    )
+    got = sorted((r.vec_id, r.cluster_id) for r in out.collect())
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan and "Join" not in plan, plan[:2000]
+    assigned = S.assign_kmeans_clusters(emb, "embedding", "vec_id", 8, 0)
+    pairs = S.embedding_near_dup_pairs(
+        assigned, "embedding", "vec_id", 0.3, block_col="cluster_id"
+    )
+    ref = real(assigned, pairs.select("id_a", "id_b"), "vec_id")
+    assert got == sorted((r.vec_id, r.cluster_id) for r in ref.collect())
+    assert 0 < len(got) < emb.count()
+
+
+def test_hierarchical_assignment_routes_exact_points_home(spark, monkeypatch):
     """The IVF-style two-level router (_assign_to_centroids_hierarchical):
     a point sitting EXACTLY on fine centroid i must come back with
     centroid_id == i — guaranteed deterministic, because the coarse cell
     that owns i is by definition the argmin coarse center for cmat[i], so
     it is the point's #1 probe and distance 0 wins the within-cell argmin.
-    Slightly perturbed points must agree with the flat BLAS kernel."""
+    Slightly perturbed points must agree with the flat BLAS kernel, and
+    the operator must reach the router through its size dispatch."""
     import numpy as np
 
     # 300 well-separated deterministic centroids in 8-dim (engages the
@@ -1538,30 +1570,33 @@ def test_hierarchical_assignment_routes_exact_points_home(spark):
         for r in S._assign_to_centroids_vectorized(pdf, "v", cmat).collect()
     }
     assert hier == flat
-    # end-to-end plumbing: the operator accepts the flag and keeps its
-    # contract (unique survivors) — explicit True now FORCES the router
-    # even at small k (mirroring the `vectorized` force-override protocol),
-    # and at k=8 n_coarse=3 means every coarse cell is probed, so the
-    # routing is exhaustive and the result exact
-    from data_rivers_spark.session import load_tables  # noqa: F401
-
+    # end-to-end: with the crossover moved below k=8 the operator's size
+    # dispatch routes through the two-level router and keeps its contract
+    # (unique survivors); at k=8 n_coarse=3 means every coarse cell is
+    # probed, so the routing is exhaustive and the result exact
+    calls = []
+    real = S._assign_to_centroids_hierarchical
+    monkeypatch.setattr(S, "_HIER_CROSSOVER", 4)
+    monkeypatch.setattr(
+        S, "_assign_to_centroids_hierarchical",
+        lambda df, vc, c, **kw: calls.append(len(c)) or real(df, vc, c, **kw),
+    )
     out = S.kmeans_semantic_dedup(
         df.withColumnRenamed("v", "embedding"), "embedding", "vec_id", 0.99,
-        n_clusters=8, iterations=0, vectorized=True, assign_vectorized=True,
-        assign_hierarchical=True,
+        n_clusters=8, iterations=0,
     )
     ids = [r.vec_id for r in out.select("vec_id").collect()]
+    assert calls == [8]
     # same-axis vectors are cosine-1.0 near-dups, so SOME collapse; the
     # contract is unique survivors and a non-empty result
     assert len(ids) == len(set(ids)) and 0 < len(ids) <= k
 
 
 def test_hierarchical_dispatch_boundary(spark, monkeypatch):
-    """_assign_to_centroids auto-dispatch: hierarchical=None routes to the
-    two-level router strictly past 256 centroids (the measured crossover,
-    SCALING.md flat ratio 5.9 vs 3.36), stays flat at exactly 256, and the
-    explicit overrides force either path at any size — the same protocol
-    as the >64 vectorized rule."""
+    """_assign_to_centroids size dispatch: the two-level router takes
+    over strictly past _HIER_CROSSOVER = 256 centroids (the measured
+    crossover, SCALING.md flat ratio 5.9 vs 3.36) and the assignment stays
+    flat at exactly 256."""
     import numpy as np
 
     calls = []
@@ -1578,21 +1613,17 @@ def test_hierarchical_dispatch_boundary(spark, monkeypatch):
     S._assign_to_centroids(df, "v", c256).collect()
     assert calls == []  # at the boundary: flat
     S._assign_to_centroids(df, "v", c257).collect()
-    assert calls == [257]  # past it: auto-hierarchical
-    S._assign_to_centroids(df, "v", c257, hierarchical=False).collect()
-    assert calls == [257]  # explicit False: flat/exact override holds
-    S._assign_to_centroids(df, "v", c256, hierarchical=True).collect()
-    assert calls == [257, 256]  # explicit True forces below the crossover
+    assert calls == [257]  # past it: hierarchical
 
 
 def test_deep_dispatch_requires_coupling(spark, monkeypatch):
-    """r12 (closing the r11 advice): auto-dispatch takes the three-level
+    """r12 (closing the r11 advice): the dispatch takes the three-level
     tree only when BOTH k >= _DEEP_CROSSOVER and the coupled regime
     n >= _DEEP_COUPLING·k hold — the tree's driver-side Lloyd build is
     ~k^(5/3) and n-independent, so a huge codebook over a small corpus
     inverts the win (measured 46.05 vs 19.96 s at k=65536/n=2.05M,
-    bench_out/assign_only_scan_r11.txt). Decoupled auto calls fall back to
-    the two-level router; explicit "deep" still forces the tree."""
+    bench_out/assign_only_scan_r11.txt). Decoupled calls fall back to the
+    two-level router."""
     import numpy as np
 
     routed = []
@@ -1620,9 +1651,7 @@ def test_deep_dispatch_requires_coupling(spark, monkeypatch):
     S._assign_to_centroids(
         df, "v", big, n_hint=S._DEEP_COUPLING * S._DEEP_CROSSOVER - 1
     )
-    # explicit "deep" forces the tree regardless of n
-    S._assign_to_centroids(df, "v", big, hierarchical="deep")
-    assert routed == ["two", "tree", "two", "tree"]
+    assert routed == ["two", "tree", "two"]
 
 
 def test_hierarchical_orphan_fallback_never_emits_sentinel(spark, monkeypatch):
@@ -1783,14 +1812,15 @@ def test_signlsh_auto_depth_keeps_planted_twin_recall(spark):
         assert nid == q + 10000 and abs(sim - 1.0) < 1e-9, (q, nid, sim)
 
 
-def test_tree_assignment_routes_exact_points_home(spark):
+def test_tree_assignment_routes_exact_points_home(spark, monkeypatch):
     """The three-level IVF-in-IVF router (_assign_to_centroids_tree): a
     point sitting EXACTLY on fine centroid i must come back with
     centroid_id == i — the mid cell owning i is its argmin mid center, the
     top cell owning that mid is its argmin top center, so the point's #1
     probe path leads straight home and distance 0 wins the fine argmin.
-    Perturbed points must agree with the flat BLAS kernel, and the 'deep'
-    dispatch string must reach the tree through kmeans_semantic_dedup."""
+    Perturbed points must agree with the flat BLAS kernel, and the
+    operator's size dispatch must reach the tree through
+    kmeans_semantic_dedup."""
     import numpy as np
 
     k, dim = 300, 8
@@ -1823,14 +1853,23 @@ def test_tree_assignment_routes_exact_points_home(spark):
         ).collect()
     }
     assert small_chunks == got
-    # end-to-end: the "deep" string dispatches through the operator and
-    # keeps the unique-survivor contract
+    # end-to-end: with the tree's crossover moved to k=8 and the
+    # coupling bound met (n=300 >= 1·8), the operator's size dispatch
+    # routes through the tree and keeps the unique-survivor contract
+    calls = []
+    real = S._assign_to_centroids_tree
+    monkeypatch.setattr(S, "_DEEP_CROSSOVER", 8)
+    monkeypatch.setattr(S, "_DEEP_COUPLING", 1)
+    monkeypatch.setattr(
+        S, "_assign_to_centroids_tree",
+        lambda df, vc, c, **kw: calls.append(len(c)) or real(df, vc, c, **kw),
+    )
     out = S.kmeans_semantic_dedup(
         df.withColumnRenamed("v", "embedding"), "embedding", "vec_id", 0.99,
-        n_clusters=8, iterations=0, vectorized=True, assign_vectorized=True,
-        assign_hierarchical="deep",
+        n_clusters=8, iterations=0,
     )
     ids = [r.vec_id for r in out.select("vec_id").collect()]
+    assert calls == [8]
     assert len(ids) == len(set(ids)) and 0 < len(ids) <= k
 
 

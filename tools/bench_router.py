@@ -1,16 +1,22 @@
-"""Head-to-head: two-level vs three-level centroid router on the scaled
-embeddings fixture — the measurement behind the 'deep' opt-in's crossover
-claim.
+"""Assignment-stage crossover scan: two-level vs three-level centroid router
+on the scaled embeddings fixture — the measurement behind the tree's
+_DEEP_CROSSOVER dispatch boundary.
 
-Usage: python tools/bench_router.py [k_octave] [router ...]
-       (default: 4096 hier deep — each router measured in its own run
-        over the SAME kmeans_semantic_dedup cell shape as tools/scaling.py)
+Usage: python tools/bench_router.py --assign-only [n_octave] [k ...]
+       (default octave 1024 → ~2.05M vectors; default k ladder
+        4096 16384 32768 65536; centroids are the first k fixture
+        vectors — assignment cost depends on counts, not centroid
+        quality)
 
-Each measurement replays the scaling harness's kmeans cell exactly
-(n_clusters = n/300, one Lloyd pass, vectorized pair stage, max cluster
-600) with only the assignment dispatch changed, warm-up on a 5k sample
-first, min of 2 timed runs, all in one JVM per router to keep the
-comparison same-window."""
+Times _assign_to_centroids_hierarchical (two-level) vs
+_assign_to_centroids_tree (three-level) on a fixed corpus across a
+centroid-count ladder, same JVM, warm-up on a 5k sample first, min of 2
+timed runs per cell. A full kmeans_semantic_dedup cell dilutes the
+assignment gap behind the pair/CC stages (r10 measured 9% at k=27k; the
+record is in tools/scaling.py CELL_NOTES); this scan isolates the term that
+actually drifts (two-level ~5·sqrt(k)·dim per point vs tree
+~9·k^(1/3)·dim) and locates the k where the tree should take the
+dispatch."""
 
 from __future__ import annotations
 
@@ -22,21 +28,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def assign_only() -> None:
-    """Assignment-STAGE-only crossover scan: time _assign_to_centroids_
-    hierarchical (two-level) vs _assign_to_centroids_tree (three-level) on
-    a fixed corpus across a CENTROID-count ladder, same JVM, min of 2 per
-    cell after warm-up. The full-cell head-to-head dilutes the assignment
-    gap behind the pair/CC stages (r10 measured 9% at k=27k); this scan
-    isolates the term that actually drifts (two-level ~5·sqrt(k)·dim per
-    point vs tree ~9·k^(1/3)·dim) and locates the k where 'deep' should
-    take the auto-dispatch.
-
-    Usage: python tools/bench_router.py --assign-only [n_octave] [k ...]
-           (default octave 1024 → ~2.05M vectors; default k ladder
-            4096 16384 32768 65536; centroids are the first k fixture
-            vectors — assignment cost depends on counts, not centroid
-            quality)"""
+def main() -> None:
+    if "--assign-only" not in sys.argv:
+        sys.exit(__doc__)
     argv = [a for a in sys.argv[1:] if a != "--assign-only"]
     n_oct = int(argv[0]) if argv else 1024
     ks = [int(x) for x in argv[1:]] or [4096, 16384, 32768, 65536]
@@ -79,52 +73,6 @@ def assign_only() -> None:
         results[str(k)] = row
         print(f"ASSIGN_ROW:{json.dumps({'k': k, **row})}", flush=True)
     print("ASSIGN_JSON:" + json.dumps({"n_octave": n_oct, "n": n, **results}))
-
-
-def main() -> None:
-    if "--assign-only" in sys.argv:
-        assign_only()
-        return
-    argv = sys.argv[1:]
-    k_oct = int(argv[0]) if argv else 4096
-    routers = argv[1:] or ["hier", "deep"]
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
-    from data_rivers_spark.operators import similarity as S
-    from data_rivers_spark.session import get_spark
-    from tools.scaling import materialize_fixture
-
-    spark = get_spark(app_name=f"bench-router-{k_oct}x")
-    fixture = materialize_fixture(spark, "/root/testdata/sf0.1", k_oct)
-    emb = (
-        spark.read.parquet(os.path.join(fixture, "embeddings"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    n = emb.count()
-    results: dict[str, float] = {}
-    for router in routers:
-        hier = {"hier": True, "deep": "deep", "flat": False, "auto": None}[router]
-
-        def cell(frame):
-            return S.kmeans_semantic_dedup(
-                frame, "embedding", "vec_id", 0.85,
-                n_clusters=max(8, frame.count() // 300), iterations=1,
-                max_cluster_size=600, vectorized=True, assign_vectorized=True,
-                assign_hierarchical=hier,
-            )
-
-        warm = emb.limit(5000).localCheckpoint(eager=True)
-        cell(warm).write.format("noop").mode("overwrite").save()
-        warm.unpersist()
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            cell(emb).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            print(f"{router}: sample {round(dt, 2)}s", flush=True)
-        results[router] = round(best, 2)
-    print("ROUTER_JSON:" + json.dumps({"k_octave": k_oct, "n": n, **results}))
 
 
 if __name__ == "__main__":

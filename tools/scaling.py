@@ -55,7 +55,7 @@ REPORT_KS = KS + (1024,)
 # media_dedup mixed per-row-DCT and batched-kernel cells the same way).
 OP_CONFIG: dict[str, str] = {
     # r12: the row now measures the operator's PROMOTED AUTO-DISPATCH
-    # (assign_hierarchical=None: flat BLAS <=256 centroids, two-level
+    # (size-based: flat BLAS <=256 centroids, two-level
     # router past 256, three-level tree past 24576 under the n>=100k
     # coupling check) — the dispatch itself is the algorithm under test,
     # per the r11 verdict's own closing note on row 31. The r9b
@@ -386,8 +386,7 @@ def _op_fn(name: str):
         # n_clusters ∝ n (target ~300-row clusters) keeps total pair work
         # LINEAR in corpus size; the earlier sqrt(n) rule made it n^1.5
         # (measured 6.3x time at 4x data) — see kmeans_semantic_dedup's
-        # docstring. Past 64 clusters the operator auto-switches to the
-        # vectorized BLAS kernels.
+        # docstring. The pair stage is always the BLAS gram kernel.
         # threshold 0.85: semantic dedup's operating regime (sparse true
         # pairs); 0.3 inside dense k-means clusters makes the OUTPUT
         # near-quadratic (every within-cluster pair qualifies), which no
@@ -398,7 +397,7 @@ def _op_fn(name: str):
         # measured 8.8-17.1 s on it vs 5.7 s for 4x the data at k=106 on
         # the BLAS path — the dispatch threshold is a plan-size wall, not
         # the speed crossover, so the throughput harness forces BLAS.
-        # assign_hierarchical=None (r12, OP_CONFIG router-auto-r12): the
+        # Assignment routing (r12, OP_CONFIG router-auto-r12): the
         # row measures the operator's PROMOTED AUTO-DISPATCH — flat BLAS
         # <=256 centroids, two-level IVF router past 256 (flat n·k is
         # quadratic under k ∝ n; measured ratio 5.9 at 64x->256x, k=1706),
@@ -411,7 +410,7 @@ def _op_fn(name: str):
         "kmeans_semantic_dedup": lambda e: S.kmeans_semantic_dedup(
             e, "embedding", "vec_id", 0.85,
             n_clusters=max(8, e.count() // 300), iterations=1,
-            max_cluster_size=600, vectorized=True, assign_vectorized=True,
+            max_cluster_size=600, assign_vectorized=True,
         ),
         # num_planes=None → auto-depth (planes = ceil(log2(n/1024)), the r9
         # fix): the old fixed num_planes=4 held bucket COUNT constant while

@@ -704,7 +704,7 @@ def _assign_to_centroids(
     ``vectorized`` overrides the size dispatch (None = >64 rule). The
     64-centroid default is the plan-size wall, NOT the speed crossover:
     the interpreted HOF argmin loses to the BLAS kernel well below it
-    (SCALING.md's kmeans 4x cell measured 8.8-17.1 s at k=26 on the
+    (the r8 kmeans 4x scaling cell measured 8.8-17.1 s at k=26 on the
     expression path vs 5.7 s for 4x the data at k=106 on BLAS), so
     throughput callers force True and eat the FP-rounding caveat; the
     expression form exists for oracle-exact replay.
@@ -712,7 +712,7 @@ def _assign_to_centroids(
     Codebook size alone picks the router, across THREE rungs with measured
     boundaries: past _HIER_CROSSOVER (256) centroids the flat BLAS matrix
     is n·k work — QUADRATIC when k grows ∝ n (SemDeDup's
-    bounded-cluster-size regime; SCALING.md measured the flat path at
+    bounded-cluster-size regime; r8 scaling cells measured the flat path at
     octave ratio 5.9 vs 3.36 hierarchical) — so the two-level IVF router
     takes over; from _DEEP_CROSSOVER centroids the three-level IVF-in-IVF
     tree (n·k^(1/3) assignment) does, once the coupling check below
@@ -721,8 +721,8 @@ def _assign_to_centroids(
     The deep boundary's evidence: the r10 full-cell head-to-head at
     k=27k/n=8.2M (SemDeDup coupling k=n/300) measured deep 9% faster
     end-to-end (270.09 vs 297.89 s), and the r11 assignment-stage-only
-    scan (tools/bench_router.py --assign-only, n=2.05M) measured deep 31%
-    faster at k=32768 (9.3 vs 13.4 s). CAVEAT measured in the same scan:
+    scan (n=2.05M) measured deep 31% faster at k=32768 (9.3 vs 13.4 s).
+    CAVEAT measured in the same scan:
     the tree's driver-side BUILD is ~k^(5/3) (Lloyd over all k fine
     centroids) and n-independent, so at k=65536 on only n=2.05M the build
     inverted the win (46.05 vs 19.96 s) — a regime that violates the

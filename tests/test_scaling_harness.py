@@ -1,10 +1,11 @@
 """Contract tests for the measurement harnesses.
 
 The SCALING.md table is only meaningful if every cell in a row measured
-the same algorithm (tools/scaling.py OP_CONFIG) and each cell is the
-min over cold-JVM attempts (_merge_min). Those tests, and bench.py's
-artifact/stdout contracts, run without touching Spark; the bench trace
-test runs one small query in the session.
+the same algorithm (tools/scaling.py OP_CONFIG) on the same core count,
+and each cell is the min over cold-JVM attempts (_merge_min). Those tests,
+and bench.py's artifact/stdout contracts, run without touching Spark; the
+bench trace test and the gen_plans ``--out`` test run one small query in
+the session.
 """
 from __future__ import annotations
 
@@ -71,6 +72,58 @@ def test_merge_min_takes_lower_envelope():
 def test_report_ks_is_ks_plus_one_octave():
     assert sc.REPORT_KS[:-1] == sc.KS
     assert sc.REPORT_KS[-1] == 4 * sc.KS[-1]
+
+
+def test_scaling_history_from_other_core_count_is_dropped(tmp_path, monkeypatch):
+    """Cells min-merge only within one host shape: results, peaks and
+    telemetry written at another core count, or recording none, load
+    empty; a file written at this host's core count still min-merges."""
+    monkeypatch.setattr(sc, "RESULTS_JSON", str(tmp_path / "results.json"))
+    monkeypatch.setattr(sc, "PEAKS_JSON", str(tmp_path / "peaks.json"))
+    monkeypatch.setattr(sc, "TELEM_JSON", str(tmp_path / "telemetry.json"))
+    cells = {"exact_dedup": {1: 2.0, 4: 8.0}}
+    for path in (sc.RESULTS_JSON, sc.PEAKS_JSON):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+        sc._save_cells(path, cells)
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+        assert sc._load_cells(path) == {}
+        with open(path, "w") as f:  # a file from before the core count
+            json.dump({"_config": dict(sc.OP_CONFIG), "exact_dedup": {"1": 2.0}}, f)
+        assert sc._load_cells(path) == {}
+        sc._save_cells(path, cells)
+        assert sc._load_cells(path) == cells
+        fresh = {"exact_dedup": {1: 1.5, 4: 9.0, 16: 30.0}}
+        assert sc._merge_min(sc._load_cells(path), fresh) == {
+            "exact_dedup": {1: 1.5, 4: 8.0, 16: 30.0}
+        }
+
+    sample = {"sec": 1.0, "gc_sec": 0.0, "peak_heap_mb": 100.0}
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    sc._append_telemetry({"exact_dedup": {1: [sample]}})
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    sc._append_telemetry({"exact_dedup": {1: [sample]}})
+    sc._append_telemetry({"exact_dedup": {1: [sample]}})
+    with open(sc.TELEM_JSON) as f:
+        assert json.load(f) == {"_cores": 4, "exact_dedup": {"1": [sample] * 2}}
+
+
+def test_gen_plans_out_is_stable_across_constructions(spark, sf_dir, tmp_path,
+                                                      monkeypatch):
+    """``gen_plans.py SF --out DIR NAME ...`` run twice over fresh
+    constructions of the same query writes byte-identical files (every
+    session counter renumbered), and a PLAN_SKIP query gets its note."""
+    from data_rivers_spark import session
+    from tools import gen_plans
+
+    monkeypatch.setattr(session, "get_spark", lambda app_name: spark)
+    names = ["q_minhash_lsh_dedup", "q_bpe_train_rounds"]
+    for d in ("a", "b"):
+        gen_plans.main([sf_dir, "--out", str(tmp_path / d), *names])
+    a = (tmp_path / "a" / "q_minhash_lsh_dedup.txt").read_bytes()
+    assert b"Scan ExistingRDD" in a
+    assert a == (tmp_path / "b" / "q_minhash_lsh_dedup.txt").read_bytes()
+    skip = (tmp_path / "a" / "q_bpe_train_rounds.txt").read_text()
+    assert skip.startswith("(not rendered: ")
 
 
 def test_bench_round_artifact_is_write_once(tmp_path, monkeypatch):

@@ -1,10 +1,15 @@
 """Regenerate PLANS.md — physical-plan evidence for the headline queries.
 
-Usage: python tools/gen_plans.py [sf_dir]
+Usage:
+    python tools/gen_plans.py [sf_dir]                    # PLANS.md
+    python tools/gen_plans.py [sf_dir] --out DIR NAME ... # DIR/NAME.txt
 
 Renders `.explain("formatted")` for a curated query list so the plan claims
 in docstrings (broadcasts, pushdown, codegen spans, exchange counts) stay
 checkable against the actual optimizer output as the engine evolves.
+``--out`` writes one file per named registered query with the same stable
+ids, so a before/after plan-identity check is one run per checkout plus
+``diff -r``.
 """
 
 from __future__ import annotations
@@ -189,6 +194,17 @@ PLAN_SKIP = {
 }
 
 
+def _plan_text(spark, sf_dir: str, name: str, queries: dict) -> str:
+    """The query's formatted plan with stable ids, or the PLAN_SKIP note."""
+    if name in PLAN_SKIP:
+        return f"(not rendered: {PLAN_SKIP[name]})"
+    df = queries[name](spark, sf_dir)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return _stable_ids(buf.getvalue().rstrip())
+
+
 def generate(spark, sf_dir: str, names: list[str]) -> None:
     """Render .explain('formatted') for `names` into PLANS.md."""
     import __spark_entry__ as entry
@@ -196,14 +212,9 @@ def generate(spark, sf_dir: str, names: list[str]) -> None:
     queries = entry.queries()
     out = [HEADER.format(sf=sf_dir)]
     for name in names:
-        if name in PLAN_SKIP:
-            out.append(f"\n## {name}\n\n(not rendered: {PLAN_SKIP[name]})\n")
-            continue
-        df = queries[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out.append(f"\n## {name}\n\n```\n{_stable_ids(buf.getvalue().rstrip())}\n```\n")
+        text = _plan_text(spark, sf_dir, name, queries)
+        body = text if name in PLAN_SKIP else f"```\n{text}\n```"
+        out.append(f"\n## {name}\n\n{body}\n")
     plans_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
     )
@@ -215,15 +226,36 @@ def generate(spark, sf_dir: str, names: list[str]) -> None:
     print(f"PLANS.md regenerated ({len(names)} plans)", file=sys.stderr)
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+def write_plan_files(spark, sf_dir: str, out_dir: str, names: list[str]) -> None:
+    """Write `out_dir/<name>.txt` per named registered query."""
+    import __spark_entry__ as entry
+
+    queries = entry.queries()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        raise SystemExit(f"unknown queries: {' '.join(unknown)}")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(_plan_text(spark, sf_dir, name, queries) + "\n")
+        print(f"wrote {path}", file=sys.stderr)
+
+
+def main(argv: list[str] | None = None) -> None:
+    argv = sys.argv[1:] if argv is None else argv
+    sf_dir = argv[0] if argv and argv[0] != "--out" else "/root/testdata/sf0.1"
     from data_rivers_spark.session import get_spark
 
+    spark = get_spark(app_name="gen_plans")
+    if "--out" in argv:
+        i = argv.index("--out")
+        write_plan_files(spark, sf_dir, argv[i + 1], argv[i + 2:])
+        return
     # the plan set IS the bench set — single source of truth in bench.py,
     # regenerated automatically at the end of every bench run
     from bench import HEADLINE
 
-    spark = get_spark(app_name="gen_plans")
     generate(spark, sf_dir, HEADLINE)
 
 

@@ -1,17 +1,26 @@
-"""Measure operator scaling: wall time at 1x / 4x / 16x / 64x corpus size,
-plus the revgeo projection-vs-grid strategy crossover by zone count.
+"""Measure operator scaling: wall time at 1x / 4x / 16x corpus size (64x for
+cells named with --remeasure), plus the revgeo projection-vs-grid strategy
+crossover by zone count.
 
-Usage: python tools/scaling.py [sf_dir]   (writes SCALING.md)
+Usage:
+    python tools/scaling.py [sf_dir]                          # full sweep
+    python tools/scaling.py [sf_dir] --remeasure OP:K [OP:K ...]
 
-The 100 TB question is not "is it fast at sf0.1" but "what exponent does
-runtime follow as data grows". This harness unions the documents /
-embeddings tables k times with shifted ids (so dedup ops see k times the
-docs, NOT k copies of the same doc ids) and times each headline operator
-at 1x/4x/16x/64x on the same session. The report records the per-octave
-(4x data growth) runtime ratio: ~4 means linear in rows (what a
-shuffle-bounded operator should show locally), ~16 would mean quadratic
-blowup — the smell this repo's bucket caps / blocking / banding exist to
-prevent.
+Both write SCALING.md. The 100 TB question is not "is it fast at sf0.1" but
+"what exponent does runtime follow as data grows". This harness unions the
+documents / embeddings tables k times with shifted ids (so dedup ops see k
+times the docs, NOT k copies of the same doc ids) and times each headline
+operator per octave. The report records the per-octave (4x data growth)
+runtime ratio: ~4 means linear in rows (what a shuffle-bounded operator
+should show locally), ~16 would mean quadratic blowup — the smell this
+repo's bucket caps / blocking / banding exist to prevent.
+
+The sweep and --remeasure share one cell runner: one subprocess per octave
+materializes the fixture, then runs each named operator in its own JVM.
+Cells run at get_spark's core count and heap size (SPARK_GRAFT_CPUS and
+SPARK_DRIVER_MEMORY when exported). The history files record the core
+count, and history from any other core count is dropped on load, so cells
+min-merge only within one host shape.
 
 The second table times the SAME timebound revgeo under both physical
 strategies — the join-free projection (grid=False: the zones sit in the
@@ -23,74 +32,55 @@ linearly with zones; grid cost tracks zones-per-cell (≈ constant for
 tiling zones), so the table locates the zone count where the default
 `grid_threshold=512` auto-switch should flip.
 
-Local caveat: local[32] with a warm page cache under-weights scan IO, so
-constant factors here flatter scan-heavy ops; the EXPONENT is the signal.
+Local caveat: a warm local page cache under-weights scan IO, so constant
+factors here flatter scan-heavy ops; the EXPONENT is the signal.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_TOOLS_DIR = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(_TOOLS_DIR))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 import bench  # noqa: E402
 
-KS = (1, 4, 16, 64, 256)
-# the report renders one extra octave: 1024x cells exist only for the rows
-# whose 64x->256x ratio sat >= 3.3 (one more doubling-pair decides
-# approaching-linear vs drifting super-linear); measured via --remeasure
-# op:1024, never by the full sweep
-REPORT_KS = KS + (1024,)
+# the sweep's octaves; the 16x cells of the composites take minutes per
+# timed run on a 4-core host, so 64x is run per op with --remeasure OP:64
+KS = (1, 4, 16)
+REPORT_KS = KS + (4 * KS[-1],)
+# per-operator cell budget (fixture read, warmup, two timed runs)
+OP_TIMEOUT_S = 1800
 
 # Operator-config tags: a row's cells are comparable ONLY if every cell ran
 # the same algorithm. When a harness config (or the operator's own dispatch)
-# changes, bump the tag — _load_results/_load_peaks then DROP that row's
-# min-merged history instead of mixing algorithms across cells (the r8
-# kmeans row min-merged flat-BLAS cells against hierarchical-router cells;
-# media_dedup mixed per-row-DCT and batched-kernel cells the same way).
+# changes, bump the tag — the loader then DROPS that row's min-merged
+# history instead of mixing algorithms across cells.
 OP_CONFIG: dict[str, str] = {
-    # r12: the row now measures the operator's PROMOTED AUTO-DISPATCH
-    # (size-based: flat BLAS <=256 centroids, two-level
-    # router past 256, three-level tree past 24576 under the n>=100k
-    # coupling check) — the dispatch itself is the algorithm under test,
-    # per the r11 verdict's own closing note on row 31. The r9b
-    # forced-two-level history (one-algorithm row, cells 3.52/3.72/4.18/
-    # 5.07/14.95/59.35/302.86 through 4096x) is retired by this tag bump;
-    # its narrative stays in CELL_NOTES for the record.
+    # the operator's size-based auto-dispatch (flat BLAS <= 256 centroids,
+    # two-level router past 256, three-level tree past 24576)
     "kmeans_semantic_dedup": "router-auto-r12",
-    # r10: media fixture rebuilt (per-doc content salt + 1% planted twins)
-    # after the 1024x octave exposed the raw-text fixture's quadratic TRUE
-    # pair growth (pHash insensitive to word suffixes: 5.42M pairs at 256x
-    # → 86.07M at 1024x); simhash row remeasured under the restored
-    # fixed-3 blocking after the auto-deepen experiment measured 3x WORSE
-    # at 5.12M (true pairs, not accidental — key widening can't help)
+    # per-doc content salt + 1% planted twins, full-entropy stub decoder
     "media_dedup": "phash-fullentropy-decode-r10",
+    # fixed 3 clean blocks
     "simhash_pairs": "manku-fixed3-r10",
-    # r9: num_planes=None auto-depth (planes scale with log2(n), holding
-    # bucket occupancy ~constant); fixed-4-plane cells dropped — that form
-    # measured a 15.9 last-octave ratio at 1024x (bucket flooding)
+    # num_planes=None auto-depth (planes scale with log2(n))
     "signlsh_topk": "auto-depth-r9",
-    # r10: pre-grouped (inverted-index) signature store — the row-form
-    # store path's union+re-aggregation of the corpus-sized store was 46%
-    # of the 1024x cell (a per-stage prefix decomposition); row-form cells
-    # dropped, the whole row remeasures under the grouped store
+    # pre-grouped (inverted-index) signature store
     "incremental_lsh_dedup": "grouped-store-r10",
 }
-# ops too slow to run at the top octave get capped (recorded as blank).
-# Empty since round 7: the six checkpoint-heavy composites previously
-# stopped at 64x ("four octaves read the exponent"), but the r6 verdict
-# flagged that duplicate_spans' last measured ratio sat at 3.99 — exactly
-# where a super-linear term would first show at the NEXT octave — so the
-# 256x cells are now measured for everything. A fresh-JVM re-measurement
-# had earlier put simhash_pairs at 2.8/7.9/15.3/19.9 s for 4x/16x/64x/256x
-# (sub-linear per octave); the 33 s / 7.53-ratio 64x cell was host
-# contention inside the long multi-op session, not operator behavior.
-MAX_K: dict[str, int] = {}
+
+
+def host_cores() -> int:
+    """The core count every cell runs at: get_spark's local[N] rule."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
 
 
 def scaled(df, id_col: str, k: int, text_col: str | None = None,
@@ -110,13 +100,13 @@ def scaled(df, id_col: str, k: int, text_col: str | None = None,
     embeddings get a per-replica offset on one dimension.
 
     ``i_scale`` multiplies each replica's perturbation index — the DOUBLING
-    path (materialize_fixture k>256) needs it: applying this function on
-    top of an already-scaled fixture with raw indices 1..3 would give the
+    path (materialize_fixture past KS[-1]) needs it: applying this function
+    on top of an already-scaled fixture with raw indices 1..3 would give the
     outer replicas the SAME suffix/roll the base fixture's replicas 1..3
     already carry, making every outer copy of a base-replica-0 doc an
     EXACT duplicate of base replicas 1..3 (~3·n0 artifact dup pairs).
-    With i_scale = base_k the composed indices (256/512/768 on a 256x
-    base) collide with nothing in the base or each other."""
+    With i_scale = base_k the composed indices (16/32/48 on a 16x base)
+    collide with nothing in the base or each other."""
     parts = []
     for i_raw in range(k):
         i = i_raw * i_scale
@@ -127,34 +117,25 @@ def scaled(df, id_col: str, k: int, text_col: str | None = None,
             )
         if vec_col is not None and i > 0:
             # ROLL each replica's vector by i%64 positions (plus a one-dim
-            # offset to separate same-roll replicas past 64x). The earlier
-            # one-dim-offset-only perturbation left every replica at
-            # ~0.95 cosine to its siblings — 64 near-copies per vector, so
-            # near-dup pair counts grew QUADRATICALLY in k (measured 28M
-            # pairs at 64x, all fixture artifact; the text branch had hit
-            # the same artifact and gained word suffixes for it). Rolling
-            # decorrelates replicas while keeping every within-replica
-            # pairwise cosine bit-identical to replica 0 — constant dup
-            # rate, which is how real corpora scale.
+            # offset to separate same-roll replicas past 64x): a one-dim
+            # offset alone left every replica at ~0.95 cosine to its
+            # siblings, so near-dup pair counts grew QUADRATICALLY in k.
+            # Rolling decorrelates replicas while keeping every
+            # within-replica pairwise cosine bit-identical to replica 0.
             if i_scale > 1:
-                # DOUBLING mode: the composed indices (256/512/768) must
-                # not reuse the formula below — its offset term grows
-                # unbounded (0.37·(1+i//64) = 1.85..4.81 there), and on
-                # unit-norm embeddings a large COMMON component collapses
-                # every pairwise cosine toward 1 (measured: off 3.33 puts
-                # 100% of random pairs at cos >= 0.85, vs 0% at 0.37) —
-                # the whole replica becomes a near-dup clique and the CC
-                # edge set goes quadratic (39 GB checkpoint, the r9
-                # kmeans@1024x OOM). Fresh BOUNDED transforms instead:
-                # roll 0 + a 0.37-magnitude offset at dim i_raw (1..3).
+                # DOUBLING mode: fresh BOUNDED transforms — roll 0 plus a
+                # 0.37-magnitude offset at dim i_raw (1..3). An offset that
+                # grows with the composed index would put a large COMMON
+                # component on unit-norm embeddings and collapse every
+                # pairwise cosine toward 1 (a quadratic near-dup clique).
                 # Collision-free vs the base set: a base transform at dim
                 # d forces roll = 7⁻¹·d mod 64 ≠ 0 for d in 1..3; outer∘
                 # base-m compositions carry TWO offset dims for m > 0;
-                # and the per-level epsilon keeps deeper doublings
-                # distinct from this one.
+                # and the per-level epsilon keeps each doubling level
+                # distinct from the others.
                 roll = 0
                 dim_i = i_raw
-                off = 0.37 + 0.002 * (i_scale // 256)
+                off = 0.37 + 0.002 * (i_scale // KS[-1])
             else:
                 roll = i % 64
                 dim_i = (i * 7) % 64
@@ -267,17 +248,14 @@ def _prep_select_mix(frame):
 
 
 def _prep_media(frame):
-    """Untimed media-fixture shaping. r10 artifact fix: raw fixture text is
-    NOT a valid pHash fixture — the doubling replicas' word suffixes barely
-    move byte histograms, so the fake decoder's pHash put same-base
-    replicas within hamming 3 of each other and the TRUE pair count grew
-    quadratically with k (measured 5.42M pairs at 256x → 86.07M at 1024x,
-    ratio 15.9 — the pHash analogue of the r9 embedding-offset cosine
-    collapse; no operator survives quadratic OUTPUT). Each row now gets a
-    per-doc md5 salt appended to its content (decorrelates every pHash),
-    plus planted exact twins for 1% of rows (media_id + 50M, identical
-    content) so the dedup path still has a CONSTANT-rate duplicate
-    population to find at every octave."""
+    """Untimed media-fixture shaping. Raw fixture text is NOT a valid pHash
+    fixture: the replicas' word suffixes barely move byte histograms, so
+    same-base replicas would land within hamming 3 of each other and the
+    TRUE pair count would grow quadratically with k. Each row gets a per-doc
+    md5 salt appended to its content (decorrelates every pHash), plus
+    planted exact twins for 1% of rows (media_id + 50M, identical content)
+    so the dedup path still has a CONSTANT-rate duplicate population to
+    find at every octave."""
     base = frame.select(
         F.col("doc_id").alias("media_id"),
         F.encode(
@@ -301,13 +279,9 @@ def _prep_incremental(frame):
     them) and the new batch. The timed run is the daily shape: batch vs
     store, master text touched only via the bucket-hit semi-join.
 
-    r10: the store is prepared in group_banded_store's inverted-index form
-    — the production store shape (grouped ONCE at store-write time, not
-    re-aggregated per batch). The 1024x stage decomposition of the row-form
-    cell measured the union+re-aggregation of the corpus-sized store at
-    76.2 s of a 166 s run (46%); the grouped path pays only a bucket-keyed
-    join for it. OP_CONFIG reset: the row's history under the row-form
-    store is a different algorithm."""
+    The store is prepared in group_banded_store's inverted-index form — the
+    production store shape, grouped ONCE at store-write time, not
+    re-aggregated per batch."""
     from data_rivers_spark.operators import dedup as D
 
     mx = frame.agg(F.max("doc_id")).first()[0]
@@ -362,13 +336,10 @@ def _op_fn(name: str):
         "bpe_round": lambda d: TX.bpe_pair_counts(
             TX.word_frequency_table(d, "text"), top_k=30
         ),
-        # r12: the classifier-training family (full-batch logistic
-        # regression, 2 epochs at 1024 hashed buckets, then the scoring
-        # sweep — the timed region includes the eager GD collects, which
-        # are model-sized by construction). Labels are id-derived
-        # (doc_id % 3 == 0 — deterministic, octave-invariant class mix).
-        # epochs x corpus passes predicts a boring ~linear row; the row
-        # exists precisely so that's measured, not assumed.
+        # the classifier-training family: full-batch logistic regression,
+        # 2 epochs at 1024 hashed buckets, then the scoring sweep (the
+        # timed region includes the model-sized eager GD collects). Labels
+        # are id-derived, so the class mix is octave-invariant.
         "quality_classifier_train": lambda d: (
             lambda docs: TX.score_hashed_classifier(
                 docs, "text", "doc_id",
@@ -384,40 +355,21 @@ def _op_fn(name: str):
             )
         ),
         # n_clusters ∝ n (target ~300-row clusters) keeps total pair work
-        # LINEAR in corpus size; the earlier sqrt(n) rule made it n^1.5
-        # (measured 6.3x time at 4x data) — see kmeans_semantic_dedup's
-        # docstring. The pair stage is always the BLAS gram kernel.
-        # threshold 0.85: semantic dedup's operating regime (sparse true
-        # pairs); 0.3 inside dense k-means clusters makes the OUTPUT
-        # near-quadratic (every within-cluster pair qualifies), which no
-        # blocking can escape. max_cluster_size bounds the skew pockets
-        # k-means itself gives no guarantee against.
-        # assign_vectorized=True: below 64 clusters the default assignment
-        # is the interpreted expression argmin, and the 4x octave (k=26)
-        # measured 8.8-17.1 s on it vs 5.7 s for 4x the data at k=106 on
-        # the BLAS path — the dispatch threshold is a plan-size wall, not
-        # the speed crossover, so the throughput harness forces BLAS.
-        # Assignment routing (r12, OP_CONFIG router-auto-r12): the
-        # row measures the operator's PROMOTED AUTO-DISPATCH — flat BLAS
-        # <=256 centroids, two-level IVF router past 256 (flat n·k is
-        # quadratic under k ∝ n; measured ratio 5.9 at 64x->256x, k=1706),
-        # three-level tree past 24576 centroids when n >= 100·k (the
-        # r12 coupling gate). Under k = n/300 the tree engages from the
-        # 4096x cell (k ~ 27k) — the dispatch boundary sits INSIDE the
-        # row, which is the point: the row prices what a default caller
-        # actually gets. The r9-r11 forced-two-level one-algorithm row is
-        # retired (see OP_CONFIG note).
+        # LINEAR in corpus size (a sqrt(n) rule makes it n^1.5). Threshold
+        # 0.85 is semantic dedup's sparse-true-pair regime; max_cluster_size
+        # bounds the skew pockets k-means gives no guarantee against.
+        # assign_vectorized=True forces the BLAS assignment: below 64
+        # clusters the default is the interpreted expression argmin, whose
+        # threshold is a plan-size wall, not the speed crossover. Past 256
+        # centroids the operator's own size dispatch picks the router
+        # (OP_CONFIG router-auto-r12).
         "kmeans_semantic_dedup": lambda e: S.kmeans_semantic_dedup(
             e, "embedding", "vec_id", 0.85,
             n_clusters=max(8, e.count() // 300), iterations=1,
             max_cluster_size=600, assign_vectorized=True,
         ),
-        # num_planes=None → auto-depth (planes = ceil(log2(n/1024)), the r9
-        # fix): the old fixed num_planes=4 held bucket COUNT constant while
-        # the corpus grew, so per-probe verify cost grew linearly — the
-        # 1024x octave measured that form at a 15.9 last-octave ratio
-        # (6.5M vectors / 16 buckets). Auto-depth holds bucket OCCUPANCY
-        # ~constant instead; the row's history reset is in OP_CONFIG.
+        # num_planes=None → auto-depth (planes = ceil(log2(n/1024))) holds
+        # bucket OCCUPANCY ~constant as the corpus grows
         "signlsh_topk": lambda e: S.signlsh_topk(
             e, e.filter(F.col("vec_id") < 20), "embedding", "vec_id", 5
         ),
@@ -468,9 +420,9 @@ def materialize_fixture(spark, sf_dir: str, k: int) -> str:
 
     out = _fixture_dir(k)
     sentinel = os.path.join(out, "_done.json")
-    # fmt 3: doubling replicas use composed perturbation indices (i_scale)
-    # with BOUNDED embedding offsets (unbounded ones collapsed cosines)
-    want = {"sf_dir": os.path.abspath(sf_dir), "k": k, "fmt": 3}
+    # fmt 4: every octave past KS[-1] is built by doubling, with BOUNDED
+    # embedding offsets and a per-level epsilon relative to KS[-1]
+    want = {"sf_dir": os.path.abspath(sf_dir), "k": k, "fmt": 4}
     try:
         with open(sentinel) as f:
             if json.load(f) == want:
@@ -478,7 +430,7 @@ def materialize_fixture(spark, sf_dir: str, k: int) -> str:
     except (OSError, ValueError):
         pass
     if k > KS[-1]:
-        # past the full sweep's top octave, build by DOUBLING: read the k/4
+        # past the sweep's top octave, build by DOUBLING: read the k/4
         # fixture back and scale it by 4 — a k-way union would put k
         # regexp_replace branches in one plan. i_scale=k//4 gives the outer
         # replicas perturbation indices (k//4, 2k//4, 3k//4) that collide
@@ -497,6 +449,7 @@ def materialize_fixture(spark, sf_dir: str, k: int) -> str:
             emb0, "vec_id", 4, vec_col="embedding",
             id_shift=10_000_000 * (k // 4), i_scale=k // 4,
         ).write.mode("overwrite").parquet(os.path.join(out, "embeddings"))
+        shutil.rmtree(base, ignore_errors=True)
     else:
         t = load_tables(spark, sf_dir, ["documents", "embeddings"])
         docs0 = t["documents"].select("doc_id", "text").filter(F.trim("text") != "")
@@ -508,28 +461,24 @@ def materialize_fixture(spark, sf_dir: str, k: int) -> str:
         ).parquet(os.path.join(out, "embeddings"))
     with open(sentinel, "w") as f:
         json.dump(want, f)
-    # flush dirty pages NOW: the ~GB fixture write otherwise drains as
+    # flush dirty pages NOW: a large fixture write otherwise drains as
     # background writeback DURING the first measurement cells, inflating
-    # them (chunk_documents@256x measured 11.5s mid-writeback vs 3.2s on a
-    # settled filesystem — a 3.6x phantom "cliff")
+    # them (a phantom "cliff")
     os.sync()
     _record_fixture_bytes(spark, out, sf_dir, k)
     return out
 
 
-BYTES_JSON = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools",
-    "scaling_bytes.json",
-)
+BYTES_JSON = os.path.join(_TOOLS_DIR, "scaling_bytes.json")
 
 
 def _load_bytes() -> dict[str, dict[int, int]]:
     """Logical input bytes per (source table, octave): sum(octet_length(text))
     for documents, rows × dim × 8 for embeddings. The doubling fixture grows
-    per-doc CHARS ~33% per level (word suffixes), so a char-proportional op's
-    raw top-octave time ratio can read up to 4 × 1.33 ≈ 5.3 while being
-    perfectly linear in input bytes — these numbers let the report normalize
-    that out instead of arguing it in prose."""
+    per-doc CHARS per level (word suffixes), so a char-proportional op's raw
+    top-octave time ratio reads above 4 while being perfectly linear in
+    input bytes — these numbers let the report normalize that out instead
+    of arguing it in prose."""
     try:
         with open(BYTES_JSON) as f:
             raw = json.load(f)
@@ -614,9 +563,8 @@ def run_one_op(spark, fixture: str, name: str) -> tuple[float, float, list[dict]
     src = "embeddings" if name in OPS_EMB else "documents"
     # repartition to cluster width BEFORE the (untimed) checkpoint: parquet
     # read-side coalescing packs the whole fixture into 1-2 splits, which
-    # starves shuffle-FREE per-row operators of parallelism (gopher_filter
-    # measured 29s on a 2-split 64x frame vs 12s well-partitioned) — a real
-    # corpus at this size has proportionally many splits
+    # starves shuffle-FREE per-row operators of parallelism — a real corpus
+    # at this size has proportionally many splits
     frame = (
         spark.read.parquet(os.path.join(fixture, src))
         .repartition(spark.sparkContext.defaultParallelism)
@@ -657,50 +605,51 @@ def run_one_op(spark, fixture: str, name: str) -> tuple[float, float, list[dict]
     return best, sampler.peak_mb, tsamples
 
 
-def operator_scaling_octave(sf_dir: str, k: int) -> dict[str, dict[int, float]]:
-    """One octave: materialize the fixture, then run EVERY operator in its
-    own subprocess JVM.
+def _tagged_json(stdout: str, tag: str):
+    """The JSON payload of the first stdout line starting with ``tag``."""
+    for line in stdout.splitlines():
+        if line.startswith(tag):
+            return json.loads(line[len(tag):])
+    return None
 
-    Isolation rationale, learned the expensive way: (1) one shared session
-    across octaves accumulated heap pressure that inflated random 64x cells
-    up to 7.5x; (2) per-octave JVMs still left cross-OPERATOR interference
-    inside the big octaves (minhash measured 58s after exact_dedup in the
-    256x session vs 20s alone). Per-(op, octave) JVMs reading one shared
-    parquet fixture make every cell a cold, independent job — which is also
-    exactly how a real cluster runs these."""
-    import subprocess
 
+def operator_scaling_octave(sf_dir: str, k: int, names: list[str]) -> dict:
+    """One octave: materialize the fixture, then run each named operator in
+    its own subprocess JVM (``--op``). Returns {"times", "peaks",
+    "telemetry"} keyed op -> {k: value}, plus "failed": op -> reason for
+    every cell that timed out or exited without a result.
+
+    Isolation rationale: one shared session across octaves accumulated
+    heap pressure that inflated random cells, and per-octave JVMs still
+    left cross-OPERATOR interference inside the big octaves. Per-(op,
+    octave) JVMs reading one shared parquet fixture make every cell a cold,
+    independent job — which is also how a real cluster runs these."""
     from data_rivers_spark.session import get_spark
 
     spark = get_spark(app_name=f"scaling-fixture-{k}x")
     fixture = materialize_fixture(spark, sf_dir, k)
     spark.stop()
-    results: dict[str, dict[int, float]] = {}
-    peaks: dict[str, dict[int, float]] = {}
-    telem: dict[str, dict[int, list]] = {}
-    for name in OPS_DOC + OPS_EMB:
-        if k > MAX_K.get(name, KS[-1]):
+    out: dict[str, dict] = {"times": {}, "peaks": {}, "telemetry": {}, "failed": {}}
+    for name in names:
+        try:
+            proc = subprocess.run(
+                [sys.executable, os.path.abspath(__file__), "--op", name, fixture],
+                capture_output=True, text=True, timeout=OP_TIMEOUT_S,
+            )
+        except subprocess.TimeoutExpired:
+            out["failed"][name] = f"timed out after {OP_TIMEOUT_S} s"
             continue
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), sf_dir, "--op", name,
-             "--fixture", fixture],
-            capture_output=True, text=True, timeout=1800,
-        )
-        payload = [ln for ln in proc.stdout.splitlines() if ln.startswith("OP_SECONDS:")]
-        if proc.returncode != 0 or not payload:
-            print(f"op {name} @ {k}x failed:\n{proc.stdout[-1500:]}\n{proc.stderr[-1500:]}")
-            raise SystemExit(1)
-        results[name] = {k: float(payload[0].split(":", 1)[1])}
-        peak = [ln for ln in proc.stdout.splitlines() if ln.startswith("OP_PEAK_MB:")]
-        if peak:
-            peaks[name] = {k: float(peak[0].split(":", 1)[1])}
-        tl = [ln for ln in proc.stdout.splitlines() if ln.startswith("OP_TELEM:")]
-        if tl:
-            telem[name] = {k: json.loads(tl[0].split(":", 1)[1])}
-    import shutil
-
+        cell = _tagged_json(proc.stdout, "OP_JSON:")
+        if proc.returncode != 0 or cell is None:
+            out["failed"][name] = (
+                f"exit {proc.returncode}:\n{proc.stdout[-1500:]}\n{proc.stderr[-1500:]}"
+            )
+            continue
+        out["times"][name] = {k: cell["sec"]}
+        out["peaks"][name] = {k: cell["peak_mb"]}
+        out["telemetry"][name] = {k: cell["telemetry"]}
     shutil.rmtree(fixture, ignore_errors=True)
-    return {"times": results, "peaks": peaks, "telemetry": telem}
+    return out
 
 
 def revgeo_crossover(spark, sf_dir: str) -> list[tuple[int, float, float]]:
@@ -792,148 +741,78 @@ def revgeo_crossover(spark, sf_dir: str) -> list[tuple[int, float, float]]:
     return rows
 
 
-def _run_octave(sf_dir: str, k: int) -> None:
-    """Subprocess entry: measure ONE octave (fixture + per-op JVMs), print JSON."""
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
-    results = operator_scaling_octave(sf_dir, k)
-    print("OCTAVE_JSON:" + json.dumps(results))
-
-
-def _run_op(sf_dir: str, name: str, fixture: str) -> None:
+def _run_op(name: str, fixture: str) -> None:
     """Subprocess entry: measure ONE operator on a materialized fixture."""
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
     from data_rivers_spark.session import get_spark
 
     spark = get_spark(app_name=f"scaling-{name}")
     sec, peak_mb, tsamples = run_one_op(spark, fixture, name)
-    print("OP_SECONDS:" + str(sec))
-    print("OP_PEAK_MB:" + str(peak_mb))
-    print("OP_TELEM:" + json.dumps(tsamples))
+    print("OP_JSON:" + json.dumps(
+        {"sec": sec, "peak_mb": peak_mb, "telemetry": tsamples}
+    ))
 
 
-def main() -> None:
-    argv = [a for a in sys.argv[1:]]
-    if "--remeasure" in argv:
-        # re-run specific op:k cells (e.g. --remeasure simhash_pairs:64
-        # minhash_lsh_dedup:64) and min-merge into scaling_results.json,
-        # then rewrite the report — the burn-down path for cells the
-        # non-monotone check flags as host spikes
-        i = argv.index("--remeasure")
-        sf_dir = argv[0] if i > 0 else "/root/testdata/sf0.1"
-        cells = [a for a in argv[i + 1:] if ":" in a]
-        import subprocess as sp
+def _run_octave(sf_dir: str, k: int, names: list[str]) -> dict:
+    """Run one octave's cells in a fresh subprocess; print each failed cell."""
+    proc = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), sf_dir, "--octave", str(k),
+         *names],
+        capture_output=True, text=True, timeout=OP_TIMEOUT_S * (len(names) + 1),
+    )
+    part = _tagged_json(proc.stdout, "OCTAVE_JSON:")
+    if proc.returncode != 0 or part is None:
+        raise SystemExit(
+            f"octave {k}x failed:\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}"
+        )
+    for name, why in part["failed"].items():
+        print(f"{name} @ {k}x FAILED: {why}", flush=True)
+    print(f"octave {k}x done: " + json.dumps(part["times"]), flush=True)
+    return part
 
-        from data_rivers_spark.session import get_spark
 
-        os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
-        fresh: dict[str, dict[int, float]] = {}
-        fresh_peaks: dict[str, dict[int, float]] = {}
-        fresh_telem: dict[str, dict[int, list]] = {}
-        by_k: dict[int, list[str]] = {}
-        for cell in cells:
-            name, k = cell.split(":")
-            by_k.setdefault(int(k), []).append(name)
-        for k, names in sorted(by_k.items()):
-            spark = get_spark(app_name=f"scaling-fixture-{k}x")
-            fixture = materialize_fixture(spark, sf_dir, k)
-            spark.stop()
-            for name in names:
-                # r12: the remeasure path is how 1024x/4096x/16384x cells
-                # get run, and run_one_op times TWO full passes — a
-                # composite whose single pass crosses ~15 min (the
-                # select_mix row's own >=3.3 trigger predicts ~1300 s at
-                # 1024x) cannot fit the sweep path's 1800 s budget
-                proc = sp.run(
-                    [sys.executable, os.path.abspath(__file__), sf_dir, "--op",
-                     name, "--fixture", fixture],
-                    capture_output=True, text=True, timeout=7200,
-                )
-                pay = [ln for ln in proc.stdout.splitlines()
-                       if ln.startswith("OP_SECONDS:")]
-                if pay:
-                    fresh.setdefault(name, {})[k] = float(pay[0].split(":", 1)[1])
-                    print(f"remeasured {name}@{k}x: {fresh[name][k]}", flush=True)
-                else:
-                    print(f"remeasure {name}@{k}x FAILED:\n"
-                          f"{proc.stdout[-800:]}\n{proc.stderr[-800:]}", flush=True)
-                peak = [ln for ln in proc.stdout.splitlines()
-                        if ln.startswith("OP_PEAK_MB:")]
-                if peak:
-                    fresh_peaks.setdefault(name, {})[k] = float(
-                        peak[0].split(":", 1)[1]
-                    )
-                tl = [ln for ln in proc.stdout.splitlines()
-                      if ln.startswith("OP_TELEM:")]
-                if tl:
-                    fresh_telem.setdefault(name, {})[k] = json.loads(
-                        tl[0].split(":", 1)[1]
-                    )
-            import shutil
-
-            shutil.rmtree(fixture, ignore_errors=True)
-        write_report(fresh, sf_dir, fresh_peaks, fresh_telem)
-        return
+def main(argv: list[str] | None = None) -> None:
+    argv = sys.argv[1:] if argv is None else argv
+    sf_dir = argv[0] if argv and not argv[0].startswith("--") else "/root/testdata/sf0.1"
     if "--op" in argv:
         i = argv.index("--op")
-        j = argv.index("--fixture")
-        sf_dir = argv[0] if i > 0 else "/root/testdata/sf0.1"
-        _run_op(sf_dir, argv[i + 1], argv[j + 1])
+        _run_op(argv[i + 1], argv[i + 2])
         return
     if "--octave" in argv:
         i = argv.index("--octave")
-        k = int(argv[i + 1])
-        sf_dir = argv[0] if i > 0 else "/root/testdata/sf0.1"
-        _run_octave(sf_dir, k)
+        part = operator_scaling_octave(sf_dir, int(argv[i + 1]), argv[i + 2:])
+        print("OCTAVE_JSON:" + json.dumps(part))
         return
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
-    # the 64x corpus plus operator-internal checkpointed frames (shingle
-    # sets, signatures) needs a heap sized to the data, exactly as a real
-    # cluster sizes executors to partitions — the engine default (8g) is
-    # tuned for the sf0.1 bench, and at 64x it thrashes storage vs
-    # execution (measured: minhash 64x swung 10s..51s run-to-run on 8g,
-    # stable on 32g).
-    #
-    # Each octave runs in its OWN subprocess/JVM: the first 256x run shared
-    # one session across all octaves and accumulated heap pressure inflated
-    # random 64x cells up to 7.5x (simhash re-measured 15.3s fresh vs 33s
-    # contaminated) — per-octave isolation is what a real cluster gives each
-    # job anyway.
-    import subprocess
-
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
-    results: dict[str, dict[int, float]] = {}
-    peaks: dict[str, dict[int, float]] = {}
-    telem: dict[str, dict[int, list]] = {}
-    for k in KS:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), sf_dir, "--octave", str(k)],
-            capture_output=True, text=True, timeout=3600,
-        )
-        payload = [ln for ln in proc.stdout.splitlines() if ln.startswith("OCTAVE_JSON:")]
-        if proc.returncode != 0 or not payload:
-            print(f"octave {k}x failed:\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}")
-            raise SystemExit(1)
-        part = json.loads(payload[0][len("OCTAVE_JSON:"):])
-        for name, cells in part.get("times", {}).items():
-            results.setdefault(name, {}).update({int(kk): v for kk, v in cells.items()})
-        for name, cells in part.get("peaks", {}).items():
-            peaks.setdefault(name, {}).update({int(kk): v for kk, v in cells.items()})
-        for name, cells in part.get("telemetry", {}).items():
-            telem.setdefault(name, {}).update({int(kk): v for kk, v in cells.items()})
-        print(f"octave {k}x done: " + json.dumps(part))
-    write_report(results, sf_dir, peaks, telem)
+    if "--remeasure" in argv:
+        # re-run named op:k cells (e.g. --remeasure minhash_lsh_dedup:64)
+        # and min-merge them into the history
+        plan: dict[int, list[str]] = {}
+        for cell in argv[argv.index("--remeasure") + 1:]:
+            name, k = cell.split(":")
+            if name not in OPS_DOC + OPS_EMB:
+                raise SystemExit(f"unknown operator {name!r} in {cell!r}")
+            plan.setdefault(int(k), []).append(name)
+    else:
+        plan = {k: list(OPS_DOC + OPS_EMB) for k in KS}
+    fresh: dict[str, dict[str, dict[int, object]]] = {
+        "times": {}, "peaks": {}, "telemetry": {}
+    }
+    for k, names in sorted(plan.items()):
+        part = _run_octave(sf_dir, k, names)
+        for key, rows in fresh.items():
+            for name, cells in part[key].items():
+                rows.setdefault(name, {}).update({int(kk): v for kk, v in cells.items()})
+    write_report(fresh["times"], sf_dir, fresh["peaks"], fresh["telemetry"])
 
 
-RESULTS_JSON = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools",
-    "scaling_results.json",
-)
+RESULTS_JSON = os.path.join(_TOOLS_DIR, "scaling_results.json")
+PEAKS_JSON = os.path.join(_TOOLS_DIR, "scaling_peaks.json")
+TELEM_JSON = os.path.join(_TOOLS_DIR, "scaling_telemetry.json")
 
 
 def _apply_config_reset(raw: dict) -> dict:
     """Drop rows whose stored config tag mismatches OP_CONFIG — mixing
     algorithm generations in one min-merged row makes its ratios compare
-    different code (the r8 kmeans row did exactly that)."""
+    different code."""
     stored = raw.pop("_config", {})
     for op, tag in OP_CONFIG.items():
         if op in raw and stored.get(op) != tag:
@@ -941,13 +820,28 @@ def _apply_config_reset(raw: dict) -> dict:
     return raw
 
 
-def _load_results() -> dict[str, dict[int, float]]:
+def _read_history(path: str) -> dict:
+    """A history file's rows, or {} when it was measured at another core
+    count than this host's (a file without ``_cores`` counts as another):
+    cells min-merge only within one host shape."""
     try:
-        with open(RESULTS_JSON) as f:
-            raw = _apply_config_reset(json.load(f))
-        return {n: {int(k): v for k, v in c.items()} for n, c in raw.items()}
+        with open(path) as f:
+            raw = json.load(f)
     except (OSError, ValueError):
         return {}
+    return raw if raw.pop("_cores", None) == host_cores() else {}
+
+
+def _load_cells(path: str) -> dict[str, dict[int, float]]:
+    """Results or peaks history at this core count, config-reset applied."""
+    raw = _apply_config_reset(_read_history(path))
+    return {n: {int(k): v for k, v in c.items()} for n, c in raw.items()}
+
+
+def _save_cells(path: str, cells: dict[str, dict[int, float]]) -> None:
+    with open(path, "w") as f:
+        json.dump({**cells, "_config": OP_CONFIG, "_cores": host_cores()},
+                  f, indent=1, sort_keys=True)
 
 
 def _merge_min(
@@ -956,9 +850,9 @@ def _merge_min(
     """Min-merge measurement attempts: every cell is the MINIMUM over all
     recorded cold-JVM runs. Rationale: the operator's true cost at a scale
     is a lower envelope — host-contention spikes only ever ADD time, and on
-    this shared host single cells measured up to 3x apart across otherwise
-    identical runs (simhash 64x: 15.0/23.3/29.6/48.7 s). The min is the
-    reproducible number; the report notes the policy."""
+    a shared host single cells measure up to 3x apart across otherwise
+    identical runs. The min is the reproducible number; the report notes
+    the policy."""
     out = {n: dict(c) for n, c in base.items()}
     for n, cells in new.items():
         for k, v in cells.items():
@@ -967,345 +861,40 @@ def _merge_min(
     return out
 
 
-PEAKS_JSON = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools",
-    "scaling_peaks.json",
-)
-
-
-def _load_peaks() -> dict[str, dict[int, float]]:
-    try:
-        with open(PEAKS_JSON) as f:
-            raw = _apply_config_reset(json.load(f))
-        return {n: {int(k): v for k, v in c.items()} for n, c in raw.items()}
-    except (OSError, ValueError):
-        return {}
-
-
 CELL_NOTES: dict[str, str] = {
     "kmeans_semantic_dedup": (
-        "row rebuilt in round 9 under ONE algorithm (OP_CONFIG "
-        "vec+hier-forced-r9: BLAS + the IVF-style two-level router forced "
-        "at every octave) — the r8 row min-merged flat-BLAS cells at low "
-        "k against router cells at high k, so its single-row ratios "
-        "compared different algorithms (the r8 ADVICE defect). History "
-        "the reset retires, for the record: the 4x spike was the "
-        "interpreted argmin below the 64-centroid BLAS dispatch "
-        "(plan-size wall, not a speed crossover), and the first 256x "
-        "cell measured 111.35 s on the FLAT path — n·k assignment is "
-        "quadratic under the k ∝ n bounded-cluster-size rule, which is "
-        "why the router (~5·sqrt(k)·dim per point) is the operator's "
-        "auto-dispatch past 256 centroids since r9. The rebuilt row: "
-        "cells through 64x sit on the constant floor (seed-collect + "
-        "one Lloyd pass of fixed job overhead at k <= 1.7k), so the "
-        "first data-dominated octave is 64x->256x at ~3. The 1024x cell "
-        "(5.12M x 64-dim, k ~ 17k centroids) initially OOMed "
-        "(AGGREGATE_OUT_OF_MEMORY / GCLocker exhaustion, 32g AND 48g) and "
-        "the burn-down found TWO real defects behind one symptom: "
-        "(a) train_ivf_centroids localCheckpointed corpus-sized frames "
-        "that buy nothing — each Lloyd pass's assigned frame has exactly "
-        "one consumer and lineage runs through driver-side centroid "
-        "literals, not the frame (fixed in the operator, r9b config tag); "
-        "(b) the doubling FIXTURE's first form gave outer replicas "
-        "unbounded common offsets (1.85-4.81 on one dim of unit-norm "
-        "embeddings), collapsing all pairwise cosines toward 1 — half "
-        "the corpus became a near-dup clique and the CC edge set went "
-        "quadratic (~39 GB checkpoint), which no operator survives "
-        "because the OUTPUT is quadratic (fixture fmt 3 bounds the "
-        "offsets). Post-fix the cell runs at the standing 32g; the last "
-        "octave reads ~4. Growth-class honesty: under k ∝ n the router's "
-        "assignment is n·sqrt(k) = n^1.5 (8x/octave asymptote) vs the "
-        "flat path's n·k = n² (16x/octave asymptote, measured 5.9 "
-        "mid-transition in r8) — measured ~4 here because the bounded "
-        "pair stage and fixed job floors still share the bill; a deeper "
-        "tree (IVF-in-IVF) is the next rung if a future octave drifts "
-        "toward 8. r10: the 4096x cell (20.5M docs / 8.19M vectors, "
-        "k ~ 27k centroids) measured 302.86 s, ratio 5.10 — the predicted "
-        "drift has begun (the sqrt(k) term now outweighs the linear "
-        "stages' dilution), so the named rung was BUILT and MEASURED: "
-        "_assign_to_centroids_tree (assign_hierarchical='deep'), a "
-        "three-level IVF-in-IVF with k^(1/3)-sized levels, per-point "
-        "~9·k^(1/3)·dim vs the two-level's ~5·sqrt(k)·dim, total "
-        "n·k^(1/3) = n^(4/3) (asymptote 6.3x/octave vs 8). Same-window "
-        "head-to-head on the 4096x fixture (tools/bench_router.py, one "
-        "JVM, warm-up + min-of-2 each): two-level 297.89 s vs "
-        "three-level 270.09 s — a 9% cell-level win at k=27k, i.e. the "
-        "crossover is just opening at this scale (the assignment is ~2 "
-        "of the cell's passes; the pair/CC stages dilute the "
-        "assignment-level gap). r11 PROMOTED 'deep' into the auto-dispatch "
-        "past 24576 centroids (similarity._DEEP_CROSSOVER) on an "
-        "assignment-stage-only scan (tools/bench_router.py --assign-only, "
-        "n=2.05M, bench_out/assign_only_scan_r11.txt): deep 31% faster at "
-        "k=32768 (9.3 vs 13.4 s), inverted at k=65536 on THIS small n "
-        "(46.05 vs 19.96 s — the tree's k^(5/3) driver-side Lloyd build is "
-        "n-independent and dominates when the k=n/300 coupling is violated "
-        "10x; the caveat and the named build-cost mitigation live in the "
-        "dispatch docstring). r12 RESET the row to the promoted "
-        "auto-dispatch (OP_CONFIG router-auto-r12, per the r11 verdict): "
-        "the config under test is now the operator's real default — flat "
-        "BLAS <=256 centroids, two-level router past 256, three-level "
-        "tree past 24576 when the n >= 100k coupling holds (the r12 gate "
-        "closing the r11 advice: the tree's ~k^(5/3) driver-side build is "
-        "n-independent, so a decoupled call now falls back instead of "
-        "paying it) — so the 4096x cell (k ~ 27k, n/k = 300) is the first "
-        "to take the tree in-row. The retired forced-two-level row's "
-        "cells (3.52/3.72/4.18/5.07/14.95/59.35/302.86) remain the "
-        "same-algorithm reference for octaves <= 1024x, where auto and "
-        "forced dispatch identically; fresh-config cells carry their own "
-        "envelope. The r12 session's big cells first read ~1.5-2x those "
-        "historical mins (1024x 141.43, then 118.66, then 77.65 across "
-        "three windows; 4096x 500.4/575.2/490.6 with min 452.72) — a "
-        "same-JVM control (tools/bench_router.py 1024 hier auto) measured "
-        "hier=True 72.8 s vs auto 92.0 s min-of-2 on IDENTICAL dispatch "
-        "branches (k=6.8k is far below the deep crossover), with today's "
-        "hier baseline itself 22% above the historical 59.35 — day-level "
-        "host drift on a shared box, not an algorithmic regression, and "
-        "the 1024x envelope's monotone fall across windows confirms it; "
-        "min-merge keeps lowering the envelope as quieter windows occur "
-        "(the 4096x cell's quiet-window min is the one still outstanding)."
-    ),
-    "quality_classifier_train": (
-        "round-12 row for the classifier-training family (2 full-batch GD "
-        "epochs at 1024 hashed buckets + the scoring sweep, labels "
-        "id-derived): 8.79/16.84/20.26/45.63/92.39 s, ratios "
-        "1.92/1.20/2.25/2.03 — sub-linear per octave throughout, exactly "
-        "the boring row batch GD predicts (epochs x corpus passes over a "
-        "once-checkpointed feature frame; the per-epoch collects are "
-        "model-sized and k-invariant, so they read as a constant floor "
-        "that dilutes early octaves). The first 64x attempt measured "
-        "83.73 s in a loaded window with the 256x cell at 92.39 in the "
-        "same sweep (a 1.10 follow-on ratio — physically impossible "
-        "except under contention); the same-window 64x/256x confirmation "
-        "pair read 45.63/98.65, and min-merge settled the row. Measured "
-        "because boring assumed is how the r8 kmeans row went wrong."
-    ),
-    "curation_select_mix": (
-        "round-11 composite (clean -> LSH dedup -> DSIR-select 10% -> "
-        "UniMax-mix over 7 groups; q_curation_select_mix's pipeline form): "
-        "one fresh same-window sweep, ratios 1.37/1.38/2.37/3.71 — "
-        "constant-dominated through 16x, top octave under 4 despite the "
-        "fixture's per-word suffix char growth (same bound discussion as "
-        "curation_pipeline). The delta over the curation_pipeline row "
-        "(159 -> 350 s at 256x) prices the selection tail itself: the DSIR "
-        "featurize runs twice over the cleaned corpus by MEASURED choice "
-        "(materialize=False, bench_out/rebench_dsir_materialize_r11.json) "
-        "plus one target pass — all three are the same explode+agg whose "
-        "per-octave ratio the q_dsir rows already pin; selection and mix "
-        "are k-row-sized past the one TakeOrderedAndProject. r12: the "
-        "3.71 ratio tripped the table's >=3.3 trigger and the 1024x cell "
-        "was run — 1381.89 s, raw ratio 3.95, tracking curation_pipeline's "
-        "own 1024x octave (350->802 there, x2.3 heavier here because the "
-        "tail adds three explode+agg corpus passes) and still inside the "
-        "~5.3 bytes-growth bound the fixture's per-word suffixes impose; "
-        "the bytes-normalized column is the honest read."
-    ),
-    "chunk_documents": (
-        "the 1024x cell's same-window ratio (3.69 -> 17.03, ~4.6) is NOT "
-        "operator super-linearity: the doubling fixture suffixes EVERY "
-        "word of the three outer replicas with x256/x512/x768 (4-5 chars "
-        "on ~6-char words), so per-doc CHARS grow ~20-40% at the top "
-        "octave while docs grow 4x — and the chunker's tokenize stage is "
-        "char-proportional (token count per doc, and thus output rows, "
-        "are unchanged). Normalized to input bytes the octave reads "
-        "~linear; the 26-33 s first attempts were loaded-window samples "
-        "(telemetry gc_sec <= 0.37 on every one — host, not heap)."
-    ),
-    "media_dedup": (
-        "the noisiest row on this shared host (64x attempts have spread "
-        "3.98-49.0 s and 256x attempts 17.0-121.9 s across cold JVMs; "
-        "telemetry shows gc_sec < 2 s on every spiked sample — host, not "
-        "heap; the pHash mapInPandas stage runs 32 Python workers, "
-        "maximally exposed to external CPU contention). Round-8 fixed the "
-        "kernel itself (per-row DCT rebuild hoisted, then batched dgemm "
-        "DCT + vectorized median bit-pack, bit-parity-checked on 5k "
-        "inputs); round-9 closed the r8 verdict's honesty gap — the row "
-        "used to print a 4.27 last ratio only because its 64x cell caught "
-        "one exceptionally quiet window (3.98 s) while the 256x min came "
-        "from a different day. The OP_CONFIG reset rebuilt the whole row "
-        "from same-day cold-JVM envelopes (the burn-down's final quiet "
-        "window measured the 64x/256x PAIR together: 3.69/11.71, last "
-        "octave ~3.2, no footnote needed). Both stages stay row-linear "
-        "(the hamming join "
-        "is the same Manku blocking simhash_pairs holds ~3 with). "
-        "r10: the voluntary 1024x cell found a real, reproducible blowup "
-        "(118-225 s across four cold JVMs in two windows, gc <= 3 s) and "
-        "the burn-down went through a WRONG fix before the right one: "
-        "(1) hypothesis 'quadratic accidental candidates' → auto-deepened "
-        "the clean-block count on corpus size → measured WORSE (161.8 s; "
-        "and 3x worse on text simhash), refuting it; (2) direct "
-        "decomposition then measured the truth — the pHash stage was FLAT "
-        "(17.0 → 18.8 s for 4x data), signature entropy was fine (93% "
-        "distinct), but TRUE verified pairs grew 5.42M → 86.07M (ratio "
-        "15.9): the doubling fixture's word suffixes barely move byte "
-        "histograms, so same-base replicas all land within hamming 3 — "
-        "quadratic OUTPUT, the pHash analogue of the r9 embedding-offset "
-        "cosine collapse, and a FIXTURE artifact, not an operator wall. "
-        "Fixed in the fixture (per-doc content salt + 1% planted exact "
-        "twins for a constant dup rate; OP_CONFIG phash-salted-fixture-"
-        "r10) — which did NOT move the cell, refuting hypothesis (2)'s "
-        "salt form too: sha256 already decorrelates any byte change, and "
-        "the measured pair density (~6.6e-9 per UNRELATED pair, constant "
-        "across scales) pointed INSIDE the stub — fake_decode emitted 16 "
-        "pixels that tile cyclically through the 32x32 pHash DCT, "
-        "collapsing the 63 hash bits onto ~16 independent values, so "
-        "near-dup pair counts were quadratic for ANY input. The r10 final "
-        "fix gives the stub a full-entropy 32x32 shake_256 grid (OP_CONFIG "
-        "phash-fullentropy-decode-r10; sampled pairs: min hamming 14, "
-        "mean 31.5) — the property real images have: distinct contents "
-        "separate, exact byte twins still collide. Post-fix stage "
-        "decomposition (tools/decompose_media.py, one JVM per scale): "
-        "pairs are exactly the planted twins at BOTH scales (12,800 @ "
-        "256x -> 51,200 @ 1024x — OUTPUT now linear by construction), "
-        "t_phash 18.78 -> 55.38 s (ratio 2.95; the full-entropy stub "
-        "pays shake_256 over the full content, byte-proportional like a "
-        "real codec) and t_pairs 12.14 -> 46.94 s (ratio 3.87, the same "
-        "Manku join simhash_pairs holds ~4 with) — every stage linear or "
-        "better. The envelope converged after 7 attempts across 4 windows "
-        "(1024x spread 88.5-411 s — the worst-variance row in the table): "
-        "a SAME-WINDOW 256x/1024x pair measured 38.18 -> 88.54 s, ratio "
-        "2.32, and the 88.54 also set the row's 1024x min. The raw last "
-        "column divides a quiet-window 256x min by this 1024x min "
-        "(cross-window, reads ~5.6); the bytes-norm column and the "
-        "decomposition are the honest exponent: linear. r11 confirmation: "
-        "an independent same-window pair in a LOADED window measured "
-        "91.73 -> 262.17 s (both ~5.8x the envelope mins — external host "
-        "contention hits all 32 pHash workers multiplicatively), ratio "
-        "2.86: the exponent reproduces regardless of window quality, "
-        "which is what pair-wise measurement is for."
-    ),
-    "duplicate_spans": (
-        "the 16x->64x step (3.29 -> 13.14, ratio 3.99) is real, not a "
-        "spike — remeasured 13.6 on a second cold JVM. The step includes "
-        "the dup-hash semi-join's broadcast->shuffle flip as the distinct-"
-        "gram set outgrows the broadcast threshold; the 64x->256x ratio is "
-        "the exponent to read."
+        "n_clusters = max(8, n/300), so the sweep's cells run 8 to 106 "
+        "centroids, all on the flat BLAS assignment, and sit on the "
+        "constant floor of the seed collect plus one Lloyd pass. The "
+        "two-level router takes over past 256 centroids, from the 64x "
+        "octave (about 426), so a 64x cell would be the first to price it."
     ),
     "nfc_normalize": (
-        "64x (1.3 s) nominally exceeds 256x (1.08 s): both cells are "
-        "constant-dominated (sub-1.5 s Arrow round-trip floor) and the 64x "
-        "value reproduced across remeasures — partition-packing effects at "
-        "these sizes swamp the 4x data growth; read the exponent from the "
-        "bigger octaves of chunk_documents/gopher_filter instead, which "
-        "share the corpus-shaped cost."
-    ),
-    "curation_pipeline": (
-        "the flagship composite got a voluntary 1024x cell (801.98 s over "
-        "5.12M docs) even though its 2.01 ratio at 64x->256x did not flag "
-        "it. The 5.03 top-octave ratio is the doubling FIXTURE's char "
-        "growth, not pipeline super-linearity: outer replicas add a "
-        "4-char suffix to every word (measured corpus: 5.48 chars/word, "
-        "avg base-fixture suffix 3.56 -> per-doc chars grow x1.33 at the "
-        "top octave), so a purely char-proportional stage should read "
-        "4 x 1.33 = 5.33 — and the pipeline's char-7-gram LSH stage IS "
-        "char-proportional while its word-LSH/quality/mixture stages are "
-        "word/doc-proportional, landing the blend at 5.03, under the "
-        "pure-char bound. Normalized to input bytes the composite stays "
-        "~linear, consistent with every component row measured alone."
-    ),
-    "signlsh_topk": (
-        "the r9 1024x octave caught a REAL wall in the fixed-depth form "
-        "this row used to measure (num_planes=4 → 16 buckets): expected "
-        "bucket occupancy is corpus/2^planes, so per-probe verify cost "
-        "grows linearly with the corpus — 6.5M vectors flooded the "
-        "verifier at 220.28 s, a 15.9 last-octave ratio with gc_sec 3-5 s "
-        "of genuine heap pressure (32.8 GB peak). The fix is in the "
-        "OPERATOR, not the harness: num_planes=None now auto-depths "
-        "(planes = ceil(log2(n/1024)), clamped [4,24] — constant expected "
-        "occupancy, the plane-count analogue of IVF's sqrt(n) cell rule), "
-        "and this row measures that form (OP_CONFIG reset): 1024x dropped "
-        "220.28 → 17.17 s. The remaining last-octave ratio carries the "
-        "honest log-cost of depth: each octave adds ~2 planes, so the "
-        "multiprobe fan-out (planes+1 probes per query) and per-row "
-        "bucket arithmetic grow ~log(n) on top of the linear scan. "
-        "Envelope boundary (documented in the operator since r10): the "
-        "auto-depth clamp at 24 planes stops adapting past n = 2^24 x 1024 "
-        "~ 17B vectors — beyond it expected occupancy grows linearly "
-        "again. The clamp is deliberate: multiprobe fans the query side "
-        "x(planes+1) and single-table recall decays as p^planes, so past "
-        "that scale deeper buckets buy occupancy with recall the operator "
-        "cannot defend — shard the corpus or switch to ivf_topk (sqrt(n) "
-        "cells keep both sides sub-linear). Callers in a loop can pass "
-        "corpus_count to skip auto-depth's extra count() action."
-    ),
-    "simhash_pairs": (
-        "row remeasured in round 10 under the RESTORED fixed-3 blocking "
-        "(OP_CONFIG manku-fixed3-r10) after serving as the control for "
-        "the media burn-down: the auto-deepen experiment (4 clean blocks "
-        "at 5.12M signatures) measured 132.98/147.34 s vs fixed-3's "
-        "45.53 s — the 4th block's ~75% extra blocking rows are pure cost "
-        "when the candidate stream is true pairs rather than accidental "
-        "collisions. The deeper rule remains available as an explicit "
-        "opt-in for the uniform-model regime (combos·n²/2^keybits ≳ 10n "
-        "of genuinely high-entropy signatures); output is invariant "
-        "either way (pinned by test)."
-    ),
-    "incremental_lsh_dedup": (
-        "row remeasured in round 10 under the PRE-GROUPED signature store "
-        "(OP_CONFIG grouped-store-r10). The r9 row (147.63 s at 1024x, "
-        "ratios 3.55/3.28) had no cause note; the round-10 stage "
-        "decomposition (tools/decompose_incremental.py, cold JVM on the "
-        "same 1024x fixture) named the dominant stage: shingle 41.3 s / "
-        "band 15.2 s / EXPAND 76.2 s / hits 11.4 s / verify 8.8 s / anti "
-        "13.1 s — 46% of the cell was the union+re-aggregation of the "
-        "corpus-sized row-form store into buckets, paid again on every "
-        "batch. The fix is in the OPERATOR: group_banded_store persists "
-        "the store in inverted-index form once at store-write time, and "
-        "the batch run left-joins it by (band_idx, band_hash) instead of "
-        "re-aggregating it (store-only buckets never even enter the join); "
-        "on a real cluster the store table is bucketed on those keys and "
-        "the join is shuffle-free on the store side. Exact-parity is "
-        "pinned by test (survivors AND signature rows identical to the "
-        "row path) and by q_incremental_dedup_grouped sharing the row "
-        "path's DuckDB oracle. Remaining cost is the honest batch-side "
-        "work: char-proportional shingling + minhash over the batch, "
-        "which the bytes-norm column reads as ~linear."
-    ),
-    "minhash_lsh_dedup": (
-        "bench-layer r9 mover resolved: bench_out r08->r09 showed this "
-        "query's per-iteration min regressing 1.602 -> 1.993 s (+24%) with "
-        "a provably unchanged plan (PLANS.md diff empty). Round 10 applied "
-        "the cold-JVM envelope protocol at the bench layer "
-        "(tools/rebench_one.py, 6 independent JVMs x 3 telemetry samples, "
-        "bench_out/rebench_q_minhash_lsh_dedup_r10.json): envelope min "
-        "1.522 s, gc_sec <= 0.04 on every sample, peak heap ~2 GB — the "
-        "r9 number was shared-host contention, not a code or plan cause; "
-        "the floor is at/below the r8 value."
+        "every cell is on the Arrow pandas-UDF round-trip floor, so a "
+        "smaller octave can read slower than a larger one; read the "
+        "corpus-shaped exponent from chunk_documents or gopher_filter."
     ),
     "bpe_round": (
-        "the scaled fixture's per-replica word suffixes make the VOCABULARY "
-        "grow linearly with corpus size (every replica's words are "
-        "distinct), so this row measures vocab-proportional pair counting — "
-        "an upper bound; a real corpus's vocab grows sub-linearly (Heaps' "
-        "law) and the pair-count frame with it. The first 256x attempt "
-        "(min 9.71 s) was a spiked cell — its first timed sample ran "
-        "64.33 s with gc_sec 0.5 (host, not heap); a fresh cold JVM "
-        "measured 2.2 s, ratio 1.96."
+        "the fixture's per-replica word suffixes make the vocabulary grow "
+        "linearly with corpus size, so this row is an upper bound: a real "
+        "corpus's vocabulary grows sub-linearly (Heaps' law), and the "
+        "pair-count frame with it."
     ),
 }
 """Per-row cause notes rendered under the operator table — the burn-down
 record for cells the monotonicity legend would otherwise flag."""
 
 
-TELEM_JSON = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools",
-    "scaling_telemetry.json",
-)
-
-
 def _append_telemetry(telem: dict[str, dict[int, list]]) -> None:
     """Append per-run {sec, gc_sec, peak_heap_mb} samples to the cell's
     attempt history — the diagnosis record for spiked cells (big gc_sec →
     heap pressure; clean JVM profile + 3x sec → host contention)."""
-    try:
-        with open(TELEM_JSON) as f:
-            hist = json.load(f)
-    except (OSError, ValueError):
-        hist = {}
-    for name, cells in (telem or {}).items():
+    hist = _read_history(TELEM_JSON)
+    for name, cells in telem.items():
         for k, samples in cells.items():
             hist.setdefault(name, {}).setdefault(str(k), []).extend(samples)
     with open(TELEM_JSON, "w") as f:
-        json.dump(hist, f, indent=1, sort_keys=True)
+        json.dump({**hist, "_cores": host_cores()}, f, indent=1, sort_keys=True)
 
 
 def _bytes_norm_top(
@@ -1317,7 +906,7 @@ def _bytes_norm_top(
     """Top measured octave's time ratio normalized to fixture input bytes:
     time_ratio × 4 / bytes_ratio — a linear-in-bytes op reads ~4 regardless
     of the doubling fixture's per-doc char growth (which inflates raw
-    char-proportional ratios up to ~5.3 at the top octave)."""
+    char-proportional ratios at the top octave)."""
     src = "embeddings" if name in OPS_EMB else "documents"
     byt = fixture_bytes.get(src, {})
     pairs = [(a, b) for a, b in zip(render_ks, render_ks[1:])
@@ -1336,79 +925,65 @@ def write_report(
     peaks: dict[str, dict[int, float]] | None = None,
     telem: dict[str, dict[int, list]] | None = None,
 ) -> None:
-    """Run the revgeo crossover and write SCALING.md from octave results
-    (callable standalone to re-assemble the report from logged octaves)."""
+    """Min-merge fresh cells into this core count's history, run the revgeo
+    crossover and write SCALING.md (with no fresh cells it re-renders the
+    report from the history)."""
+    cores = host_cores()
     if telem:
         _append_telemetry(telem)
-    results = _merge_min(_load_results(), results)
-    with open(RESULTS_JSON, "w") as f:
-        json.dump({**results, "_config": OP_CONFIG}, f, indent=1, sort_keys=True)
+    results = _merge_min(_load_cells(RESULTS_JSON), results)
+    _save_cells(RESULTS_JSON, results)
     # peaks max-merge: the memory requirement is the upper envelope (the
     # opposite convention from wall time, where contention only adds)
-    all_peaks = _load_peaks()
+    all_peaks = _load_cells(PEAKS_JSON)
     for n, cells in (peaks or {}).items():
         for k, v in cells.items():
             cur = all_peaks.setdefault(n, {}).get(k)
             all_peaks[n][k] = v if cur is None else max(cur, v)
-    with open(PEAKS_JSON, "w") as f:
-        json.dump({**all_peaks, "_config": OP_CONFIG}, f, indent=1, sort_keys=True)
+    _save_cells(PEAKS_JSON, all_peaks)
     from data_rivers_spark.session import get_spark, load_tables
 
     spark = get_spark(app_name="scaling")
     # the crossover cells min-merge across report writes like every other
-    # cell (stored as pseudo-ops keyed by zone count) — a single report
-    # regenerated during a contention window used to overwrite the whole
-    # table with spiked numbers
+    # cell (stored as pseudo-ops keyed by zone count)
     fresh_x = revgeo_crossover(spark, sf_dir)
     results = _merge_min(
         results,
         {
-            # not "revgeo_bnlj": that key holds the retired nested-loop
-            # join's history, which must not min-merge into these cells
             "revgeo_projection": {n: p for n, p, _ in fresh_x},
             "revgeo_grid": {n: g for n, _, g in fresh_x},
         },
     )
-    with open(RESULTS_JSON, "w") as f:
-        json.dump({**results, "_config": OP_CONFIG}, f, indent=1, sort_keys=True)
+    _save_cells(RESULTS_JSON, results)
     xrows = [
         (n, results["revgeo_projection"][n], results["revgeo_grid"][n])
         for n in sorted(results.get("revgeo_projection", {}))
     ]
+    ops = {n: r for n, r in results.items() if not n.startswith("revgeo_")}
 
     n0 = (
         load_tables(spark, sf_dir, ["documents"])["documents"]
         .filter(F.trim("text") != "")
         .count()
     )
-    top_k = max(
-        (k for n, r in results.items() if not n.startswith("revgeo_")
-         for k in r),
-        default=KS[-1],
-    )
-    # render columns: the standing REPORT_KS plus any deeper voluntary cells
-    # present in the history (e.g. a 4096x octave measured for one op)
-    render_ks = tuple(sorted(set(REPORT_KS) | {
-        k for n, r in results.items() if not n.startswith("revgeo_") for k in r
-    }))
+    # render columns: REPORT_KS plus any other octave in the history
+    render_ks = tuple(sorted(set(REPORT_KS) | {k for r in ops.values() for k in r}))
+    every_row = [k for k in render_ks if ops and all(k in r for r in ops.values())]
+    some_rows = {k: sum(k in r for r in ops.values()) for k in render_ks
+                 if k not in every_row}
+    top_k = max((k for r in ops.values() for k in r), default=KS[-1])
     fixture_bytes = _load_bytes()
-
-    def _norm_top(name: str, r: dict[int, float]) -> str:
-        return _bytes_norm_top(name, r, render_ks, fixture_bytes)
-
     header_cells = " | ".join(f"{k}x (s)" for k in render_ks)
     ratio_cells = " | ".join(
         f"{a}x->{b}x" for a, b in zip(render_ks, render_ks[1:])
     )
+    scope = [" / ".join(f"{k}x" for k in every_row) + " corpus size"] if every_row else []
+    scope += [f"{k}x for {c} row{'s' * (c != 1)}" for k, c in some_rows.items() if c]
     lines = [
-        "# SCALING — measured operator scaling at "
-        + " / ".join(f"{k}x" for k in KS)
-        + " corpus size (1024x for rows whose 64x->256x ratio sat >= 3.3,"
-        " plus the flagship composite)\n",
+        f"# SCALING — measured operator scaling at {'; '.join(scope)}, on {cores} cores\n",
         f"\nGenerated by `tools/scaling.py` on `{sf_dir}` (base corpus {n0} docs;",
-        " %dx = %d docs), local[32]. Each growth column is the runtime"
-        % (top_k, n0 * top_k),
-        " ratio over a 4x data increase: ~4 = linear (healthy for",
+        f" {top_k}x = {n0 * top_k} docs), local[{cores}]. Each growth column is",
+        " the runtime ratio over a 4x data increase: ~4 = linear (healthy for",
         " shuffle-bounded ops), >>4 = super-linear (the quadratic smell the",
         " bucket caps / blocking / banding are there to prevent). Replicas",
         " carry DISTINCT content (per-replica word suffix / embedding",
@@ -1418,40 +993,35 @@ def write_report(
         " factors are flattered by the warm local page cache; the exponent is",
         " the signal. Every CELL is an independent cold JVM over a",
         " parquet-materialized fixture, and the recorded value is the MINIMUM",
-        " over all such runs (tools/scaling_results.json keeps the attempt",
-        " history; --remeasure re-runs flagged cells): shared-session runs",
-        " inflated random cells via heap pressure, and this shared host adds",
-        " spikes up to 3x on single cells (observed simhash 64x:",
-        " 15.0/23.3/29.6/48.7 s across identical runs) — contention only ever",
-        " ADDS time, so the lower envelope is the operator's cost. A row",
-        " where a later octave still beats an earlier one marks a spike not",
-        " yet burned down.\n",
+        f" over all such runs at {cores} cores (tools/scaling_results.json keeps",
+        " the attempt history; `--remeasure OP:K` re-runs a cell): contention",
+        " only ever ADDS time, so the lower envelope is the operator's cost. A",
+        " row where a later octave still beats an earlier one marks a spike",
+        " not yet burned down.\n",
         "\nThe last column normalizes the TOP measured octave to fixture",
         " input bytes (tools/scaling_bytes.json: sum(octet_length(text)) for",
         " document ops, rows × dim × 8 for embedding ops): time_ratio × 4 /",
-        " bytes_ratio. The doubling fixture (k > 256) suffixes every word of",
-        " its outer replicas, growing per-doc CHARS ~33% per level while docs",
-        " grow 4x — so a char-proportional op that is perfectly LINEAR in",
-        " input bytes reads a raw top ratio up to 4 × 1.33 ≈ 5.3; the",
-        " normalized column makes linear rows read ~4 without prose.\n",
+        f" bytes_ratio. Octaves past {KS[-1]}x are built by doubling, which",
+        " suffixes every word of the outer replicas again, so per-doc CHARS",
+        " grow while docs grow 4x; a char-proportional op that is perfectly",
+        " LINEAR in input bytes reads a raw top ratio above 4, and the",
+        " normalized column makes such rows read ~4 without prose.\n",
         f"\n| operator | {header_cells} | {ratio_cells} | top (bytes-norm) |\n",
         "|---|" + "---|" * (2 * len(render_ks)) + "\n",
     ]
-    for name, r in results.items():
-        if name.startswith("revgeo_"):
-            continue  # rendered in the crossover table below
+    for name, r in ops.items():
         vals = " | ".join(str(r.get(k, "—")) for k in render_ks)
         ratios = " | ".join(
             str(round(r[b] / r[a], 2)) if r.get(a) and r.get(b) else "—"
             for a, b in zip(render_ks, render_ks[1:])
         )
-        lines.append(f"| {name} | {vals} | {ratios} | {_norm_top(name, r)} |\n")
-    noted = [n for n in CELL_NOTES if n in results]
+        norm = _bytes_norm_top(name, r, render_ks, fixture_bytes)
+        lines.append(f"| {name} | {vals} | {ratios} | {norm} |\n")
+    noted = [n for n in CELL_NOTES if n in ops]
     if noted:
         lines.append(
-            "\nPer-cell cause notes (burn-down record; spiked samples carry"
-            " {sec, gc_sec, peak_heap_mb} diagnosis in"
-            " tools/scaling_telemetry.json):\n\n"
+            "\nPer-row notes (spiked samples carry {sec, gc_sec, peak_heap_mb}"
+            " diagnosis in tools/scaling_telemetry.json):\n\n"
         )
         for n in noted:
             lines.append(f"- **{n}** — {CELL_NOTES[n]}\n")
@@ -1493,10 +1063,7 @@ def write_report(
         lines.append(
             f"| {n_zones} | {t_proj} | {t_grid} | {round(t_proj / t_grid, 2)}x |\n"
         )
-    with open(
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALING.md"),
-        "w",
-    ) as f:
+    with open(os.path.join(os.path.dirname(_TOOLS_DIR), "SCALING.md"), "w") as f:
         f.write("".join(lines))
     print(json.dumps({"ops": results, "revgeo": xrows}))
 

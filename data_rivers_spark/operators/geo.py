@@ -46,7 +46,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_rivers_spark.functions.geo import point_in_polygon, wkt_polygon_vertices
-from data_rivers_spark.session import fan_out
+from data_rivers_spark.session import fan_out, job_label
 
 _ZONE_FIELDS = ("__zone_val", "__verts", "__xmin", "__xmax", "__ymin", "__ymax",
                 "__zstart", "__zend")
@@ -154,12 +154,8 @@ def _zone_facts(
                      zs if cap is None else F.when(n <= cap, zs)]
         facts = union.agg(*aggs)
         # a JVM-side action carries no Python call site; name its stages
-        jsc = spark.sparkContext._jsc
-        jsc.setCallSite("collect at operators.geo._zone_facts")
-        try:
+        with job_label(spark, "collect at operators.geo._zone_facts"):
             row = facts._jdf.collect()[0]
-        finally:
-            jsc.setCallSite(None)
         fields = facts._jdf.schema().fields()
         jvm = spark._jvm
         for i, zones in enumerate(todo):

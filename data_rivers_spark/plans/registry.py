@@ -22,9 +22,12 @@ after sorting columns by name):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_rivers_spark.session import QUERY_NAME
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -33,15 +36,26 @@ ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a driver-contract query; ``oracle`` is DuckDB SQL or None."""
+    """Register a driver-contract query; ``oracle`` is DuckDB SQL or None.
+    While the query is built, ``QUERY_NAME`` holds ``name``, so its stage
+    barriers (``session.stage``) name their jobs ``<name>:<stage>``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def build(*args, **kwargs) -> DataFrame:
+            token = QUERY_NAME.set(name)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                QUERY_NAME.reset(token)
+
+        QUERIES[name] = build
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return build
 
     return deco
 

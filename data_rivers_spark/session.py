@@ -9,9 +9,15 @@ deployment-independent.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import subprocess
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# name of the registered query being built; plans.registry.query sets it
+QUERY_NAME: ContextVar[str | None] = ContextVar("query_name", default=None)
 
 
 def get_spark(
@@ -52,6 +58,28 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     warm_hof_resolution(spark)
     return spark
+
+
+def stop_spark(spark: SparkSession) -> None:
+    """Stop ``spark`` and end the py4j gateway JVM it runs in.
+
+    ``spark.stop()`` stops only the SparkContext: the gateway JVM that
+    pyspark launched stays up, with its heap, until the Python process
+    exits. A later ``get_spark`` in the same process launches a new one."""
+    from pyspark import SparkContext
+
+    gateway = spark.sparkContext._gateway
+    proc = getattr(gateway, "proc", None)
+    spark.stop()
+    gateway.shutdown()
+    SparkContext._gateway = SparkContext._jvm = None
+    if proc is not None:
+        try:
+            proc.stdin.close()  # the gateway server exits on stdin EOF
+            proc.wait(timeout=60)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
 
 
 _HOF_WARMED: set[str] = set()
@@ -111,6 +139,45 @@ def fan_out(df, min_frac: float = 0.5):
     if current < max(int(cpus * min_frac), 1):
         return df.repartition(cpus)
     return df
+
+
+@contextlib.contextmanager
+def job_label(spark: SparkSession, label: str):
+    """Name every Spark job submitted inside the block ``label``, then
+    restore the previous name.
+
+    The name is the job's call site (``JobData.name()`` in the status
+    store, readable with ``spark.ui.enabled=false``), not
+    ``spark.job.description``: a span tracer owns the description and
+    attributes each job by it, and the two live side by side on one job."""
+    jsc = spark.sparkContext._jsc
+    prev = jsc.getLocalProperty("callSite.short")
+    jsc.setCallSite(label)
+    try:
+        yield
+    finally:
+        jsc.setCallSite(prev)
+
+
+def stage(df: DataFrame, name: str, eager: bool = True) -> DataFrame:
+    """Stage barrier: localCheckpoint ``df`` (executor block store, lineage
+    truncated) under the job name ``<query>:<name>``, where ``<query>`` is
+    the registered query being built (``QUERY_NAME``); outside one the name
+    is ``<name>``.
+
+    Use it where a frame has several consumers or where a plan must be cut
+    (see each call site). ``eager`` runs the checkpoint job now; a lazy
+    barrier marks the frame and fills it on its first action, though AQE
+    may still run the shuffle stages below it while planning here.
+    List the stage jobs of a session with::
+
+        store = spark.sparkContext._jsc.sc().statusStore()
+        for job in store.jobsList(None):
+            print(job.jobId(), job.name(), job.status())
+    """
+    query = QUERY_NAME.get()
+    with job_label(df.sparkSession, f"{query}:{name}" if query else name):
+        return df.localCheckpoint(eager)
 
 
 _PARTS_MEMO: dict[tuple[str, int], int] = {}

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_rivers_spark.session import fan_out, plan_partitions, stage
+
 # ---------------------------------------------------------------------------
 # Tokenize / shingle helpers (shared with textstats)
 # ---------------------------------------------------------------------------
@@ -72,8 +74,6 @@ def _shingle_partition_count(df: DataFrame, num_partitions: int | None) -> int:
     better pass ``num_partitions`` explicitly."""
     if num_partitions is not None:
         return num_partitions
-    from data_rivers_spark.session import plan_partitions
-
     # memoized physical-plan probe (r13): df.rdd re-planned the whole
     # lineage per call — ~0.26 s of plan-time driver latency per shingle
     # build, paid on every query construction
@@ -317,8 +317,6 @@ def _expand_buckets(
     # counts the executors up at that moment, so the pin can undershoot
     # the cores the job later gets (the input's width stays the floor).
     spark_dp = banded.sparkSession.sparkContext.defaultParallelism
-    from data_rivers_spark.session import plan_partitions
-
     width = max(spark_dp, plan_partitions(banded) or 0)
     grouped = (
         banded.repartition(width, "band_idx", "band_hash")
@@ -565,7 +563,7 @@ def minhash_lsh_dedup(
     # checkpointed dupes frame is referenced per branch at zero replay
     # cost, and AQE re-sizes it at runtime for the broadcast decision
     dupes = verified.select(F.col("id_b").alias(id_col)).distinct()
-    dupes = dupes.localCheckpoint(eager=True)
+    dupes = stage(dupes, "lsh_dupes")
     return df.join(dupes, id_col, "left_anti")
 
 
@@ -606,23 +604,32 @@ def minhash_lsh_verified_pairs(
         sets = char_shingle_sets(df, text_col, id_col, shingle_n)
     else:
         sets = shingle_sets(df, text_col, id_col, shingle_n)
-    # LAZY sets + EAGER banded (r14): the eager sets barrier was one of
-    # two sequential driver-blocking jobs per dedup run. The banded
-    # frame's checkpoint job now materializes sets inside itself —
-    # sets' first consumer is banded's narrow derive, so the cache
-    # populates race-free before the verify branches (which read sets
-    # through the SAME truncated-lineage blocks) ever touch it. An
-    # all-lazy variant was measured SLOWER on the incremental twin
-    # (within one job the verify-side stages raced the banded stage on
-    # the uncached sets partitions and recomputed the tokenize
-    # concurrently); this shape keeps one barrier and zero recompute.
-    sets = sets.localCheckpoint(eager=False)
-    banded = _banded_from_sets(sets, id_col, num_hashes, bands)
-    banded = banded.localCheckpoint(eager=True)
+    sets, banded = _staged_signatures(sets, id_col, num_hashes, bands)
     cands = _expand_buckets(banded, id_col, bucket_cap)
     return verify_pairs_jaccard(
         df, cands, text_col, id_col, threshold, shingle_n=shingle_n, sets=sets
     )
+
+
+def _staged_signatures(
+    sets: DataFrame, id_col: str, num_hashes: int, bands: int
+) -> tuple[DataFrame, DataFrame]:
+    """Stage a shingle-set frame and its banded signature rows: LAZY sets,
+    EAGER banded (r14). An eager sets barrier was one more sequential
+    driver-blocking job per dedup call (a construct-vs-save split measured
+    the barriers at ~60% of q_incremental_dedup_grouped's per-iteration
+    wall, with the noop save at 0.3 s). Lazy marking persists and truncates
+    the same lineage, and banded's eager job materializes sets inside
+    itself — sets' first consumer is banded's narrow derive, so the cache
+    populates race-free before the verify branches (which read sets through
+    the SAME truncated-lineage blocks) ever touch it. An all-lazy variant
+    was measured SLOWER on the incremental twin: within one job the
+    verify-side stages raced the banded stage on the uncached sets
+    partitions and recomputed the tokenize concurrently. This shape keeps
+    one barrier and zero recompute."""
+    sets = stage(sets, "shingle_sets", eager=False)
+    banded = stage(_banded_from_sets(sets, id_col, num_hashes, bands), "lsh_banded")
+    return sets, banded
 
 
 def group_banded_store(banded: DataFrame, id_col: str) -> DataFrame:
@@ -733,22 +740,9 @@ def incremental_lsh_dedup(
         raise ValueError(
             "pass exactly one of master_banded / master_banded_grouped"
         )
-    # LAZY sets + EAGER banded (r14): the eager sets_b barrier was one
-    # of ~7 sequential driver-blocking jobs per composite run
-    # (a construct-vs-save split measured the barriers at ~60% of
-    # q_incremental_dedup_grouped's per-iteration wall, with the noop
-    # save at 0.3 s). Lazy marking persists + truncates the same
-    # lineage, and banded_b's eager job materializes sets_b inside
-    # itself — sets_b's first consumer is banded_b's narrow derive, so
-    # the cache populates race-free before the verify branches read
-    # it. An ALL-lazy variant (banded_b lazy too) was measured SLOWER:
-    # inside the dupes job the verify-side stages raced the banding
-    # stage on the uncached sets partitions and recomputed the batch
-    # tokenize concurrently.
-    sets_b = shingle_sets(batch, text_col, id_col, shingle_n)
-    sets_b = sets_b.localCheckpoint(eager=False)
-    banded_b = _banded_from_sets(sets_b, id_col, num_hashes, bands)
-    banded_b = banded_b.localCheckpoint(eager=True)
+    sets_b, banded_b = _staged_signatures(
+        shingle_sets(batch, text_col, id_col, shingle_n), id_col, num_hashes, bands
+    )
     if master_banded_grouped is not None:
         gb = banded_b.groupBy("band_idx", "band_hash").agg(
             F.collect_list(F.col(id_col)).alias("__bids")
@@ -789,8 +783,6 @@ def incremental_lsh_dedup(
     # trivial-plan probe): letting verify probe the batch ∪ hit-docs union
     # would re-plan the hit-docs shingle lineage per call (~0.2 s driver
     # latency per batch, and unstable across runs so the memo never hits)
-    from data_rivers_spark.session import plan_partitions
-
     vw = max(
         batch.sparkSession.sparkContext.defaultParallelism,
         plan_partitions(sets_b) or 0,
@@ -800,7 +792,7 @@ def incremental_lsh_dedup(
         sets=sets, width=vw,
     )
     dupes = verified.select(F.col("id_b").alias(id_col)).distinct()
-    dupes = dupes.localCheckpoint(eager=True)
+    dupes = stage(dupes, "lsh_dupes")
     survivors = batch.join(dupes, id_col, "left_anti")
     if keep_dropped_signatures:
         return survivors, banded_b
@@ -862,8 +854,6 @@ def verify_pairs_jaccard(
     # hint is deliberately absent. As in _expand_buckets, defaultParallelism
     # is read at plan time and can undershoot under dynamic allocation.
     spark_dp = pairs.sparkSession.sparkContext.defaultParallelism
-    from data_rivers_spark.session import plan_partitions
-
     # width from SETS, not pairs: sets is (in every pipeline caller) a
     # checkpoint-backed frame whose partition probe is a trivial-plan
     # lookup, while the pairs lineage re-plans the whole expansion per
@@ -924,8 +914,6 @@ def ngram_jaccard_pairs(
       defaults to min(defaultParallelism, 64) — scale-adaptive, capped so
       the b-side replication factor stays bounded; callers with wider
       clusters and few blocks can raise `salts` explicitly."""
-    from data_rivers_spark.session import fan_out
-
     spark = df.sparkSession
     n_salts = salts or max(1, min(spark.sparkContext.defaultParallelism, 64))
     base = fan_out(
@@ -1048,8 +1036,6 @@ def simhash_column(df: DataFrame, text_col: str, out_col: str = "simhash") -> Da
     input): the vectorized FNV/vote kernel dominates the scan by orders of
     magnitude, and a single-split input would run every batch in ONE task
     (r13: the whole sf0.1 corpus signature pass ran single-task)."""
-    from data_rivers_spark.session import fan_out
-
     return fan_out(df).withColumn(out_col, _simhash_udf()(F.col(text_col)))
 
 
@@ -1167,7 +1153,7 @@ def simhash_near_pairs(
         raise ValueError("max_hamming=0 is exact equality — groupBy the signature")
     if extra_clean_blocks is not None:
         _clean_block_widths(max_hamming, extra_clean_blocks)
-    df = df.select(id_col, sim_col).localCheckpoint(eager=True)
+    df = stage(df.select(id_col, sim_col), "simhash_sigs")
     if extra_clean_blocks is None:
         n = df.count() if corpus_count is None else int(corpus_count)
         extra_clean_blocks = _auto_clean_blocks(n, max_hamming)
@@ -1262,7 +1248,7 @@ def connected_components(
     # consumer branch (lineage reuse is not computation reuse; measured
     # q_embedding_lsh_cc_dedup paying the verify twice inside one union
     # stage). Pair-graph-sized, never corpus-sized.
-    cp = pairs.select("id_a", "id_b").localCheckpoint()
+    cp = stage(pairs.select("id_a", "id_b"), "cc_pairs")
     # r13 size-gated dispatch (same shape as the kmeans router): a near-dup
     # pair graph is PAIR-sized, not corpus-sized, and below
     # ``driver_max_edges`` (~32 MB of id pairs at the default) an in-core
@@ -1313,12 +1299,10 @@ def connected_components(
     edges = cp.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(cp.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    edges = edges.distinct().localCheckpoint()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint()
+    edges = stage(edges.distinct(), "cc_edges")
+    labels = stage(
+        edges.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id")),
+        "cc_labels",
     )
     converged = False
     for it in range(max_iterations):
@@ -1327,26 +1311,19 @@ def connected_components(
             .groupBy("dst")
             .agg(F.min("component").alias("nbr_min"))
         )
-        prop = (
-            labels.join(msgs, labels.id == msgs.dst, "left")
-            .select(
+        comp = F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component")))
+        prop = stage(
+            labels.join(msgs, labels.id == msgs.dst, "left").select(
                 "id",
-                F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))).alias(
-                    "component"
-                ),
+                comp.alias("component"),
                 # convergence flag computed IN the propagation pass: the
                 # old round ran a second join+count job against the prior
                 # labels just to ask "did anything move" — at toy scale
                 # that doubled the per-round fixed cost (measured ~10s of
                 # pure scheduling on a 3.7k-edge graph)
-                (
-                    F.least(
-                        F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                    )
-                    != F.col("component")
-                ).alias("__chg"),
-            )
-            .localCheckpoint()
+                (comp != F.col("component")).alias("__chg"),
+            ),
+            "cc_round",
         )
         # pointer-jumping shortcut: component ← label(component). Squares
         # the distance covered per round, turning diameter-bound
@@ -1365,27 +1342,18 @@ def connected_components(
             ptr = prop.select(
                 F.col("id").alias("__pid"), F.col("component").alias("__pcomp")
             )
-            new_labels = (
+            jumped = F.least(
+                F.col("component"), F.coalesce(F.col("__pcomp"), F.col("component"))
+            )
+            new_labels = stage(
                 prop.join(ptr, prop.component == ptr.__pid, "left")
                 .select(
                     "id",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("__pcomp"), F.col("component")),
-                    ).alias("__ncomp"),
-                    (
-                        F.col("__chg")
-                        | (
-                            F.least(
-                                F.col("component"),
-                                F.coalesce(F.col("__pcomp"), F.col("component")),
-                            )
-                            != F.col("component")
-                        )
-                    ).alias("__chg"),
+                    jumped.alias("__ncomp"),
+                    (F.col("__chg") | (jumped != F.col("component"))).alias("__chg"),
                 )
-                .withColumnRenamed("__ncomp", "component")
-                .localCheckpoint()
+                .withColumnRenamed("__ncomp", "component"),
+                "cc_jump",
             )
         changed = len(new_labels.filter(F.col("__chg")).take(1))
         new_labels = new_labels.drop("__chg")
@@ -1515,9 +1483,7 @@ def simhash_dedup(
     anti-join — same pushed-through-Union replay hazard as
     minhash_lsh_dedup."""
     sigs = simhash_column(df.select(F.col(id_col), F.col(text_col)), text_col)
-    pairs = simhash_near_pairs(sigs, id_col, max_hamming=max_hamming).localCheckpoint(
-        eager=True
-    )
+    pairs = stage(simhash_near_pairs(sigs, id_col, max_hamming=max_hamming), "simhash_pairs")
     if exact_closure:
         comps = connected_components(pairs.select("id_a", "id_b"))
         dupes = comps.filter(F.col("id") != F.col("component")).select(

@@ -8,6 +8,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_rivers_spark.operators.dedup import words
+from data_rivers_spark.session import fan_out, stage
 
 # Tiny per-language stopword lists for the heuristic language-ID. Deliberately
 # short: the operator demonstrates the scoring shape; swap in real lists (or a
@@ -50,8 +51,6 @@ def quality_features(df: DataFrame, text_col: str, prefix: str = "q_") -> DataFr
     orders of magnitude heavier than the scan, and a single-split parquet
     input would otherwise evaluate them all in ONE task (r13 profile:
     q_corpus_prep spent its wall in 4.5-8 s single-task expression stages)."""
-    from data_rivers_spark.session import fan_out
-
     df = fan_out(df)
     text = F.col(text_col)
     n_chars = F.length(text)
@@ -87,8 +86,6 @@ def detect_language(df: DataFrame, text_col: str, out_col: str = "lang_pred") ->
     Fanned out before the per-row work (see quality_features): one
     stopword_ratio per configured language = n_langs word-splits + set-probe
     filters per row — scan-dominating by far."""
-    from data_rivers_spark.session import fan_out
-
     df = fan_out(df)
     text = F.col(text_col)
     best = None
@@ -142,8 +139,6 @@ def normalize_text(
 
     Fanned out before the per-row work (see quality_features): 3-4 regex
     passes over the full text per row dominate the scan."""
-    from data_rivers_spark.session import fan_out
-
     df = fan_out(df)
     out_col = out_col or text_col
     c = F.col(text_col)
@@ -345,7 +340,7 @@ def sequential_pack_scalable(
         "__lstart",
         F.sum(F.col(token_count_col)).over(local_w) - F.col(token_count_col),
     )
-    numbered = numbered.localCheckpoint(eager=True)
+    numbered = stage(numbered, "pack_numbered")
     tot_keys = ([group_col] if group_col else []) + ["__pid"]
     totals = numbered.groupBy(*tot_keys).agg(
         F.sum(F.col(token_count_col)).alias("__tot")
@@ -423,8 +418,6 @@ def line_repetition_stats(
     split+explode+partial-agg map side runs in the scan stage, single-task
     on a single-split input.
     """
-    from data_rivers_spark.session import fan_out
-
     df = fan_out(df)
     ex = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), sep)).alias("__line")
@@ -858,8 +851,6 @@ def c4_quality_filter(
     composes with any partitioning and pushes through joins untouched.
     Fanned out first (see quality_features): per-row HOF line filtering
     dominates the scan, and single-split inputs would run it in one task."""
-    from data_rivers_spark.session import fan_out
-
     df = fan_out(df)
     lines = F.split(F.col(text_col), line_sep)
     keep_line = (
@@ -950,7 +941,7 @@ def unigram_logprob_score(
     — same lesson as the LSH shingle frame)."""
     ex = df.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("token"))
     lm = ex.groupBy("token").agg(F.count(F.lit(1)).alias("__cnt"))
-    lm = lm.localCheckpoint(eager=True)
+    lm = stage(lm, "unigram_lm")
     total = lm.agg(F.sum("__cnt").alias("__total"))
     scored = (
         ex.join(lm, "token")
@@ -1176,8 +1167,6 @@ def hashed_feature_rows(
     the whole featurize in one task (the r13 stage profile measured the
     single-task featurize at 1.4 s inside every classifier train/score/
     serve query; same finding as importance.hashed_ngram_features)."""
-    from data_rivers_spark.session import fan_out
-
     df = fan_out(df.select(F.col(id_col), F.col(text_col)))
     ws = words(F.col(text_col))
     bigrams = F.zip_with(
@@ -1329,10 +1318,10 @@ def train_hashed_classifier(
     spark = df.sparkSession
     mu = 10**ndigits
     if feats is None:
-        feats = (
+        feats = stage(
             hashed_feature_fracs(df, text_col, id_col, num_buckets, seed, ndigits)
-            .withColumn("__fm", F.round(F.col("frac") * mu).cast("long"))
-            .localCheckpoint(eager=True)
+            .withColumn("__fm", F.round(F.col("frac") * mu).cast("long")),
+            "classifier_feats",
         )
     # else: the caller supplies the micro-unit (id, bucket, frac, __fm)
     # frame for EXACTLY df's rows, built with the same
@@ -1341,9 +1330,10 @@ def train_hashed_classifier(
     # full-corpus feature frame to df's ids is identical to featurizing df.
     # The caller is responsible for it being checkpoint-backed (each GD
     # epoch replays it).
-    labels = df.select(
-        F.col(id_col), F.col(label_col).cast("int").alias("__y")
-    ).localCheckpoint(eager=True)
+    labels = stage(
+        df.select(F.col(id_col), F.col(label_col).cast("int").alias("__y")),
+        "classifier_labels",
+    )
     # one combined pass for the size + NULL-label guard (was two sequential
     # jobs over the checkpointed frame — r13 job-count audit)
     crow = labels.agg(
@@ -1909,7 +1899,7 @@ def train_bpe(
     vocab = word_freq
     if symbols_col not in vocab.columns:
         vocab = vocab.withColumn(symbols_col, F.split(F.col("word"), ""))
-    vocab = vocab.localCheckpoint(eager=True)
+    vocab = stage(vocab, "bpe_vocab")
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         top = bpe_pair_counts(vocab, top_k=1, symbols_col=symbols_col).collect()
@@ -1918,9 +1908,7 @@ def train_bpe(
         left, right, cnt = top[0]["left"], top[0]["right"], int(top[0]["pair_count"])
         merges.append((left, right, cnt))
         prev = vocab
-        vocab = bpe_apply_merge(vocab, left, right, symbols_col).localCheckpoint(
-            eager=True
-        )
+        vocab = stage(bpe_apply_merge(vocab, left, right, symbols_col), "bpe_merge")
         _release_local_checkpoint(prev)
     return merges, vocab
 
@@ -2004,11 +1992,11 @@ def bpe_encode(
     document's token stream in word order. Nothing is corpus × merges."""
     from .dedup import words
 
-    vocab = (
+    vocab = stage(
         df.select(F.explode(words(F.col(text_col))).alias("word"))
         .distinct()
-        .withColumn("symbols", F.split(F.col("word"), ""))
-        .localCheckpoint(eager=True)
+        .withColumn("symbols", F.split(F.col("word"), "")),
+        "bpe_vocab",
     )
     ckpt = vocab
     pending = 0
@@ -2016,12 +2004,12 @@ def bpe_encode(
         vocab = bpe_apply_merge(vocab, left, right, "symbols")
         pending += 1
         if pending >= checkpoint_every:
-            vocab = vocab.localCheckpoint(eager=True)
+            vocab = stage(vocab, "bpe_merge")
             _release_local_checkpoint(ckpt)
             ckpt = vocab
             pending = 0
     if pending:
-        vocab = vocab.localCheckpoint(eager=True)
+        vocab = stage(vocab, "bpe_merge")
         _release_local_checkpoint(ckpt)
     toks = df.select(
         F.col(id_col),

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_rivers_spark.session import stage
+
 # ---------------------------------------------------------------------------
 # Dedup / latest-wins
 # ---------------------------------------------------------------------------
@@ -222,7 +224,7 @@ def global_row_number_scalable(
     )
     local_w = Window.partitionBy("__pid").orderBy(*order_cols)
     numbered = ranged.withColumn("__local", F.row_number().over(local_w))
-    numbered = numbered.localCheckpoint(eager=True)
+    numbered = stage(numbered, "seq_numbered")
     counts = numbered.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
     off_w = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.withColumn(
@@ -734,7 +736,7 @@ def refresh_time_rollup(
             return 0
         scoped = src.filter(bucket_expr.isin(vals))
     out = time_bucket_rollup(scoped, ts_col, bucket, group_cols, aggs)
-    out = out.localCheckpoint(eager=True)  # sever from the version replaced
+    out = stage(out, "rollup_refresh")  # sever from the version replaced
     n = out.count()
     if catalog.exists(rollup_table):
         catalog.overwrite_partitions(rollup_table, out, ["bucket"])
@@ -771,11 +773,15 @@ def flatten_hierarchy(
     rounds), each one equi-join shuffle on the ancestor key. Lineage is cut
     per round with localCheckpoint, as in connected_components; rounds stop
     early at fixpoint (no unsettled rows)."""
-    ptr = edges.select(
-        F.col(child_col).alias("node"),
-        F.col(parent_col).alias("anc"),
-        F.lit(1).alias("depth"),
-    ).localCheckpoint(eager=False)
+    ptr = stage(
+        edges.select(
+            F.col(child_col).alias("node"),
+            F.col(parent_col).alias("anc"),
+            F.lit(1).alias("depth"),
+        ),
+        "hierarchy_ptr",
+        eager=False,
+    )
     # settled(node) := anc has no outgoing pointer (anc is a root)
     children = edges.select(F.col(child_col).alias("__c")).distinct()
     for _ in range(max_iterations):
@@ -788,11 +794,15 @@ def flatten_hierarchy(
             F.col("p.anc") == F.col("__jn"),
             "left",
         )
-        ptr = jump.select(
-            "node",
-            F.coalesce(F.col("__janc"), F.col("anc")).alias("anc"),
-            (F.col("depth") + F.coalesce(F.col("__jd"), F.lit(0))).alias("depth"),
-        ).localCheckpoint(eager=False)
+        ptr = stage(
+            jump.select(
+                "node",
+                F.coalesce(F.col("__janc"), F.col("anc")).alias("anc"),
+                (F.col("depth") + F.coalesce(F.col("__jd"), F.lit(0))).alias("depth"),
+            ),
+            "hierarchy_jump",
+            eager=False,
+        )
         unsettled = ptr.join(children, ptr.anc == children.__c, "left_semi")
         if unsettled.isEmpty():
             break

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_rivers_spark.session import fan_out, stage
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -277,8 +279,6 @@ def embedding_near_dup_pairs(
     pass a constant block column."""
     if block_col is None:
         return embedding_near_dup_pairs_lsh(df, vec_col, id_col, threshold)
-    from data_rivers_spark.session import fan_out
-
     # r13: SALT the block key (guide §2.5) — block columns are
     # low-cardinality by design (the sf0.1 fixture has a handful of labels),
     # so without a salt the whole quadratic compare stage lands on
@@ -393,8 +393,6 @@ def _bucket_arrays_vectorized(
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
 
-    from data_rivers_spark.session import fan_out
-
     # fan out before the Arrow boundary (no-op on a well-split input): the
     # per-batch BLAS matmul dominates the scan, and a single-split input
     # would run every batch in one task (r13)
@@ -452,7 +450,7 @@ def embedding_near_dup_pairs_lsh(
     )
     if block_col:
         bucketed = bucketed.withColumnRenamed(block_col, "__blk")
-    bucketed = bucketed.localCheckpoint(eager=True)
+    bucketed = stage(bucketed, "lsh_buckets")
     keys = ["__tbl", "__bkt"] + (["__blk"] if block_col else [])
     # r13 (guide §8: decide with small rows, move big rows once): the
     # candidate join and the (id_a, id_b) dropDuplicates used to carry BOTH
@@ -617,7 +615,7 @@ def train_ivf_centroids(
         return [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
     vecs = corpus.select(id_col, _as_double(F.col(vec_col)).alias("__v"))
     if iterations > 1:
-        vecs = vecs.localCheckpoint()
+        vecs = stage(vecs, "kmeans_vecs")
     n_hint = None
     if n_centroids >= _DEEP_CROSSOVER:
         # count once here so the tree's coupling check (n >= 100·k,

@@ -16,6 +16,7 @@ from data_rivers_spark.catalog.tables import ManagedCatalog
 from data_rivers_spark.operators import relational as R
 from data_rivers_spark.operators import transforms as X
 from data_rivers_spark.operators.geo import revgeo_multi_zone
+from data_rivers_spark.session import stage
 
 
 def qalert_transform_chain(raw: DataFrame) -> DataFrame:
@@ -198,6 +199,29 @@ def cherwell_pipeline(
     return catalog.read(master_table)
 
 
+def c4_clean(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """C4 line cleaning as one stage: the documents C4 keeps, as
+    (``id_col``, ``text_col``) with the cleaned text.
+
+    The C4 audit frame is checkpointed BEFORE the keep-filter (r13): the
+    ``keep`` predicate embeds the whole C4 expression chain (and any
+    HOF-built fixture below it), and Catalyst pushes the filter below
+    fan_out's round-robin exchange. The q_curation_pipeline SQL-tab
+    decomposition measured the chain re-evaluated per row on the
+    SINGLE-TASK scan side (3.0 s + 2.0 s one-task jobs inside the kept
+    checkpoint, ~half its 5.0 s wall), then again at full width for
+    ``kept_text``. The barrier pins evaluation above the exchange, at full
+    width, exactly once, and pays the chain once for every consumer that
+    would otherwise re-execute it through lineage (gopher's three feature
+    pipelines and their left-semi); the keep-filter is then a trivial
+    filter over the cached frame."""
+    from data_rivers_spark.operators import textstats as TX
+
+    c4 = TX.c4_quality_filter(docs, text_col, id_col)
+    c4 = stage(c4.select(id_col, "kept_text", "keep"), "c4_clean")
+    return c4.filter(F.col("keep")).select(F.col(id_col), F.col("kept_text").alias(text_col))
+
+
 def corpus_curation_pipeline(
     docs: DataFrame,
     text_col: str = "text",
@@ -249,21 +273,7 @@ def corpus_curation_pipeline(
     from data_rivers_spark.operators import sampling as SA
     from data_rivers_spark.operators import textstats as TX
 
-    c4 = TX.c4_quality_filter(docs, text_col, id_col)
-    # stage boundary (r13): checkpoint the C4 audit frame BEFORE the
-    # keep-filter — the predicate embeds the whole C4 expression chain and
-    # Catalyst pushes it below fan_out's exchange, re-evaluating the chain
-    # per row on the one-task scan side of an under-partitioned input
-    # (the q_curation_pipeline SQL-tab decomposition). The checkpoint also
-    # pays the chain once for gopher's three feature pipelines plus the
-    # left-semi below, which would otherwise each re-execute it through
-    # lineage — the materialize-the-cleaned-batch posture of `deduped`
-    # below and q_curation_select_mix's prefix.
-    c4 = c4.select(id_col, "kept_text", "keep").localCheckpoint(eager=True)
-    cleaned = (
-        c4.filter(F.col("keep"))
-        .select(F.col(id_col), F.col("kept_text").alias(text_col))
-    )
+    cleaned = c4_clean(docs, text_col, id_col)
     gopher = TX.gopher_repetition_filter(cleaned, text_col, id_col)
     kept = cleaned.join(
         gopher.filter(F.col("keep")).select(id_col), id_col, "left_semi"
@@ -312,7 +322,7 @@ def corpus_curation_pipeline(
         # stage boundary: the DSIR featurize has three consumers of the
         # cleaned corpus (pool featurize x2 — dsir_importance_weights
         # recomputes it by measured choice — final weight join)
-        deduped = deduped.localCheckpoint(eager=True)
+        deduped = stage(deduped, "dsir_corpus")
         target = dsir_target(deduped) if callable(dsir_target) else dsir_target
         weighted = IMP.dsir_importance_weights(
             deduped, text_col, id_col, target,
@@ -321,12 +331,15 @@ def corpus_curation_pipeline(
         selected = IMP.dsir_resample(weighted, id_col, "log_weight", select_k, seed)
         if mix_budget is not None:
             grp = F.col(mix_group) if isinstance(mix_group, str) else mix_group
-            toks = selected.select(
-                F.col(id_col),
-                grp.alias("__grp"),
-                F.col("log_weight"),
-                TX.token_count_ws(F.col(text_col)).alias("n_tokens"),
-            ).localCheckpoint(eager=True)  # k rows; unimax consumes it twice
+            toks = stage(  # k rows; unimax consumes it twice
+                selected.select(
+                    F.col(id_col),
+                    grp.alias("__grp"),
+                    F.col("log_weight"),
+                    TX.token_count_ws(F.col(text_col)).alias("n_tokens"),
+                ),
+                "mix_tokens",
+            )
             return SA.unimax_sample(
                 toks, id_col, "__grp", "n_tokens",
                 total_budget=float(mix_budget), epoch_cap=epoch_cap, seed=seed,

@@ -18,8 +18,9 @@ from pyspark.sql import functions as F
 from data_rivers_spark.operators import dedup as D
 from data_rivers_spark.operators import similarity as S
 from data_rivers_spark.operators import textstats as TX
+from data_rivers_spark.plans.pipelines import c4_clean
 from data_rivers_spark.plans.registry import query
-from data_rivers_spark.session import load_tables
+from data_rivers_spark.session import fan_out, load_tables, stage
 
 _STOP_EN = "'the','a','of','and','to','in','is','it','that','for'"
 
@@ -430,9 +431,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = D.simhash_column(docs.unionByName(copies), "text")
     # one simhash pass feeds both output branches (planted rows + sentinel)
-    pairs = D.simhash_near_pairs(sigs, "doc_id", max_hamming=3).localCheckpoint(
-        eager=True
-    )
+    pairs = stage(D.simhash_near_pairs(sigs, "doc_id", max_hamming=3), "simhash_pairs")
     is_planted = (F.col("id_b") == F.col("id_a") + 100000) & (F.col("id_a") % 7 == 0)
     planted = pairs.filter(is_planted).select(
         "id_a", "id_b", F.lit("planted").alias("kind")
@@ -886,7 +885,7 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # design — it samples BEFORE the quality gate, and its doc_id%10
     # filter pushes to the scan, ~1/10 of a pass.)
     q = TX.quality_features(norm, "norm")
-    lang = TX.detect_language(q, "norm").localCheckpoint(eager=True)
+    lang = stage(TX.detect_language(q, "norm"), "quality_lang")
     keep_rows = lang.filter(
         (F.col("q_n_words") >= 5)
         & (F.col("q_punct_ratio") <= 0.25)
@@ -1358,8 +1357,6 @@ def q_line_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     and fraction of characters in repeated lines, per document. Reference
     semantics: Rae et al. 2021 table A1 / Dolma gopher tagger; Spark shape is
     explode → (id,line) count → per-id re-aggregate, all map-side combinable."""
-    from data_rivers_spark.session import fan_out
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text").filter(F.trim(F.col("text")) != "")
     # fan out the RAW docs, not the synth output: the operator's internal
@@ -1488,9 +1485,7 @@ def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prescribes for derived inputs). fan_out sits BELOW the synth
     # projection: applied above it, the one-task scan side would compute
     # the whole HOF chain before the exchange spreads anything.
-    from data_rivers_spark.session import fan_out
-
-    lined = _synth_lines(fan_out(docs)).localCheckpoint(eager=True)
+    lined = stage(_synth_lines(fan_out(docs)), "synth_lines")
     out = TX.gopher_repetition_filter(lined, "text", "doc_id")
     return out.select(
         "doc_id",
@@ -1650,8 +1645,6 @@ def q_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     punctuation, doc_id%11 docs get a "javascript" first line, doc_id%13
     docs get a trailing "lorem ipsum {" line. The operator is a pure per-row
     higher-order-function pipeline — no shuffle anywhere in the plan."""
-    from data_rivers_spark.session import fan_out
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text").filter(F.trim(F.col("text")) != "")
     # fan out below the synth rebuild (see q_line_repetition)
@@ -1707,8 +1700,6 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     window keys on xxhash64 of the normalized paragraph (8-byte shuffle
     key); the oracle keys on the normalized text itself — identical cluster
     structure barring a 2^-64 collision."""
-    from data_rivers_spark.session import fan_out
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text").filter(F.trim(F.col("text")) != "")
     # fan out below the synth rebuild (see q_line_repetition)
@@ -2003,8 +1994,6 @@ def _curation_pdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cleaned corpus (doc_id, text), one row per surviving document —
     q_curation_pipeline's stages 1-3, reused verbatim by
     q_curation_select_mix so the two composites price the same prefix."""
-    from data_rivers_spark.session import fan_out
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text").filter(F.trim(F.col("text")) != "")
     # the fixture + C4 chain below is ~3s of interpreted HOFs per scan
@@ -2022,21 +2011,7 @@ def _curation_pdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("doc_id", F.col("doc_id") + 100000)
         .withColumn("text", F.regexp_replace(F.col("text"), r"^\S+\s*", ""))
     )
-    aug = base.unionByName(copies)
-    c4 = TX.c4_quality_filter(aug, "text", "doc_id")
-    # checkpoint the audit frame BEFORE the keep-filter (r13): the `keep`
-    # predicate embeds the whole synthetic-fixture HOF chain, and Catalyst
-    # pushes the filter below fan_out's round-robin exchange — the SQL-tab
-    # decomposition measured the chain re-evaluated per row on the
-    # SINGLE-TASK scan side (3.0 s + 2.0 s one-task jobs inside the kept
-    # checkpoint, ~half its 5.0 s wall), then again at 64-way above for
-    # kept_text. The barrier pins evaluation above the exchange, at full
-    # width, exactly once; `kept` is then a trivial filter over the cached
-    # frame, so it no longer needs its own checkpoint.
-    c4 = c4.select("doc_id", "kept_text", "keep").localCheckpoint(eager=True)
-    kept = c4.filter(F.col("keep")).select(
-        "doc_id", F.col("kept_text").alias("text")
-    )
+    kept = c4_clean(base.unionByName(copies), "text", "doc_id")
     dd = D.minhash_lsh_dedup(
         kept, "text", "doc_id", threshold=0.7, num_hashes=32, bands=None
     )
@@ -2322,16 +2297,19 @@ def q_curation_select_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage-boundary materialization: three downstream consumers (pool
     # featurize x2, recomputed by measured choice; final weight join) — same
     # posture as the prefix's `kept` checkpoint
-    corpus = corpus.localCheckpoint(eager=True)
+    corpus = stage(corpus, "dsir_corpus")
     weighted = IMP.dsir_importance_weights(
         corpus, "text", "doc_id", None, target_flag=F.col("lang") == "en",
         num_buckets=4096, n_max=2, alpha=1.0, seed=0,  # one-pass target (r14)
     )
     sel = IMP.dsir_resample(weighted, "doc_id", "log_weight", 300, seed="mix")
-    toks = sel.select(
-        "doc_id", "lang", "log_weight",
-        TX.token_count_ws(F.col("text")).alias("n_tok"),
-    ).localCheckpoint(eager=True)  # 300 rows; unimax consumes it twice
+    toks = stage(  # 300 rows; unimax consumes it twice
+        sel.select(
+            "doc_id", "lang", "log_weight",
+            TX.token_count_ws(F.col("text")).alias("n_tok"),
+        ),
+        "mix_tokens",
+    )
     mixed = SA.unimax_sample(
         toks, "doc_id", "lang", "n_tok",
         total_budget=40_000.0, epoch_cap=4.0, seed=43,
@@ -2577,14 +2555,12 @@ def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the document survives — contrast q_decontaminate, which flags whole
     documents. Hash-equi probe against the broadcast benchmark shingle set;
     reassembly preserves span order."""
-    from data_rivers_spark.session import fan_out
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text").filter(F.trim(F.col("text")) != "")
     # fan out below the synth rebuild, and materialize it once: the corpus
     # and benchmark sides are two consumers of the same HOF-built frame
     # (r13, see q_line_repetition / q_gopher_filter)
-    lined = _synth_lines(fan_out(docs)).localCheckpoint(eager=True)
+    lined = stage(_synth_lines(fan_out(docs)), "synth_lines")
     bench = lined.filter(F.col("doc_id") % 25 == 0).select(
         "doc_id", F.split(F.col("text"), "\n").getItem(0).alias("text")
     )
@@ -3090,10 +3066,10 @@ def q_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # predicate is identical to featurizing each split — one explode/agg
     # pass instead of two, one checkpoint instead of two
     mu = 10**6
-    full_feats = (
+    full_feats = stage(
         TX.hashed_feature_fracs(docs, "text", "doc_id", 1024, "w")
-        .withColumn("__fm", F.round(F.col("frac") * mu).cast("long"))
-        .localCheckpoint(eager=True)
+        .withColumn("__fm", F.round(F.col("frac") * mu).cast("long")),
+        "classifier_feats",
     )
     is_test = SA.hash_bucket(F.col("doc_id"), "split") < F.lit(
         SA.fraction_threshold(0.1)
@@ -3574,18 +3550,18 @@ def q_curation_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     stats = D.duplicate_span_stats(aug, "text", "doc_id", k=5)
-    clean = (
+    # stage boundary: the mixture sampler consumes `clean` TWICE (the
+    # domain-count aggregate and the row filter), and without a
+    # materialization each consumer re-derives the entire span-stats
+    # subtree — the plan audit counted 16 documents scans. The survivor
+    # set is (id, source)-narrow, so one eager checkpoint collapses the
+    # replay to the operator's own scans, exactly what a real pipeline
+    # does by writing the cleaned batch.
+    clean = stage(
         aug.join(stats, "doc_id")
         .filter((F.col("n_tokens") > 0) & (F.col("dup_token_count") * 2 <= F.col("n_tokens")))
-        .select("doc_id", "source")
-        # stage boundary: the mixture sampler consumes `clean` TWICE (the
-        # domain-count aggregate and the row filter), and without a
-        # materialization each consumer re-derives the entire span-stats
-        # subtree — the plan audit counted 16 documents scans. The survivor
-        # set is (id, source)-narrow, so one eager checkpoint collapses the
-        # replay to the operator's own scans, exactly what a real pipeline
-        # does by writing the cleaned batch.
-        .localCheckpoint(eager=True)
+        .select("doc_id", "source"),
+        "mix_clean",
     )
     mixed = SA.domain_mixture_sample(
         clean, "doc_id", "source", temperature=0.5, budget_frac=0.6, seed=23
@@ -3722,7 +3698,7 @@ def q_incremental_dedup_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         b1, None, None, "text", "doc_id", threshold=0.7, num_hashes=32,
         bands=None, batch_min_id=0,  # fixture bound, see q_incremental_dedup
     )
-    store = D.group_banded_store(banded1, "doc_id").localCheckpoint(eager=True)
+    store = stage(D.group_banded_store(banded1, "doc_id"), "lsh_store")
     copies = (
         b1.filter(F.col("doc_id") % 7 == 0)
         .withColumn("doc_id", F.col("doc_id") + 100000)

@@ -16,8 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_rivers_spark.operators import dedup as D
+from data_rivers_spark.operators import importance as IMP
+from data_rivers_spark.operators import multimodal as M
+from data_rivers_spark.operators import sampling as SA
 from data_rivers_spark.operators import similarity as S
 from data_rivers_spark.operators import textstats as TX
+from data_rivers_spark.operators import transforms as TR
+from data_rivers_spark.operators import validation as V
 from data_rivers_spark.plans.pipelines import c4_clean
 from data_rivers_spark.plans.registry import query
 from data_rivers_spark.session import fan_out, load_tables, stage
@@ -742,8 +747,6 @@ def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal byte-size profile (operators/multimodal.media_stats) over a
     binary column synthesized from document text — the cheap native profile
     that precedes any decode fan-out."""
-    from data_rivers_spark.operators import multimodal as M
-
     t = load_tables(spark, sf_dir, ["documents"])
     media = t["documents"].select(
         F.col("doc_id").alias("media_id"),
@@ -774,8 +777,6 @@ def q_media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle fail exactly when the operator does its job). The full
     pipeline executes — mapInPandas DCT pHash, combination-blocked hamming
     join, greedy min-id drop — before the planted filter."""
-    from data_rivers_spark.operators import multimodal as M
-
     t = load_tables(spark, sf_dir, ["documents"])
     media = t["documents"].select(
         F.col("doc_id").alias("media_id"),
@@ -924,8 +925,6 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible across runs, engines, and repartitioning — unlike df.sample,
     whose per-partition RNG reshuffles every draw when the input layout
     changes. The oracle reproduces the exact same md5-prefix decision."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     return SA.deterministic_sample(t["documents"], "doc_id", 0.2, seed=42).select("doc_id")
 
@@ -944,8 +943,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus remixing by per-stratum rates: downsample dominant English to
     10%, upweight German to 50%, default 25% — the language-rebalancing step
     of multilingual corpus curation, as a shuffle-free per-row filter."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     return SA.stratified_sample(
         t["documents"], "doc_id", "lang", {"en": 0.1, "de": 0.5}, seed=7,
@@ -970,8 +967,6 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-threshold decision: both engines floor the per-row threshold into
     the 2^32 hash space and compare integers, so exp() ulp noise cannot flip
     a row (see sampling.weighted_sample)."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     return SA.weighted_sample(t["documents"], "doc_id", "n_chars", 0.002, seed=11).select(
         "doc_id", "n_chars"
@@ -997,8 +992,6 @@ def q_weighted_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct hashes within one ulp of each other (~2^-52 relative — ruled out
     by the 2^-32-granular hash lattice), and ulp-equal ranks tiebreak on
     doc_id identically."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     return SA.weighted_topk_sample(
         t["documents"], "doc_id", "n_chars", 50, seed=13
@@ -1018,8 +1011,6 @@ def q_weighted_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe 90/10 split: assignment is a content hash, so a document
     can never migrate between train and eval across reruns."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     return SA.train_test_split(t["documents"], "doc_id", 0.1, seed="split").select(
         "doc_id", "split"
@@ -1089,8 +1080,6 @@ def q_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked-Jaccard pair closure, with the same md5 decision applied to
     LEAST(doc_id, min reachable id). Matches iff LSH recall is 100% on
     J >= 0.7 pairs — the same recall argument as q_minhash_lsh_dedup."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text")
     copies = (
@@ -1813,8 +1802,6 @@ def q_token_budget_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible across engines/partitioning because admission order is a
     pure function of (seed, doc_id). One group-keyed window is the only
     shuffle."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "source", "n_chars")
     return SA.token_budget_trim(
@@ -1894,8 +1881,6 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER is part of the contract (SSN before phone — a bare 3-2-4 SSN must
     not be half-eaten by the 3-3-4 phone pattern) and the oracle mirrors
     it. Pure regexp_replace expressions — no shuffle."""
-    from data_rivers_spark.operators import transforms as TR
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text")
     planted = docs.select(
@@ -1968,8 +1953,6 @@ def q_validate_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     integrity checks, unioned into a (rule, violations, total, passed)
     report — the declarative generalization of the reference's ad-hoc
     data-quality table (general_queries.py:23-44)."""
-    from data_rivers_spark.operators import validation as V
-
     t = load_tables(spark, sf_dir, ["orders", "customer"])
     orders, customer = t["orders"], t["customer"]
     report = V.validate(
@@ -2142,8 +2125,6 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     5. per-split sequence packing into 512-token windows.
 
     Output: (doc_id, split, n_tok, chunk_idx) per surviving document."""
-    from data_rivers_spark.operators import sampling as SA
-
     pdocs = _curation_pdocs(spark, sf_dir)
     split = SA.train_test_split(pdocs, "doc_id", 0.1, seed="cur")
     toked = split.select(
@@ -2283,9 +2264,6 @@ def q_curation_select_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup lineage; the selected 300-row frame is checkpointed before UniMax
     (whose allocation aggregate + broadcast join would otherwise replay the
     whole selection twice). Output: one row per (selected doc, epoch)."""
-    from data_rivers_spark.operators import importance as IMP
-    from data_rivers_spark.operators import sampling as SA
-
     pdocs = _curation_pdocs(spark, sf_dir)
     langs = (
         load_tables(spark, sf_dir, ["documents"])["documents"]
@@ -3049,8 +3027,6 @@ def q_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (integer-micro-unit gradients, the q_quality_classifier_train
     contract), held-out scoring, and the eval table, whose ratios both
     engines compute from the same integer counts."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select(
         "doc_id", "text",
@@ -3176,8 +3152,6 @@ def q_domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependent, so the oracle recomputes the same count → power → round(6)
     → floor-to-integer-threshold ladder; rounding the rate before the
     floor is what makes pow()/sum-order ulp noise unobservable."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     return SA.domain_mixture_sample(
         t["documents"], "doc_id", "source", temperature=0.5, budget_frac=0.5, seed=13
@@ -3457,8 +3431,6 @@ def q_domain_mixture_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinguishable downstream. The operator filters zero-copy rows BEFORE
     the sequence explode (Spark's sequence(0,-1) would descend, not
     empty)."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     return SA.domain_mixture_upsample(
         t["documents"], "doc_id", "source", temperature=0.5, budget_frac=1.0, seed=17
@@ -3538,8 +3510,6 @@ def q_curation_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     split. Every stage reuses an independently-oracled operator; the
     composed oracle chains their CTEs so stage-boundary drift (e.g. the
     mixture seeing pre-dedup counts) is caught, not assumed away."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text", "source")
     aug = docs.unionByName(
@@ -3636,8 +3606,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     should skew positive, others negative — the 'make the mix look like
     the target' data-selection signal. One corpus featurize pass per side,
     a 4096-row broadcast join, one doc-keyed sum."""
-    from data_rivers_spark.operators import importance as IMP
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text", "lang")
     # target_flag (r14): the English target is a predicate-subset of the
@@ -3669,8 +3637,6 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Gumbel draw derived from the content hash so the selected subset
     reproduces across runs, engines, and partitionings. Compiles to
     TakeOrderedAndProject — per-partition top-k heap, no global sort."""
-    from data_rivers_spark.operators import importance as IMP
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text", "lang")
     weighted = IMP.dsir_importance_weights(
@@ -3800,8 +3766,6 @@ def q_unimax_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     division happens on identical operands. The corpus is touched once (the
     per-language char sum); the allocation itself is a two-window pass over
     the language-cardinality frame."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "lang", "n_chars")
     return SA.unimax_allocation(
@@ -3842,8 +3806,6 @@ def q_unimax_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-capped upsampling without an RNG, reproducible across engines and
     partitionings. One broadcast join + an output-proportional explode + one
     language-keyed window is the whole corpus-side cost."""
-    from data_rivers_spark.operators import sampling as SA
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "lang", "n_chars")
     return SA.unimax_sample(

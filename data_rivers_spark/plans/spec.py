@@ -64,7 +64,7 @@ from data_rivers_spark.operators import similarity as SIM
 from data_rivers_spark.operators import textnorm as TN
 from data_rivers_spark.operators import textstats as TX
 from data_rivers_spark.operators import transforms as T
-from data_rivers_spark.session import load_tables
+from data_rivers_spark.session import load_tables, stage
 
 
 def _simple(fn: Callable) -> Callable:
@@ -109,9 +109,7 @@ OPS: dict[str, Callable[[DataFrame, dict], Callable]] = {
     # than once (unimax_sample's allocation aggregate + join, DSIR's
     # featurize consumers). An execute-at-interpretation-time verb — see
     # the EXCEPTIONS note in the module docstring.
-    "materialize": lambda df, p: df.localCheckpoint(
-        eager=bool(p.get("eager", True))
-    ),
+    "materialize": lambda df, p: stage(df, "materialize", bool(p.get("eager", True))),
     # shared transform library (SURVEY §2.1/2.2)
     "columns_camel_to_snake_case": _simple(T.columns_camel_to_snake_case),
     "columns_to_lower_case": _simple(T.columns_to_lower_case),
@@ -489,7 +487,7 @@ def backfill(
             f"backfill steps dropped partition column {partition_col!r}; "
             "the rewritten rows could not be re-partitioned"
         )
-    out = out.localCheckpoint(eager=True)  # sever from the table being replaced
+    out = stage(out, "backfill")  # sever from the table being replaced
     n = out.count()
     catalog.overwrite_partitions(table, out, [partition_col])
     return n
@@ -530,7 +528,7 @@ def run_spec_incremental(
     src = catalog.read(table)
     if since is not None:
         src = src.filter(F.col(watermark_col) > F.lit(since))
-    src = src.localCheckpoint(eager=True)  # one scan feeds count/max/transform
+    src = stage(src, "incremental_batch")  # one scan feeds count/max/transform
     stats = src.agg(
         F.count(F.lit(1)).alias("n"), F.max(watermark_col).alias("mx")
     ).first()

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_rivers_spark.plans.registry import query
-from data_rivers_spark.session import load_tables
+from data_rivers_spark.session import load_tables, stage
 
 
 @query(
@@ -609,7 +609,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded BEFORE the max comparison so the argmax is stable across
     engines' float summation orders."""
     t = load_tables(spark, sf_dir, ["lineitem", "supplier"])
-    rev = (
+    rev = stage(  # consumed twice: max scalar + join
         t["lineitem"]
         .filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -619,8 +619,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
             .alias("total_revenue")
-        )
-        .localCheckpoint(eager=True)  # consumed twice: max scalar + join
+        ),
+        "revenue",
     )
     mx = rev.agg(F.max("total_revenue").alias("__mx"))
     top = rev.join(F.broadcast(mx), F.col("total_revenue") == F.col("__mx")).drop("__mx")
@@ -849,7 +849,7 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(
         spark, sf_dir, ["lineitem", "part", "supplier", "nation", "region"]
     )
-    regional = (
+    regional = stage(  # consumed twice: min agg + detail join
         _partsupp(t)
         .join(F.broadcast(t["supplier"].select("s_suppkey", "s_name", "s_acctbal", "s_nationkey")),
               F.col("ps_suppkey") == F.col("s_suppkey"))
@@ -858,8 +858,8 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t["region"].filter(F.col("r_name") == "AFRICA")
                           .select("r_regionkey")),
               F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("ps_partkey", "ps_supplycost", "s_name", "s_acctbal", "n_name")
-        .localCheckpoint(eager=True)  # consumed twice: min agg + detail join
+        .select("ps_partkey", "ps_supplycost", "s_name", "s_acctbal", "n_name"),
+        "regional_partsupp",
     )
     mins = regional.groupBy(F.col("ps_partkey").alias("__pk")).agg(
         F.min("ps_supplycost").alias("__mincost")
@@ -990,7 +990,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (40 + (F.col("ps_partkey") * 7 + F.col("ps_suppkey")) % 50)
         * F.col("ps_availqty")
     ).alias("v_i")
-    nat = (
+    nat = stage(  # consumed twice: per-part agg + total
         _partsupp(t)
         .join(F.broadcast(t["part"].select("p_partkey", "p_retailprice")),
               F.col("ps_partkey") == F.col("p_partkey"))
@@ -999,8 +999,8 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t["nation"].filter(F.col("n_name") == "NATION_1")
                           .select("n_nationkey")),
               F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("ps_partkey", v_i)
-        .localCheckpoint(eager=True)  # consumed twice: per-part agg + total
+        .select("ps_partkey", v_i),
+        "nation_stock",
     )
     total = nat.agg(F.sum("v_i").cast("long").alias("__total"))
     return (

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from data_rivers_spark.operators import relational as R
 from data_rivers_spark.plans.registry import query
-from data_rivers_spark.session import load_tables
+from data_rivers_spark.session import load_tables, stage
 
 
 @query(
@@ -361,7 +361,7 @@ def conversion_funnel(
         cur = cur.groupBy("user_id").agg(F.min("ts").alias(f"t{i + 1}"))
         # the last stage feeds only its count row — no second consumer
         if i < len(stage_types) - 1:
-            cur = cur.localCheckpoint(eager=True)
+            cur = stage(cur, f"funnel_step{i + 1}")
         anchors.append(cur)
         prev = cur
 

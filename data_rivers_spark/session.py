@@ -168,13 +168,7 @@ def stage(df: DataFrame, name: str, eager: bool = True) -> DataFrame:
     Use it where a frame has several consumers or where a plan must be cut
     (see each call site). ``eager`` runs the checkpoint job now; a lazy
     barrier marks the frame and fills it on its first action, though AQE
-    may still run the shuffle stages below it while planning here.
-    List the stage jobs of a session with::
-
-        store = spark.sparkContext._jsc.sc().statusStore()
-        for job in store.jobsList(None):
-            print(job.jobId(), job.name(), job.status())
-    """
+    may still run the shuffle stages below it while planning here."""
     query = QUERY_NAME.get()
     with job_label(df.sparkSession, f"{query}:{name}" if query else name):
         return df.localCheckpoint(eager)

@@ -1,14 +1,13 @@
 from __future__ import annotations
 
 import os
-import subprocess
 import sys
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_rivers_spark.session import get_spark  # noqa: E402
+from data_rivers_spark.session import get_spark, stop_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -17,18 +16,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = get_spark(app_name="data_rivers_spark_tests", shuffle_partitions=8)
     yield s
-    # stop the session and wait for the JVM child, so no JVM outlives pytest
-    gateway = s.sparkContext._gateway
-    proc = getattr(gateway, "proc", None)
-    s.stop()
-    gateway.shutdown()
-    if proc is not None:
-        try:
-            proc.stdin.close()
-            proc.wait(timeout=60)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            proc.wait()
+    stop_spark(s)  # no JVM outlives pytest
 
 
 @pytest.fixture(scope="session")

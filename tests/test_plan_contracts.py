@@ -156,3 +156,76 @@ def test_chunk_documents_single_codegen_stage(spark):
     # formatted mode marks codegen membership with "[codegen id : N]"
     assert "[codegen id :" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_stage_is_the_only_localcheckpoint_site():
+    """One stage barrier: every checkpoint in the package goes through
+    ``session.stage``, so every barrier job carries a ``<query>:<stage>``
+    name. (Tests and the frozen perfbench tracer are out of scope.)"""
+    import ast
+    import pathlib
+
+    import data_rivers_spark
+    from data_rivers_spark import session
+
+    root = pathlib.Path(data_rivers_spark.__file__).parent
+    fn = next(n for n in ast.parse(pathlib.Path(session.__file__).read_text()).body
+              if isinstance(n, ast.FunctionDef) and n.name == "stage")
+    allowed = range(fn.lineno, fn.end_lineno + 1)
+    stray = [
+        f"{path.relative_to(root.parent)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line
+        and not (path.samefile(session.__file__) and i in allowed)
+    ]
+    assert not stray, f"checkpoint outside session.stage: {stray}"
+
+
+def _barrier_jobs(spark, build) -> dict[int, str]:
+    """Run ``build()`` with every DataFrame.localCheckpoint call spied on;
+    return {job id: job name} of the jobs those calls submitted, read from
+    the status store (works with the UI off)."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    jsc = spark.sparkContext._jsc.sc()
+    dag = jsc.dagScheduler()
+    ids: set[int] = set()
+    orig = ClassicDataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        first = dag.nextJobId()
+        try:
+            return orig(self, *args, **kwargs)
+        finally:
+            ids.update(range(first, dag.nextJobId()))
+
+    ClassicDataFrame.localCheckpoint = spy
+    try:
+        build()
+    finally:
+        ClassicDataFrame.localCheckpoint = orig
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    names = {jobs.apply(i).jobId(): jobs.apply(i).name() for i in range(jobs.length())}
+    return {j: names.get(j) for j in ids}
+
+
+def test_stage_barrier_jobs_are_named_query_stage(spark):
+    from data_rivers_spark.plans import registry
+
+    registry.load_all()
+    query = "q_minhash_lsh_dedup"
+    jobs = _barrier_jobs(
+        spark, lambda: registry.QUERIES[query](spark, SF_DIR).collect()
+    )
+    stages = {name.split(":", 1)[1] for name in jobs.values()
+              if name and name.startswith(f"{query}:")}
+    assert len(stages) >= 2, jobs
+    bad = {j: n for j, n in jobs.items() if not re.fullmatch(rf"{query}:\w+", n or "")}
+    assert not bad, f"barrier jobs without a {query}:<stage> name: {bad}"
+    # the spec verb is a stage barrier too
+    jobs = _barrier_jobs(
+        spark, lambda: registry.QUERIES["q_spec_select_mix"](spark, SF_DIR)
+    )
+    assert "q_spec_select_mix:materialize" in jobs.values(), jobs

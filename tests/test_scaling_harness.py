@@ -149,6 +149,43 @@ def test_bench_round_artifact_is_write_once(tmp_path, monkeypatch):
     assert bench._tag_artifact_path(d, "r99").endswith("r99.json")
 
 
+def _fake_mxbeans(pools_mb: dict[str, tuple[str, int]]):
+    """A stand-in for spark.sparkContext._jvm's ManagementFactory whose
+    memory pools report the given (type, peak MB) per pool name."""
+    from types import SimpleNamespace as NS
+
+    def pool(name, kind, mb):
+        return NS(getName=lambda: name, getType=lambda: NS(toString=lambda: kind),
+                  getPeakUsage=lambda: NS(getUsed=lambda: mb * 1024 * 1024),
+                  resetPeakUsage=lambda: None)
+
+    mf = NS(getGarbageCollectorMXBeans=lambda: [],
+            getMemoryPoolMXBeans=lambda: [pool(n, k, mb) for n, (k, mb) in pools_mb.items()])
+    jvm = NS(java=NS(lang=NS(management=NS(ManagementFactory=mf))))
+    return NS(sparkContext=NS(_jvm=jvm))
+
+
+def test_peak_heap_is_the_old_generation_peak_not_a_sum_of_pools():
+    """Eden, survivor and old generation peak at different moments, so
+    their sum overstates the heap (11.3 GB was recorded under an 8g heap);
+    the reported peak is the old generation's own, which fits the heap."""
+    import bench
+
+    g1 = _fake_mxbeans({
+        "G1 Eden Space": ("Heap memory", 5000),
+        "G1 Old Gen": ("Heap memory", 6000),
+        "G1 Survivor Space": ("Heap memory", 300),
+        "Metaspace": ("Non-heap memory", 200),
+    })
+    jvm = bench._JvmTelemetry(g1)
+    jvm.reset_peaks()
+    assert jvm.peak_heap_mb() == 6000
+    # a collector without an old-generation pool: the largest heap pool
+    one_pool = _fake_mxbeans({"ZHeap": ("Heap memory", 700),
+                              "CodeHeap": ("Non-heap memory", 900)})
+    assert bench._JvmTelemetry(one_pool).peak_heap_mb() == 700
+
+
 def test_bench_stdout_line_is_tail_proof():
     """The driver keeps only a 2,000-char stdout tail and parses the LAST
     line; a full-result line (tens of KB of per-sample diagnostics)

@@ -145,17 +145,16 @@ def _stable_ids(plan: str) -> str:
        localCheckpoint at NativeMethodAccessorImpl.java:0`) — the RDD id
        is a session counter and the callsite flips between JDK reflection
        frames and `<unknown>` across invocation paths; both collapse to
-       fixed tokens."""
+       fixed tokens. A checkpoint made by ``session.stage`` is named by its
+       stage label instead (`MapPartitionsRDD[6939] at
+       q_minhash_lsh_dedup:lsh_dupes`); the label is stable and kept."""
     plan = re.sub(
         r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}\.\d+",
         "<plan-eval-instant>",
         plan,
     )
-    plan = re.sub(
-        r"(\w*RDD)\[\d+\] at (\w+) at [^\s,]+",
-        r"\1[<id>] at \2 at <callsite>",
-        plan,
-    )
+    plan = re.sub(r"(\w*RDD)\[\d+\] at ", r"\1[<id>] at ", plan)
+    plan = re.sub(r"(RDD\[<id>\] at \w+) at [^\s,]+", r"\1 at <callsite>", plan)
 
     def renumber(pattern: str, fmt: str, text: str) -> str:
         mapping: dict[str, str] = {}

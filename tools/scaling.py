@@ -624,11 +624,12 @@ def operator_scaling_octave(sf_dir: str, k: int, names: list[str]) -> dict:
     left cross-OPERATOR interference inside the big octaves. Per-(op,
     octave) JVMs reading one shared parquet fixture make every cell a cold,
     independent job — which is also how a real cluster runs these."""
-    from data_rivers_spark.session import get_spark
+    from data_rivers_spark.session import get_spark, stop_spark
 
     spark = get_spark(app_name=f"scaling-fixture-{k}x")
     fixture = materialize_fixture(spark, sf_dir, k)
-    spark.stop()
+    # end the fixture's gateway JVM too: only the op's own JVM may run
+    stop_spark(spark)
     out: dict[str, dict] = {"times": {}, "peaks": {}, "telemetry": {}, "failed": {}}
     for name in names:
         try:

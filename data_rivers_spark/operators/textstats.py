@@ -1998,19 +1998,14 @@ def bpe_encode(
         .withColumn("symbols", F.split(F.col("word"), "")),
         "bpe_vocab",
     )
-    ckpt = vocab
-    pending = 0
-    for left, right in merges:
+    ckpt, pending = vocab, 0
+    for i, (left, right) in enumerate(merges, 1):
         vocab = bpe_apply_merge(vocab, left, right, "symbols")
         pending += 1
-        if pending >= checkpoint_every:
+        if pending >= checkpoint_every or i == len(merges):
             vocab = stage(vocab, "bpe_merge")
             _release_local_checkpoint(ckpt)
-            ckpt = vocab
-            pending = 0
-    if pending:
-        vocab = stage(vocab, "bpe_merge")
-        _release_local_checkpoint(ckpt)
+            ckpt, pending = vocab, 0
     toks = df.select(
         F.col(id_col),
         F.posexplode(words(F.col(text_col))).alias("__pos", "word"),

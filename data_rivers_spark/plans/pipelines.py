@@ -212,9 +212,10 @@ def c4_clean(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     checkpoint, ~half its 5.0 s wall), then again at full width for
     ``kept_text``. The barrier pins evaluation above the exchange, at full
     width, exactly once, and pays the chain once for every consumer that
-    would otherwise re-execute it through lineage (gopher's three feature
-    pipelines and their left-semi); the keep-filter is then a trivial
-    filter over the cached frame."""
+    would otherwise re-execute it through lineage (in
+    corpus_curation_pipeline, gopher's three feature pipelines and the
+    left-semi); the keep-filter is then a trivial filter over the cached
+    frame."""
     from data_rivers_spark.operators import textstats as TX
 
     c4 = TX.c4_quality_filter(docs, text_col, id_col)

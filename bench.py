@@ -147,10 +147,9 @@ HEADLINE = [
     # round 10: DSIR importance weighting (hashed n-gram LM ratio — one
     # featurize pass per side, a 4096-row broadcast join, doc-keyed sum)
     # and its Gumbel-top-k resample (TakeOrderedAndProject, no global
-    # sort); plus the pre-grouped signature-store incremental dedup (the
-    # production store shape — joins the inverted-index store instead of
-    # union+re-aggregating it, priced next to q_incremental_dedup's
-    # row-store plan)
+    # sort); plus the incremental dedup with its grouped signature store
+    # staged once (the production shape — a persisted store table), priced
+    # next to q_incremental_dedup, whose store stays lineage
     "q_dsir_weights",
     "q_dsir_resample",
     "q_incremental_dedup_grouped",

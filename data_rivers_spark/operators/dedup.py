@@ -284,22 +284,10 @@ def _expand_buckets(
     banded: DataFrame,
     id_col: str,
     bucket_cap: int | None,
-    min_id_b: int | None = None,
 ) -> DataFrame:
     """Distinct (id_a, id_b) candidate pairs from (id, band_idx, band_hash)
     rows via bucket-local combinatoric expansion (see minhash_lsh_candidates
-    for the cap semantics).
-
-    ``min_id_b`` restricts the GREATER side of each pair: only pairs with
-    id_b >= min_id_b are emitted. The incremental path uses this to skip
-    master-vs-master pairs entirely — a bucket holding only master ids emits
-    nothing, inside the same codegen expression. With ``min_id_b`` set, the
-    cap also tests the BATCH-side occupancy rather than total occupancy: a
-    boilerplate bucket full of corpus docs but holding few batch docs still
-    gets full batch-vs-all coverage (cost O(bucket × batch_members), bounded
-    by bucket_cap × bucket) instead of collapsing to a star on the bucket's
-    min id — which is almost always a master, so star-only would silently
-    admit a batch doc that duplicates a non-hub corpus doc."""
+    for the cap semantics)."""
     # bucket-group instead of self-join: a self-join would evaluate the
     # signature pipeline twice; grouping shuffles each (id, band) row once and
     # expands pairs inside the (small) bucket with array combinatorics.
@@ -323,7 +311,7 @@ def _expand_buckets(
         .groupBy("band_idx", "band_hash")
         .agg(F.collect_list(F.col(id_col)).alias("__ids"))
     )
-    return _expand_grouped_buckets(grouped, bucket_cap, min_id_b)
+    return _expand_grouped_buckets(grouped, bucket_cap)
 
 
 def _expand_grouped_buckets(
@@ -333,9 +321,20 @@ def _expand_grouped_buckets(
 ) -> DataFrame:
     """Pair expansion over buckets ALREADY in inverted-index form
     (band_idx, band_hash, __ids array) — the shared back half of
-    _expand_buckets, also fed directly by incremental_lsh_dedup's
-    pre-grouped signature store path (which assembles __ids as
-    store-members ++ batch-members without re-aggregating the store)."""
+    _expand_buckets, also fed directly by incremental_lsh_dedup (which
+    assembles __ids as store-members ++ batch-members without
+    re-aggregating the store).
+
+    ``min_id_b`` restricts the GREATER side of each pair: only pairs with
+    id_b >= min_id_b are emitted. The incremental path uses this to skip
+    master-vs-master pairs entirely — a bucket holding only master ids emits
+    nothing, inside the same codegen expression. With ``min_id_b`` set, the
+    cap also tests the BATCH-side occupancy rather than total occupancy: a
+    boilerplate bucket full of corpus docs but holding few batch docs still
+    gets full batch-vs-all coverage (cost O(bucket × batch_members), bounded
+    by bucket_cap × bucket) instead of collapsing to a star on the bucket's
+    min id — which is almost always a master, so star-only would silently
+    admit a batch doc that duplicates a non-hub corpus doc."""
     ids = F.col("__ids")
     # the inner (greater/batch) side is prefiltered ONCE per bucket into its
     # own column — filtering inside the per-a lambda would rescan all K ids
@@ -626,7 +625,12 @@ def _staged_signatures(
     was measured SLOWER on the incremental twin: within one job the
     verify-side stages raced the banded stage on the uncached sets
     partitions and recomputed the tokenize concurrently. This shape keeps
-    one barrier and zero recompute."""
+    one eager barrier and zero recompute. The lazy sets barrier is still
+    not job-free: under AQE, a lazy checkpoint plans its RDD through
+    AdaptiveSparkPlanExec, which runs the shuffle stage below the sets at
+    call time. Building q_minhash_lsh_dedup at sf0.001 runs, in
+    order, one ``q_minhash_lsh_dedup:shingle_sets`` job, then the two
+    ``lsh_banded`` jobs."""
     sets = stage(sets, "shingle_sets", eager=False)
     banded = stage(_banded_from_sets(sets, id_col, num_hashes, bands), "lsh_banded")
     return sets, banded
@@ -634,19 +638,20 @@ def _staged_signatures(
 
 def group_banded_store(banded: DataFrame, id_col: str) -> DataFrame:
     """Inverted-index form of a banded signature store: one row per
-    (band_idx, band_hash) bucket holding the member-id array — the shape a
-    production store should PERSIST (and incrementally maintain by
-    regrouping store ++ new-survivor rows at append time, once per batch).
+    (band_idx, band_hash) bucket holding the member-id array — the store
+    form ``incremental_lsh_dedup`` reads, and the shape a production store
+    should PERSIST (maintained by regrouping store ++ new-survivor rows at
+    append time, once per batch).
 
-    Why: incremental_lsh_dedup's row-form store path unions the corpus-sized
-    store with the batch and re-aggregates the union into buckets on EVERY
-    run — the stage decomposition at the 1024x scaling octave measured that
-    expansion at 76.2 s of a 166 s cell (46%), almost all of it shuffling
-    and collect_list-ing the same master rows batch after batch. Grouping
-    once at store-write time moves that cost out of the daily run: the
-    batch run then shuffles only batch-sized frames and JOINS the grouped
-    store by bucket key (on a real cluster, a store table bucketed by
-    (band_idx, band_hash) makes that join shuffle-free on the store side)."""
+    Why: a row-form store has to be unioned with the batch and
+    re-aggregated into buckets on EVERY run — the stage decomposition at
+    the 1024x scaling octave measured that expansion at 76.2 s of a 166 s
+    cell (46%), almost all of it shuffling and collect_list-ing the same
+    master rows batch after batch. Grouping once at store-write time moves
+    that cost out of the daily run: the batch run then shuffles only
+    batch-sized frames and JOINS the grouped store by bucket key (on a real
+    cluster, a store table bucketed by (band_idx, band_hash) makes that
+    join shuffle-free on the store side)."""
     return banded.groupBy("band_idx", "band_hash").agg(
         F.collect_list(F.col(id_col)).alias("__ids")
     )
@@ -655,7 +660,7 @@ def group_banded_store(banded: DataFrame, id_col: str) -> DataFrame:
 def incremental_lsh_dedup(
     batch: DataFrame,
     master_docs: DataFrame | None,
-    master_banded: DataFrame | None,
+    master_store: DataFrame | None,
     text_col: str,
     id_col: str,
     threshold: float = 0.8,
@@ -664,33 +669,27 @@ def incremental_lsh_dedup(
     shingle_n: int = 3,
     bucket_cap: int = 1000,
     batch_min_id: int | None = None,
-    run_log=None,
-    run_log_source: str = "lsh_dedup",
     keep_dropped_signatures: bool = False,
-    master_banded_grouped: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Dedup a new batch against BOTH itself and an already-deduped corpus
     without re-mining the corpus — the shape a 100 TB pipeline actually runs
-    daily. The corpus contributes only its persisted banded signature rows
-    (id, band_idx, band_hash — what ``minhash_lsh_verified_pairs`` builds
-    internally); its text is touched ONLY for the handful of docs that share
-    a bucket with a batch doc, via a semi-join.
+    daily. The corpus contributes only its persisted signature store; its
+    text is touched ONLY for the handful of docs that share a bucket with a
+    batch doc, via a semi-join.
 
-    ``master_banded_grouped`` (preferred at scale): the store in
-    ``group_banded_store``'s inverted-index form. The row-form
-    ``master_banded`` path unions the corpus-sized store into the batch's
-    bucket aggregation on every run — the 1024x stage decomposition
-    measured that re-aggregation at 46% of the cell. With the grouped
-    store, the batch groups its own (batch-sized) buckets and LEFT-JOINS
-    the store by (band_idx, band_hash); per-bucket ids are store-members ++
-    batch-members, expansion identical. Store-only buckets never enter the
-    join (they cannot emit pairs: every pair needs a batch-side greater
-    id), which the row path paid to discover per run. Pass exactly one of
-    master_banded / master_banded_grouped.
+    ``master_store`` is the corpus's banded signatures in
+    ``group_banded_store``'s inverted-index form (band_idx, band_hash,
+    __ids), or None for the first batch. The batch groups its own
+    (batch-sized) buckets and LEFT-JOINS the store by (band_idx,
+    band_hash); per-bucket ids are store-members ++ batch-members. Store-only
+    buckets never enter the join (they cannot emit pairs: every pair needs a
+    batch-side greater id). Without a store the batch is the whole corpus,
+    and its candidates are minhash_lsh_candidates' own.
 
     Returns ``(survivors, survivor_banded)``: the batch rows that are not
     near-dups of the corpus or of a lower-id batch doc, plus their banded
-    signature rows to append to the store for the next batch.
+    signature rows (id, band_idx, band_hash) to append to the store for the
+    next batch.
 
     Contract: batch ids are strictly greater than every master id (natural
     for monotonically-assigned doc ids). The greater-side cutoff then prunes
@@ -698,13 +697,10 @@ def incremental_lsh_dedup(
     only corpus docs emits zero candidates, so per-batch cost scales with
     the batch, not the corpus.
 
-    ``batch_min_id`` resolution order: the explicit argument; else the
-    ``run_log`` watermark (a ``sources.watermark.RunLog`` — the previous run
-    records ``max_id + 1`` under ``run_log_source``, so no job runs at plan
-    time); else a driver ``min()`` over the batch (one extra tiny job —
-    fine interactively, avoidable in production via either hook). After a
-    successful append the caller records the next watermark:
-    ``run_log.record_successful_run(source, str(next_min_id))``.
+    ``batch_min_id``: the explicit argument (a production caller keeps it
+    as a watermark, e.g. ``sources.watermark.RunLog``, so no job runs at
+    plan time); else a driver ``min()`` over the batch (one extra tiny
+    job).
 
     ``keep_dropped_signatures=False`` (default) compares future batches
     against the CANONICAL corpus only: a batch doc that duplicates a doc the
@@ -728,27 +724,29 @@ def incremental_lsh_dedup(
     anyway. ``bands=None`` → lsh_plan-derived banding (see
     minhash_lsh_dedup); an incremental store's banding must of course stay
     FIXED across runs — derive once, persist the config."""
+    if master_store is not None and "__ids" not in master_store.columns:
+        raise ValueError(
+            "master_store must be in group_banded_store's (band_idx, "
+            "band_hash, __ids) form; group a row-form signature table with "
+            "group_banded_store(store, id_col) first"
+        )
     bands = _resolve_bands(threshold, num_hashes, bands)
-    if batch_min_id is None and run_log is not None:
-        stored = run_log.last_successful_run(run_log_source)
-        if stored is not None:
-            batch_min_id = int(stored)
     if batch_min_id is None:
         row = batch.agg(F.min(F.col(id_col))).first()
         batch_min_id = row[0] if row and row[0] is not None else 0
-    if master_banded is not None and master_banded_grouped is not None:
-        raise ValueError(
-            "pass exactly one of master_banded / master_banded_grouped"
-        )
     sets_b, banded_b = _staged_signatures(
         shingle_sets(batch, text_col, id_col, shingle_n), id_col, num_hashes, bands
     )
-    if master_banded_grouped is not None:
+    if master_store is None:
+        # every id is a batch id: the cutoff would keep all of them, so the
+        # width-pinned batch expansion applies as it stands
+        cands = _expand_buckets(banded_b, id_col, bucket_cap)
+    else:
         gb = banded_b.groupBy("band_idx", "band_hash").agg(
             F.collect_list(F.col(id_col)).alias("__bids")
         )
         merged = gb.join(
-            master_banded_grouped.withColumnRenamed("__ids", "__mids"),
+            master_store.withColumnRenamed("__ids", "__mids"),
             ["band_idx", "band_hash"],
             "left",
         ).select(
@@ -759,15 +757,6 @@ def incremental_lsh_dedup(
             .alias("__ids"),
         )
         cands = _expand_grouped_buckets(merged, bucket_cap, min_id_b=batch_min_id)
-    else:
-        all_banded = (
-            banded_b
-            if master_banded is None
-            else banded_b.unionByName(master_banded)
-        )
-        cands = _expand_buckets(
-            all_banded, id_col, bucket_cap, min_id_b=batch_min_id
-        )
     # tokenize only the corpus docs that actually share a bucket with the
     # batch (candidate id_a below the cutoff) — a semi-join-sized read
     sets = sets_b

@@ -1237,31 +1237,28 @@ _INCR_DEDUP_ORACLE = """
     """
 
 
-@query("q_incremental_dedup", oracle=_INCR_DEDUP_ORACLE)
-def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental LSH dedup against a persisted signature store: batch 1
+def _incremental_dedup_two_batches(
+    spark: SparkSession, sf_dir: str, make_store
+) -> DataFrame:
+    """The two-batch fixture both incremental dedup queries run: batch 1
     (doc_id < 250) bootstraps the canonical corpus; batch 2 (word-dropped
     copies of every 7th batch-1 doc + the genuinely new doc_id ≥ 250 docs,
-    ids shifted +100000) dedups against the corpus's SIGNATURES only —
-    corpus text is re-read just for bucket-hit docs via a semi-join.
+    ids shifted +100000) dedups against the corpus's signature store,
+    ``make_store(banded1)``. Returns batch 2's surviving ids.
 
-    Oracle = the same two-phase semantics in exact all-pairs SQL: greedy
-    min-id dedup of batch 1, then batch-2 docs dropped iff they pair ≥ 0.7
-    with a canonical corpus doc or a lower-id batch-2 doc. Banding is 16
-    bands of 2 rows, making per-pair miss ≤ 2.1e-5 at any J ≥ 0.7 a design
-    bound rather than a fixture measurement (see q_minhash_lsh_dedup)."""
+    batch_min_id is passed explicitly (r13): the bound only needs to sit
+    above every master id (< 250) and at-or-below every batch id (0 /
+    >= 100000 by construction), so the fixture constants are exact and
+    each call skips its driver-blocking min() probe job — the documented
+    production hook exercised under the gate."""
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t["documents"].select("doc_id", "text")
     b1 = docs.filter(F.col("doc_id") < 250)
-    # batch_min_id passed explicitly (r13): the bound only needs to sit
-    # above every master id (< 250) and at-or-below every batch id (0 /
-    # >= 100000 by construction), so the fixture constants are exact and
-    # each call skips its driver-blocking min() probe job — the documented
-    # production hook (watermark/explicit) exercised under the gate.
     surv1, banded1 = D.incremental_lsh_dedup(
         b1, None, None, "text", "doc_id", threshold=0.7, num_hashes=32,
         bands=None, batch_min_id=0,
     )
+    store = make_store(banded1)
     copies = (
         b1.filter(F.col("doc_id") % 7 == 0)
         .withColumn("doc_id", F.col("doc_id") + 100000)
@@ -1272,10 +1269,28 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     batch2 = copies.unionByName(novel)
     surv2, _ = D.incremental_lsh_dedup(
-        batch2, surv1, banded1, "text", "doc_id", threshold=0.7,
+        batch2, surv1, store, "text", "doc_id", threshold=0.7,
         num_hashes=32, bands=None, batch_min_id=100000,
     )
     return surv2.select("doc_id")
+
+
+@query("q_incremental_dedup", oracle=_INCR_DEDUP_ORACLE)
+def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental LSH dedup against a persisted signature store
+    (_incremental_dedup_two_batches): batch 2 dedups against the corpus's
+    SIGNATURES only — corpus text is re-read just for bucket-hit docs via a
+    semi-join. The grouped store stays lineage here, so its aggregation
+    plans into batch 2's bucket join.
+
+    Oracle = the same two-phase semantics in exact all-pairs SQL: greedy
+    min-id dedup of batch 1, then batch-2 docs dropped iff they pair ≥ 0.7
+    with a canonical corpus doc or a lower-id batch-2 doc. Banding is 16
+    bands of 2 rows, making per-pair miss ≤ 2.1e-5 at any J ≥ 0.7 a design
+    bound rather than a fixture measurement (see q_minhash_lsh_dedup)."""
+    return _incremental_dedup_two_batches(
+        spark, sf_dir, lambda banded: D.group_banded_store(banded, "doc_id")
+    )
 
 
 def _synth_lines(docs: DataFrame) -> DataFrame:
@@ -3650,36 +3665,15 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_incremental_dedup_grouped", oracle=_INCR_DEDUP_ORACLE)
 def q_incremental_dedup_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_incremental_dedup replayed through the PRE-GROUPED signature store
-    path (group_banded_store's inverted-index form — the production store
-    shape since round 10): the batch groups only its own buckets and joins
-    the store by (band_idx, band_hash) instead of union+re-aggregating the
-    corpus-sized row store each run. Same oracle: the per-bucket id
-    multisets are identical by construction, so the two paths must produce
-    byte-identical survivor sets — this query pins that in the driver gate."""
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = t["documents"].select("doc_id", "text")
-    b1 = docs.filter(F.col("doc_id") < 250)
-    surv1, banded1 = D.incremental_lsh_dedup(
-        b1, None, None, "text", "doc_id", threshold=0.7, num_hashes=32,
-        bands=None, batch_min_id=0,  # fixture bound, see q_incremental_dedup
+    """q_incremental_dedup with the signature store staged once
+    (``lsh_store``) before batch 2 reads it — the production shape, where
+    the grouped store is a persisted table rather than lineage. Same
+    fixture and oracle: staging changes where the store is computed, not
+    the per-bucket id multisets, so the survivor sets must be identical."""
+    return _incremental_dedup_two_batches(
+        spark, sf_dir,
+        lambda banded: stage(D.group_banded_store(banded, "doc_id"), "lsh_store"),
     )
-    store = stage(D.group_banded_store(banded1, "doc_id"), "lsh_store")
-    copies = (
-        b1.filter(F.col("doc_id") % 7 == 0)
-        .withColumn("doc_id", F.col("doc_id") + 100000)
-        .withColumn("text", F.regexp_replace(F.col("text"), r"^\S+\s*", ""))
-    )
-    novel = docs.filter(F.col("doc_id") >= 250).withColumn(
-        "doc_id", F.col("doc_id") + 100000
-    )
-    batch2 = copies.unionByName(novel)
-    surv2, _ = D.incremental_lsh_dedup(
-        batch2, surv1, None, "text", "doc_id", threshold=0.7,
-        num_hashes=32, bands=None, master_banded_grouped=store,
-        batch_min_id=100000,  # fixture bound, see q_incremental_dedup
-    )
-    return surv2.select("doc_id")
 
 
 @query(

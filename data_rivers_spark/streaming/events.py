@@ -254,7 +254,9 @@ def stream_dedup_into_corpus(
     runs ``incremental_lsh_dedup`` against the PERSISTED signature store,
     appends the surviving docs to the corpus table and their banded
     signature rows to the store — the streaming twin of the batch
-    incremental dedup.
+    incremental dedup. The store table is append-only row form (id,
+    band_idx, band_hash); each batch groups it with ``group_banded_store``
+    before the call.
 
     Contract carried over from the batch operator: doc ids must be
     monotonically increasing across batches (the id cutoff is what prunes
@@ -315,7 +317,7 @@ def make_dedup_batch_fn(
     Exposed separately so the replay/idempotency behavior is directly
     testable: calling the returned fn twice with the same batch_id must be
     a no-op the second time (the committed-ids guard)."""
-    from data_rivers_spark.operators.dedup import incremental_lsh_dedup
+    from data_rivers_spark.operators import dedup as D
 
     if keep_dropped_signatures and history_table is None:
         raise ValueError(
@@ -340,13 +342,13 @@ def make_dedup_batch_fn(
             # docs too — that is the history table, not the corpus
             src = history_table if keep_dropped_signatures else corpus_table
             master_docs = catalog.read(src)
-            master_banded = catalog.read(signature_table)
+            master_store = D.group_banded_store(catalog.read(signature_table), id_col)
         else:
-            master_docs = master_banded = None
-        survivors, banded = incremental_lsh_dedup(
+            master_docs = master_store = None
+        survivors, banded = D.incremental_lsh_dedup(
             batch_df,
             master_docs,
-            master_banded,
+            master_store,
             text_col,
             id_col,
             threshold=threshold,

@@ -503,7 +503,8 @@ def test_incremental_lsh_dedup_two_batches(spark, sf_dir):
     batch2 = corpus_dups.unionByName(novel).unionByName(internal_dup)
 
     surv2, banded2 = D.incremental_lsh_dedup(
-        batch2, docs, banded1, "text", "doc_id", threshold=0.7
+        batch2, docs, D.group_banded_store(banded1, "doc_id"), "text", "doc_id",
+        threshold=0.7,
     )
     got = {r.doc_id for r in surv2.collect()}
     assert not ({r.doc_id for r in corpus_dups.collect()} & got)  # corpus dups dropped
@@ -514,11 +515,13 @@ def test_incremental_lsh_dedup_two_batches(spark, sf_dir):
 
 
 def test_incremental_lsh_grouped_store_parity(spark, sf_dir):
-    """The pre-grouped (inverted-index) store path must reproduce the
-    row-form store path EXACTLY: same survivors, same surviving signature
-    rows — the per-bucket id multiset is identical by construction
-    (store-members ++ batch-members), so expansion, verify, and the
-    anti-joins see the same inputs."""
+    """Dedup of batch 2 against the grouped (inverted-index) store must
+    reproduce batch dedup of master ∪ batch 2 on batch 2's rows: same
+    survivors under the same banding, and surviving signature rows equal to
+    the survivors' own banding. A row-form store is rejected by name before
+    any Spark job runs."""
+    import pytest
+
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
     surv1, banded1 = D.incremental_lsh_dedup(
         docs, None, None, "text", "doc_id", threshold=0.7
@@ -534,29 +537,30 @@ def test_incremental_lsh_grouped_store_parity(spark, sf_dir):
     ).withColumn("doc_id", F.col("doc_id") + 10_000)
     batch2 = corpus_dups.unionByName(novel)
 
-    row_surv, row_banded = D.incremental_lsh_dedup(
-        batch2, master, banded1, "text", "doc_id", threshold=0.7
-    )
     store = D.group_banded_store(banded1, "doc_id")
     grp_surv, grp_banded = D.incremental_lsh_dedup(
-        batch2, master, None, "text", "doc_id", threshold=0.7,
-        master_banded_grouped=store,
+        batch2, master, store, "text", "doc_id", threshold=0.7
     )
-    assert {r.doc_id for r in row_surv.collect()} == {
-        r.doc_id for r in grp_surv.collect()
-    }
+    whole = D.minhash_lsh_dedup(master.unionByName(batch2), "text", "doc_id", 0.7)
+    got = {r.doc_id for r in grp_surv.collect()}
+    assert got == {r.doc_id for r in whole.collect() if r.doc_id >= 10_000}
     key = lambda r: (r.doc_id, r.band_idx, r.band_hash)  # noqa: E731
-    assert sorted(map(key, row_banded.collect())) == sorted(
-        map(key, grp_banded.collect())
+    expected = D._banded_from_sets(
+        D.shingle_sets(grp_surv, "text", "doc_id"), "doc_id", 32, 8
     )
-    # passing both store forms is a caller error
-    import pytest
-
-    with pytest.raises(ValueError, match="exactly one"):
-        D.incremental_lsh_dedup(
-            batch2, master, banded1, "text", "doc_id",
-            master_banded_grouped=store,
-        )
+    assert sorted(map(key, grp_banded.collect())) == sorted(
+        map(key, expected.collect())
+    )
+    # a row-form store is a caller error, caught from the schema alone
+    sc = spark.sparkContext
+    group = "incremental_lsh_row_store"
+    sc.setJobGroup(group, "row-form store")
+    try:
+        with pytest.raises(ValueError, match="group_banded_store"):
+            D.incremental_lsh_dedup(batch2, master, banded1, "text", "doc_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_incremental_lsh_no_master_master_candidates(spark, sf_dir):
@@ -570,8 +574,9 @@ def test_incremental_lsh_no_master_master_candidates(spark, sf_dir):
     )
     sets_b = D.shingle_sets(batch, "text", "doc_id")
     banded_b = D._banded_from_sets(sets_b, "doc_id", 32, 8)
-    cands = D._expand_buckets(
-        banded_b.unionByName(banded), "doc_id", 1000, min_id_b=10_000
+    cands = D._expand_grouped_buckets(
+        D.group_banded_store(banded_b.unionByName(banded), "doc_id"), 1000,
+        min_id_b=10_000,
     )
     rows = cands.collect()
     assert all(r.id_b >= 10_000 for r in rows)
@@ -597,8 +602,9 @@ def test_incremental_lsh_capped_bucket_nonhub_match(spark):
     banded_b = D._banded_from_sets(
         D.shingle_sets(batch, "text", "doc_id"), "doc_id", 32, 8
     )
-    cands = D._expand_buckets(
-        banded_b.unionByName(banded_m), "doc_id", bucket_cap=3, min_id_b=100
+    cands = D._expand_grouped_buckets(
+        D.group_banded_store(banded_b.unionByName(banded_m), "doc_id"),
+        bucket_cap=3, min_id_b=100,
     )
     got = {(r.id_a, r.id_b) for r in cands.collect()}
     assert got == {(i, 100) for i in range(6)}
@@ -632,14 +638,14 @@ def test_incremental_lsh_dropped_signature_retention(spark):
         assert {r.doc_id for r in surv1.collect()} == {1}
         # full doc history as master_docs so dropped-id bucket hits verify
         surv2, _ = D.incremental_lsh_dedup(
-            batch2, b1, banded1, "text", "doc_id", threshold=0.8,
-            batch_min_id=10,
+            batch2, b1, D.group_banded_store(banded1, "doc_id"), "text",
+            "doc_id", threshold=0.8, batch_min_id=10,
         )
         assert {r.doc_id for r in surv2.collect()} == admitted_expected
 
 
 def test_incremental_lsh_watermark_min_id(spark, tmp_path):
-    """batch_min_id resolves from the RunLog watermark — no driver min() job
+    """batch_min_id read from the RunLog watermark — no driver min() job
     — and the cutoff prunes master-vs-master pairs identically."""
     from data_rivers_spark.sources.watermark import RunLog
 
@@ -652,7 +658,9 @@ def test_incremental_lsh_watermark_min_id(spark, tmp_path):
     _, banded_m = D.incremental_lsh_dedup(master, None, None, "text", "doc_id")
     batch = spark.createDataFrame([(100, base)], "doc_id long, text string")
     surv, _ = D.incremental_lsh_dedup(
-        batch, master, banded_m, "text", "doc_id", threshold=0.7, run_log=log
+        batch, master, D.group_banded_store(banded_m, "doc_id"), "text",
+        "doc_id", threshold=0.7,
+        batch_min_id=int(log.last_successful_run("lsh_dedup")),
     )
     assert surv.count() == 0  # exact dup of master caught via watermark cutoff
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entry_mod
 
 
@@ -68,3 +70,45 @@ def test_oracle_types_are_portable(sf_dir):
             if any(m in str(ty) for m in exotic_markers):
                 offenders.append(f"{name}.{c}: {ty}")
     assert not offenders, offenders
+
+
+@pytest.fixture(scope="module")
+def oracle_hash(sf_dir):
+    """(sorted columns, value hash) of a query's DuckDB oracle at ``sf_dir``,
+    run once per distinct oracle SQL for the module (queries may share one)."""
+    import os
+
+    import duckdb
+
+    from data_rivers_spark.plans import registry
+    from tools.check_oracle import TABLES, value_hash
+
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    memo: dict[str, tuple[list[str], str]] = {}
+
+    def get(name: str) -> tuple[list[str], str]:
+        sql = registry.ORACLES[name]
+        if sql not in memo:
+            res = con.execute(sql)
+            cols = [d[0] for d in res.description]
+            memo[sql] = (sorted(cols), value_hash(cols, res.fetchall()))
+        return memo[sql]
+
+    return get
+
+
+@pytest.mark.parametrize(
+    "name", ["q_incremental_dedup", "q_incremental_dedup_grouped"]
+)
+def test_query_matches_oracle_hash(spark, sf_dir, oracle_hash, name):
+    """A query's collected rows hash-equal its DuckDB oracle (the
+    tools/check_oracle.py comparison, order-insensitive)."""
+    from tools.check_oracle import value_hash
+
+    df = entry_mod.queries()[name](spark, sf_dir)
+    rows = [tuple(r) for r in df.collect()]
+    assert (sorted(df.columns), value_hash(df.columns, rows)) == oracle_hash(name)

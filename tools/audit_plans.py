@@ -67,7 +67,7 @@ EXPLAINED = {
     "q_groupwise_max": "max-per-group + join-back",
     "q_id_fallback_join": "primary + fallback join attempts (by design)",
     "q_increment_counts": "existing counts + delta fixture",
-    "q_incremental_dedup": "batch + master fixture from one table",
+    "q_incremental_dedup": "batch + master fixture from one table (the grouped signature store is lineage over checkpointed banded rows)",
     "q_incremental_merge": "events as batch and master fixture",
     "q_insert_new_records": "target + incoming fixture",
     "q_ivf_topk": "query rows + corpus rows (+ planted copies)",
@@ -110,7 +110,7 @@ EXPLAINED = {
     "q_dsir_resample": "same 4-scan shape as q_dsir_weights (resample is TakeOrderedAndProject on top, adds no scan)",
     "q_spec_curation": "perplexity_buckets dispatched through run_spec: identical 3-scan shape to q_perplexity_buckets (documented 2-tokenize + language join-back)",
     "q_cluster_safe_split": "planted-copy union fixture (docs + prefix-clipped twins from one table)",
-    "q_incremental_dedup_grouped": "batch + novel-docs fixture from one table (same fixture class as q_incremental_dedup; the signature STORE side is checkpointed and scan-free)",
+    "q_incremental_dedup_grouped": "batch + novel-docs fixture from one table (q_incremental_dedup's fixture, _incremental_dedup_two_batches; the signature STORE side is staged and scan-free)",
     "q_sq8_topk": "query rows + corpus rows from one table (same shape as q_cosine_topk)",
     "q_unimax_sample": "allocation aggregate + admission join pass (same class as q_domain_mixture_sample: rates derived from the corpus itself)",
     # round-11 classifier family:

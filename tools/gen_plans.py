@@ -96,7 +96,8 @@ Notes on specific plans:
   for the bucket counts.
 - **q_incremental_dedup** — the production dedup shape: batch-sized
   checkpointed frames (`Scan ExistingRDD`), the corpus contributing ONLY
-  signature rows, and the text semi-join bounded by bucket hits.
+  its grouped signature store (one row per band bucket, LEFT-joined to the
+  batch's own buckets), and the text semi-join bounded by bucket hits.
 - **q_char_lsh_dedup** — same banded-LSH plan as the word path but over
   character 7-gram explode; no tokenizer, so the Generate node feeds from
   a substring sequence, and the rest of the pipeline is shared code.

@@ -280,8 +280,8 @@ def _prep_incremental(frame):
     store, master text touched only via the bucket-hit semi-join.
 
     The store is prepared in group_banded_store's inverted-index form — the
-    production store shape, grouped ONCE at store-write time, not
-    re-aggregated per batch."""
+    one store form incremental_lsh_dedup reads, grouped ONCE at store-write
+    time, not re-aggregated per batch."""
     from data_rivers_spark.operators import dedup as D
 
     mx = frame.agg(F.max("doc_id")).first()[0]
@@ -399,10 +399,9 @@ def _op_fn(name: str):
         "incremental_lsh_dedup": (
             _prep_incremental,
             lambda ctx: D.incremental_lsh_dedup(
-                ctx["batch"], ctx["master"], None, "text", "doc_id",
+                ctx["batch"], ctx["master"], ctx["mstore"], "text", "doc_id",
                 threshold=0.7, num_hashes=32, bands=16,
                 batch_min_id=ctx["mid"] + 1,
-                master_banded_grouped=ctx["mstore"],
             )[0],
         ),
     }[name]
